@@ -73,7 +73,7 @@ object LatencyProbe {
         .filter(_._2.nonEmpty)
       val nAll = view.postings.filter(org.apache.spark.sql.functions.col("term_id")
         .isin(live.flatMap(_._2.map(_.termId)).distinct: _*)).count()
-      val nSurv = searcher.batchSurvivorBlocks(spark, live, 10, 0L)
+      val nSurv = searcher.survivorBlocks(spark, live, 10)
         .map(_.count()).getOrElse(nAll)
       val off = (1 to 3).map(_ =>
         t(searcher.searchBatch(spark, bq, 10, Bm25, Long.MaxValue).count())).min

@@ -33,6 +33,55 @@ class Searcher(index: IndexView) extends Serializable {
 
   import index.cfg
 
+  // BM25 parameters and the view's mean document length, shared by every
+  // scoring and bound expression below
+  private val k1 = cfg.k1
+  private val b = cfg.b
+  private val avgdl = if (index.meta.avgdl > 0) index.meta.avgdl else 1.0
+
+  /** The BM25 per-posting term w·(k1+1)·tf / (tf + k1·(1−b+b·dl/avgdl)) —
+    * the one saturation expression every scorer, block bound and θ score
+    * builds. `w` multiplies the numerator BEFORE the divide (None: the bare
+    * saturation), which fixes each caller's double rounding: the serving
+    * checks compare paths with exact `==`. */
+  private def bm25(tf: Column, dl: Column, w: Option[Column] = None): Column = {
+    val num = tf * (k1 + 1)
+    w.fold(num)(_ * num) / (tf + lit(k1) * (lit(1 - b) + lit(b / avgdl) * dl))
+  }
+
+  /** Joins the doc_stats columns `cols` onto `df` by doc_id. The merge hint
+    * keeps the pinned stats side (doc_id-partitioned and sorted like the
+    * score aggregation's output) from moving: no exchange, no sort. */
+  private def withDocStats(df: DataFrame, cols: String*): DataFrame =
+    df.join(index.docStats.select("doc_id", cols: _*).hint("merge"), "doc_id")
+
+  private def requireNorms(scorer: Scorer): Unit =
+    require(scorer != TfIdfCosine || cfg.cosineNorms,
+      "index was built with cosineNorms=false (BM25-only maintenance mode); " +
+        "tf-idf cosine scoring needs a norms rebuild")
+
+  /** Block filter: [first_doc_id, last_doc_id] overlaps one of `intervals`.
+    * The intervals are sorted and merged once on the driver, so the
+    * per-block test is a binary search for the last start ≤ last. */
+  private def overlapsAny(intervals: Array[(Long, Long)]): Column = {
+    val merged = intervals.sorted.foldLeft(List.empty[(Long, Long)]) {
+      case ((s, e) :: acc, (f, l)) if f <= e => (s, math.max(e, l)) :: acc
+      case (acc, iv) => iv :: acc
+    }.reverse.toArray
+    val starts = merged.map(_._1)
+    val ends = merged.map(_._2) // ascending too (disjoint, start-sorted)
+    val overlaps = udf((first: Long, last: Long) => {
+      var lo = 0
+      var hi = starts.length // lo → first interval with start > last
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (starts(m) <= last) lo = m + 1 else hi = m
+      }
+      lo > 0 && ends(lo - 1) >= first
+    })
+    overlaps(col("first_doc_id"), col("last_doc_id"))
+  }
+
   /** Query term weights after analysis + OOV drop. */
   private[graft] case class QueryTerm(
       termId: Long, qtf: Int, df: Long, idf: Double, bm25Idf: Double,
@@ -119,32 +168,29 @@ class Searcher(index: IndexView) extends Serializable {
    */
   private[graft] def topBlockIntervals(
       termIds: Seq[Long], k: Int): Map[Long, Array[(Long, Long)]] = {
-    val cache = index.thetaIntervalCache
-    val missing = termIds.distinct.filterNot(t => cache.containsKey((t, k)))
-    if (missing.nonEmpty) {
-      val bk1 = cfg.k1; val bb = cfg.b
-      val bAvgdl = if (index.meta.avgdl > 0) index.meta.avgdl else 1.0
-      val satBound = (col("max_tf") * (bk1 + 1)) /
-        (col("max_tf") + lit(bk1) * (lit(1 - bb) + lit(bb / bAvgdl) * col("min_dl")))
-      val got: Map[Long, Array[(Long, Long)]] = index.postings.toDF()
-        .filter(col("term_id").isin(missing: _*))
-        .withColumn("bound", satBound)
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("term_id")
-            .orderBy(col("bound").desc, col("first_doc_id").asc)))
-        .filter(col("rn") <= k)
-        .select("term_id", "first_doc_id", "last_doc_id")
-        .collect()
-        .groupBy(_.getLong(0))
-        .map { case (tid, rs) =>
-          tid -> rs.map(r => (r.getLong(1), r.getLong(2))).sorted
-        }
-      missing.foreach { t =>
-        index.thetaCachePutBounded((t, k), got.getOrElse(t, Array.empty[(Long, Long)]))
+    // ONE read per term, and the result is built from what was read plus
+    // what was computed — never re-read after the puts: a put at the
+    // cache's cap (or a concurrent caller's) clears the whole cache
+    val cached = termIds.distinct.map(t => t -> index.thetaIntervalCache.get((t, k)))
+    val missing = cached.collect { case (t, null) => t }
+    if (missing.isEmpty) return cached.toMap
+    val got: Map[Long, Array[(Long, Long)]] = index.postings.toDF()
+      .filter(col("term_id").isin(missing: _*))
+      .withColumn("bound", bm25(col("max_tf"), col("min_dl")))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy("term_id")
+          .orderBy(col("bound").desc, col("first_doc_id").asc)))
+      .filter(col("rn") <= k)
+      .select("term_id", "first_doc_id", "last_doc_id")
+      .collect()
+      .groupBy(_.getLong(0))
+      .map { case (tid, rs) =>
+        tid -> rs.map(r => (r.getLong(1), r.getLong(2))).sorted
       }
-    }
-    termIds.distinct.map(t => t -> cache.get((t, k))).toMap
+    val fresh = missing.map(t => t -> got.getOrElse(t, Array.empty[(Long, Long)]))
+    fresh.foreach { case (t, v) => index.thetaCachePutBounded((t, k), v) }
+    cached.filter(_._2 != null).toMap ++ fresh
   }
 
   /**
@@ -165,24 +211,12 @@ class Searcher(index: IndexView) extends Serializable {
     val intervals = index.postings
       .filter(col("term_id") === rare.termId)
       .select("first_doc_id", "last_doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
     if (intervals.isEmpty) return None // dict/postings drift: fall back
-    val starts = intervals.map(_._1)
-    val ends = intervals.map(_._2) // ascending too (disjoint, start-sorted)
     val others = qts.map(_.termId).filter(_ != rare.termId)
-    val overlaps = udf((first: Long, last: Long) => {
-      var lo = 0
-      var hi = starts.length // lo → first interval with start > last
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        if (starts(m) <= last) lo = m + 1 else hi = m
-      }
-      lo > 0 && ends(lo - 1) >= first
-    })
     Some(index.postings.filter(
       col("term_id") === rare.termId ||
-        (col("term_id").isin(others: _*) &&
-          overlaps(col("first_doc_id"), col("last_doc_id")))))
+        (col("term_id").isin(others: _*) && overlapsAny(intervals))))
   }
 
   def search(
@@ -209,9 +243,7 @@ class Searcher(index: IndexView) extends Serializable {
       scorer: Scorer,
       prunedDecoded: Option[DataFrame]): DataFrame = {
     import spark.implicits._
-    require(scorer != TfIdfCosine || cfg.cosineNorms,
-      "index was built with cosineNorms=false (BM25-only maintenance mode); " +
-        "tf-idf cosine scoring needs a norms rebuild")
+    requireNorms(scorer)
     val empty = spark.emptyDataset[Hit].toDF()
     if (qts.isEmpty) return empty // Query.isEmptyOfTerms short-circuit
 
@@ -230,10 +262,6 @@ class Searcher(index: IndexView) extends Serializable {
 
     val decoded = prunedDecoded.getOrElse(
       decodedPostings(spark, qts.map(_.termId)))
-
-    val k1 = cfg.k1
-    val b = cfg.b
-    val avgdl = if (index.meta.avgdl > 0) index.meta.avgdl else 1.0
 
     // J1: per-doc union accumulation.
     //  - Cosine: the numerator factors as (1/maxtf_d)·Σ_t qwIdf_t·tf, so the
@@ -260,8 +288,7 @@ class Searcher(index: IndexView) extends Serializable {
             .agg(sum(col("c")).as("cnum"), count(lit(1)).as("nterms"))
             .filter(col("nterms") === qts.length)
         }
-        matched
-          .join(index.docStats.select("doc_id", "conv_id", "max_tf", "norm").hint("merge"), "doc_id")
+        withDocStats(matched, "conv_id", "max_tf", "norm")
           .withColumn("score",
             when(col("max_tf") === 0 || col("norm") === 0.0, 0.0)
               .otherwise(col("cnum") / col("max_tf") / (lit(qNorm) * col("norm"))))
@@ -283,11 +310,9 @@ class Searcher(index: IndexView) extends Serializable {
         val sat = qts.map { q =>
           val tf = col(s"tf_${q.termId}")
           when(tf.isNull, lit(0L)).otherwise(
-            qfix(lit(q.qb) * (tf * (k1 + 1)) /
-              (tf + lit(k1) * (lit(1 - b) + lit(b / avgdl) * col("doc_len")))))
+            qfix(bm25(tf, col("doc_len"), Some(lit(q.qb)))))
         }.reduce(_ + _)
-        matched
-          .join(index.docStats.select("doc_id", "conv_id", "doc_len").hint("merge"), "doc_id")
+        withDocStats(matched, "conv_id", "doc_len")
           .withColumn("score", sat.cast("double") / ScoreScale)
       case Bm25 =>
         // long-query fallback: per-doc contribution list folded on the
@@ -304,12 +329,10 @@ class Searcher(index: IndexView) extends Serializable {
             .agg(count(lit(1)).as("nterms"), contribAgg)
             .filter(col("nterms") === qts.length)
         }
-        matched
-          .join(index.docStats.select("doc_id", "conv_id", "doc_len").hint("merge"), "doc_id")
+        withDocStats(matched, "conv_id", "doc_len")
           .withColumn("score",
             aggregate(col("contribs"), lit(0L), (acc, c) =>
-              acc + qfix(c.getField("qb") * (c.getField("tf") * (k1 + 1)) /
-                (c.getField("tf") + lit(k1) * (lit(1 - b) + lit(b / avgdl) * col("doc_len")))))
+              acc + qfix(bm25(c.getField("tf"), col("doc_len"), Some(c.getField("qb")))))
               .cast("double") / ScoreScale)
     }
 
@@ -323,29 +346,6 @@ class Searcher(index: IndexView) extends Serializable {
       .select("doc_id", "conv_id", "score")
   }
 
-  /**
-   * Batch serving: score MANY queries in ONE Spark job — the offline
-   * evaluation / reranking shape (score a query log, build a training set,
-   * run a relevance sweep). Single-query serving pays ~0.2 s of fixed
-   * planning+scheduling per query; the batch path pays it once: the union
-   * of all queries' terms drives ONE pushed-`IN` decode, a small broadcast
-   * (query_id, term_id, weight) table fans each posting out to the queries
-   * that want it, one (query_id, doc_id) aggregation scores everything,
-   * and a per-query window takes each top-k. Per-query results are
-   * IDENTICAL to `search` (RankIdentitySpec asserts equality).
-   *
-   * Output: (query_id, doc_id, conv_id, score, rank), rank 1..k per query,
-   * ordered within a query by (score desc, doc_id asc). Queries that are
-   * empty after analysis/OOV-drop (or with qNorm 0 under cosine) simply
-   * produce no rows, exactly as `search` returns an empty frame.
-   */
-  /** Batch pruning cutover: 4× the single-query one. The batch θ job costs
-    * ~0.3 s regardless of batch size, and the batch's exact path amortizes
-    * decode across queries, so pruning breaks even later — measured at the
-    * 400k-conv bench (5.9M candidate (query, term) postings): unpruned
-    * 1.34 s vs pruned 1.63 s with 0% blocks cut (homogeneous corpus =
-    * flat score distributions = powerless bounds). The pruned path is the
-    * 10^9-posting regime's tool, exactly like the single-query cutover. */
   /** Below this many total candidate postings the WAND θ phase costs more
     * than the decode it prunes, so the query serves through the exact
     * single-job path (identical results either way — θ = 0 is sound).
@@ -361,6 +361,13 @@ class Searcher(index: IndexView) extends Serializable {
     * the batch θ job on EVERY batch, part of the j1_batch_topk regression.) */
   val WandExactCutover: Long = 1L << 22
 
+  /** Batch pruning cutover: 4× the single-query one. The batch θ job costs
+    * ~0.3 s regardless of batch size, and the batch's exact path amortizes
+    * decode across queries, so pruning breaks even later — measured at the
+    * 400k-conv bench (5.9M candidate (query, term) postings): unpruned
+    * 1.34 s vs pruned 1.63 s with 0% blocks cut (homogeneous corpus =
+    * flat score distributions = powerless bounds). The pruned path is the
+    * 10^9-posting regime's tool, exactly like the single-query cutover. */
   val BatchExactCutover: Long = 4L * WandExactCutover
 
   /** Below this many candidate (query, term) posting fan-out rows the batch
@@ -372,6 +379,22 @@ class Searcher(index: IndexView) extends Serializable {
     * once the batch carries more than a couple of tasks' worth of scoring. */
   val BatchRespreadCutover: Long = 1L << 21
 
+  /**
+   * Batch serving: score MANY queries in ONE Spark job — the offline
+   * evaluation / reranking shape (score a query log, build a training set,
+   * run a relevance sweep). Single-query serving pays ~0.2 s of fixed
+   * planning+scheduling per query; the batch path pays it once: the union
+   * of all queries' terms drives ONE pushed-`IN` decode, a small broadcast
+   * (query_id, term_id, weight) table fans each posting out to the queries
+   * that want it, one (query_id, doc_id) aggregation scores everything,
+   * and a bounded per-query heap aggregate takes each top-k. Results are
+   * IDENTICAL to `search` (RankIdentitySpec asserts equality).
+   *
+   * Output: (query_id, doc_id, conv_id, score, rank), rank 1..k per query,
+   * ordered within a query by (score desc, doc_id asc). Queries that are
+   * empty after analysis/OOV-drop (or with qNorm 0 under cosine) simply
+   * produce no rows, exactly as `search` returns an empty frame.
+   */
   def searchBatch(
       spark: SparkSession,
       queries: Seq[(String, String)],
@@ -380,9 +403,7 @@ class Searcher(index: IndexView) extends Serializable {
       exactCutover: Long = -1L): DataFrame = {
     val cutover = if (exactCutover >= 0L) exactCutover else BatchExactCutover
     import spark.implicits._
-    require(scorer != TfIdfCosine || cfg.cosineNorms,
-      "index was built with cosineNorms=false (BM25-only maintenance mode); " +
-        "tf-idf cosine scoring needs a norms rebuild")
+    requireNorms(scorer)
     // duplicate ids would silently merge two queries' contributions into
     // one aggregation group — refuse loudly instead
     require(queries.map(_._1).distinct.length == queries.length,
@@ -409,16 +430,15 @@ class Searcher(index: IndexView) extends Serializable {
     }
     val qTerms = broadcast(qTermRows.toDF("qidx", "term_id", "w"))
     val termIds = live.flatMap(_._2.map(_.termId)).distinct
+    // candidate (query, term) postings: the cutovers' measure of batch work
+    val fanout = live.flatMap(_._2).map(_.df).sum
 
     // BM25 batches above the cutover get per-query block-max pruning on the
-    // SHARED decode (batchSurvivorBlocks) — exact results, far fewer blocks
-    val decoded = (if (scorer == Bm25)
-      batchSurvivorBlocks(spark, live, k, cutover) else None)
+    // SHARED decode (survivorBlocks) — exact results, far fewer blocks
+    val decoded = (if (scorer == Bm25 && fanout > cutover)
+      survivorBlocks(spark, live, k) else None)
       .map(decodeBlocks)
       .getOrElse(decodedPostings(spark, termIds))
-    val k1 = cfg.k1
-    val b = cfg.b
-    val avgdl = if (index.meta.avgdl > 0) index.meta.avgdl else 1.0
 
     val scored = scorer match {
       case TfIdfCosine =>
@@ -461,7 +481,6 @@ class Searcher(index: IndexView) extends Serializable {
         val batchParts = math.max(
           2 * spark.sparkContext.defaultParallelism,
           math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt))
-        val fanout = live.flatMap(_._2).map(_.df).sum
         val spread =
           if (fanout >= BatchRespreadCutover)
             decoded.repartition(batchParts, col("doc_id"))
@@ -469,9 +488,7 @@ class Searcher(index: IndexView) extends Serializable {
         spread
           .join(dlDim, "doc_id")
           .join(qTerms, "term_id")
-          .withColumn("c",
-            qfix(col("w") * (col("tf") * (k1 + 1)) /
-              (col("tf") + lit(k1) * (lit(1 - b) + lit(b / avgdl) * col("doc_len")))))
+          .withColumn("c", qfix(bm25(col("tf"), col("doc_len"), Some(col("w")))))
           .groupBy("qidx", "doc_id")
           .agg(sum(col("c")).as("sfix"))
           .withColumn("score", col("sfix").cast("double") / ScoreScale)
@@ -500,52 +517,68 @@ class Searcher(index: IndexView) extends Serializable {
   }
 
   /**
-   * Per-query block-max pruning for the BATCH path (r3 verdict #5): the
-   * shared decode is the batch's dominant cost once per-query fixed costs
-   * amortize, and without pruning it sweeps every block of every query's
-   * terms. This is the two-phase WAND of `searchBm25Wand` generalized to N
-   * queries with ONE extra job:
+   * Block-max pruning for N queries sharing one decode (Ding & Suel,
+   * SIGIR 2011) — the one pruning plan: batch serving runs it on the batch,
+   * single-query WAND ([[wandPlan]]) on a batch of one.
    *
    *  1. θ_q per query = the k-th largest EXACT FULL q-score among the docs
-   *     living in t*_q's top-k blocks (same candidate-doc θ as the
-   *     single-query `wandPlan` — a t*-only θ can never clear the other
-   *     terms' global-max slack in the prune condition, so multi-term
-   *     batches pruned 0% with it). Computed in two tiny jobs detailed at
-   *     the implementation below; a −1e-9 margin absorbs the fixed-point
-   *     accumulation grid's ≤1e-15 quantization, so θ stays a sound lower
-   *     bound on q's k-th best total.
+   *     living in t*_q's top-k blocks, t*_q being q's term with the highest
+   *     qtf·gmax (ties → larger term_id). A t*-only θ can never clear the
+   *     other terms' global-max slack in the prune condition, so multi-term
+   *     queries pruned 0% with it. Computed in at most two tiny jobs
+   *     detailed at the implementation below; a −1e-9 margin absorbs the
+   *     fixed-point accumulation grid's ≤1e-15 quantization, so θ stays a
+   *     sound lower bound on q's k-th best total.
    *  2. A block b of term t survives iff SOME query wants it:
    *     ∃ q∋t: qtf·bound_t(b) + Σ_{t'≠t} qtf·gmax(t') ≥ θ_q
    *     ⇔ bound_t(b) ≥ min_{q∋t} (θ_q − sumGmax_q + qtf·gmax_t)/qtf —
    *     ONE per-term threshold, applied as a codegen filter on block
    *     metadata before any decode.
    *
+   * Block bounds are assembled HERE, from append-invariant block metadata
+   * (max_tf, min_dl — Schemas.Block) and the CURRENT dictionary/meta stats:
+   *   bound_t(b) = idf25(t) · s(max_tf(b), min_dl(b), avgdl)
+   * with s the BM25 tf-saturation term. Sound because s is increasing in tf
+   * and decreasing in dl, so every posting in the block scores ≤ the bound;
+   * appended batches change idf25/avgdl without invalidating stored blocks.
+   *
    * Soundness per query: a doc in a block dropped for ALL queries scores
    * < θ_q for each q containing its term, so it cannot reach any top-k;
    * every true top-k doc keeps all its blocks (its bounds dominate its
    * true score ≥ θ). Results are therefore IDENTICAL to the unpruned
-   * batch (WandFuzzSpec forces the pruned path and asserts equality).
-   * None = below the cutover / no driver bounds / nothing prunable —
-   * caller decodes the full term set.
+   * path (WandFuzzSpec forces pruning and asserts equality).
+   * None = nothing prunable (every θ is 0) — caller decodes the full
+   * term set.
    */
-  private[graft] def batchSurvivorBlocks(
+  private[graft] def survivorBlocks(
       spark: SparkSession,
       live: Seq[(String, Seq[QueryTerm])],
-      k: Int,
-      exactCutover: Long): Option[Dataset[Block]] = {
-    if (live.flatMap(_._2).map(_.df).sum <= exactCutover) return None
-    val tb = index.wandTermBounds.getOrElse(return None)
-    val bk1 = cfg.k1
-    val bb = cfg.b
-    val bAvgdl = if (index.meta.avgdl > 0) index.meta.avgdl else 1.0
-    def sat(tf: Double, dl: Double): Double =
-      (tf * (bk1 + 1)) / (tf + bk1 * (1 - bb + bb * dl / bAvgdl))
+      k: Int): Option[Dataset[Block]] = {
+    import spark.implicits._
     val allTerms: Map[Long, QueryTerm] = live.flatMap(_._2).map(t => t.termId -> t).toMap
-    val gmax: Map[Long, Double] = allTerms.map { case (tid, t) =>
-      tid -> (tb.get(tid) match {
-        case Some((mt, md)) => t.bm25Idf * sat(mt.toDouble, md.toDouble)
-        case None => 0.0
-      })
+    val termIds = live.flatMap(_._2.map(_.termId)).distinct
+    val idfLit = typedLit(allTerms.map { case (tid, t) => tid -> t.bm25Idf })
+    val blockBound =
+      bm25(col("max_tf"), col("min_dl"), Some(element_at(idfLit, col("term_id"))))
+
+    // per-term global max BM25 doc weight: ZERO jobs from the view's
+    // driver-resident term-level block bounds (sound: s is increasing in tf,
+    // decreasing in dl, so pairing the term-wide max_tf with the term-wide
+    // min_dl only raises the bound); a metadata agg above the dict guard
+    val gmax: Map[Long, Double] = index.wandTermBounds match {
+      case Some(tb) =>
+        def sat(tf: Double, dl: Double): Double = // bm25's driver twin
+          (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+        allTerms.map { case (tid, t) =>
+          tid -> tb.get(tid).fold(0.0) { case (mt, md) =>
+            t.bm25Idf * sat(mt.toDouble, md.toDouble)
+          }
+        }
+      case None => index.postings
+        .filter(col("term_id").isin(termIds: _*))
+        .withColumn("bound", blockBound)
+        .groupBy("term_id").agg(max("bound").as("m"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     }
     case class QInfo(qid: String, ts: Seq[QueryTerm], tStar: QueryTerm, sumGmax: Double)
     val infos = live.map { case (qid, ts) =>
@@ -553,57 +586,29 @@ class Searcher(index: IndexView) extends Serializable {
         ts.maxBy(t => (t.qtf * gmax.getOrElse(t.termId, 0.0), t.termId)),
         ts.map(t => t.qtf * gmax.getOrElse(t.termId, 0.0)).sum)
     }
-    val starIds = infos.map(_.tStar.termId).distinct
-
-    val idfLit = typedLit(allTerms.map { case (tid, t) => tid -> t.bm25Idf })
-    val blockBound = element_at(idfLit, col("term_id")) *
-      (col("max_tf") * (bk1 + 1)) /
-      (col("max_tf") + lit(bk1) * (lit(1 - bb) + lit(bb / bAvgdl) * col("min_dl")))
 
     // θ_q = k-th largest EXACT FULL q-score among the docs in the t* terms'
-    // top-k blocks — the same candidate-doc θ as the single-query wandPlan
-    // (a t*-only θ can never clear the other terms' global-max slack in the
-    // prune condition, so multi-term batches pruned 0%). At most two tiny
-    // jobs: (1) metadata-only top-k block intervals per t* term, served
-    // from the view's (term, k) interval cache — zero jobs once the terms
-    // are warm (VERDICT r5 #4); (2) decode every query term's blocks
-    // overlapping the merged intervals, score per (query, doc) via the
-    // broadcast (qid, term, weight) table, collect the k-th value per
-    // query. Partial scores at interval edges only LOWER θ, so soundness
-    // per query is unchanged.
-    import spark.implicits._
-    val intervals: Array[(Long, Long)] =
-      topBlockIntervals(starIds, k).values.flatten.toArray.sorted
+    // top-k blocks. At most two tiny jobs: (1) metadata-only top-k block
+    // intervals per t* term, served from the view's (term, k) interval
+    // cache — zero jobs once the terms are warm (VERDICT r5 #4); (2) decode
+    // every query term's blocks overlapping the merged intervals, score per
+    // (query, doc) via the broadcast (qid, term, weight) table, collect the
+    // k-th value per query. Any doc inside the intervals has ALL its
+    // postings in overlapping blocks, so its score is complete; docs
+    // straddling the edges score partially, which only LOWERS θ.
+    val intervals = topBlockIntervals(infos.map(_.tStar.termId), k).values.flatten.toArray
     if (intervals.isEmpty) return None
-    val merged = intervals.foldLeft(List.empty[(Long, Long)]) {
-      case ((s, e) :: acc, (f, l)) if f <= e => (s, math.max(e, l)) :: acc
-      case (acc, iv) => iv :: acc
-    }.reverse.toArray
-    val starts = merged.map(_._1)
-    val ends = merged.map(_._2)
-    val overlaps = udf((first: Long, last: Long) => {
-      var lo = 0
-      var hi = starts.length
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        if (starts(m) <= last) lo = m + 1 else hi = m
-      }
-      lo > 0 && ends(lo - 1) >= first
-    })
-    val qw = broadcast(infos.flatMap(i =>
-      i.ts.map(t => (i.qid, t.termId, t.qtf * t.bm25Idf)))
+    val qw = broadcast(infos.flatMap(i => i.ts.map(t => (i.qid, t.termId, t.qb)))
       .toDF("qid", "term_id", "w"))
     val candBlocks = index.postings
-      .filter(col("term_id").isin(allTerms.keys.toSeq: _*))
-      .filter(overlaps(col("first_doc_id"), col("last_doc_id")))
-      .as[Block]
+      .filter(col("term_id").isin(termIds: _*))
+      .filter(overlapsAny(intervals))
     val kth: Map[String, Double] = index.docStats
       .select(col("doc_id"), col("doc_len"))
       .join(broadcast(decodeBlocks(candBlocks)), "doc_id")
-      .withColumn("cu", (col("tf") * (bk1 + 1)) /
-        (col("tf") + lit(bk1) * (lit(1 - bb) + lit(bb / bAvgdl) * col("doc_len"))))
       .join(qw, "term_id")
-      .groupBy(col("qid"), col("doc_id")).agg(sum(col("w") * col("cu")).as("s"))
+      .groupBy(col("qid"), col("doc_id"))
+      .agg(sum(bm25(col("tf"), col("doc_len"), Some(col("w")))).as("s"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy("qid").orderBy(col("s").desc)))
@@ -611,6 +616,8 @@ class Searcher(index: IndexView) extends Serializable {
       .select("qid", "s")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
 
+    // fewer than k docs carry t* → the candidate set may be < k docs → θ
+    // would not be a sound k-th-total lower bound → θ = 0 for that query
     val thetas: Map[String, Double] = infos.map { i =>
       i.qid -> (if (i.tStar.df < k) 0.0
         else kth.get(i.qid).map(s => math.max(0.0, s - 1e-9)).getOrElse(0.0))
@@ -630,31 +637,19 @@ class Searcher(index: IndexView) extends Serializable {
     }.toMap
     val needLit = typedLit(need)
     Some(index.postings
-      .filter(col("term_id").isin(allTerms.keys.toSeq: _*))
+      .filter(col("term_id").isin(termIds: _*))
       .filter(blockBound >= element_at(needLit, col("term_id"))))
   }
 
   /**
-   * Block-max pruned BM25 top-k (the north rule's WAND path).
-   *
-   * Sound two-phase distributed variant:
-   *  1. θ = k-th largest exact single-term contribution of the highest-impact
-   *     query term t* (each doc's total ≥ its t* contribution, so θ lower-
-   *     bounds the k-th best total score).
-   *  2. Drop every block b of term t with
-   *     qtf_t·blockbound_t(b) + Σ_{t'≠t} qtf_{t'}·globalmax(t') < θ:
-   *     any doc in such a block has true score < θ, hence cannot be top-k,
-   *     and every true top-k doc keeps all its blocks (its block bounds
-   *     dominate its true score ≥ θ). Property-tested equal to the exact
-   *     path in WandSpec.
-   *
-   * Block bounds are assembled HERE, from append-invariant block metadata
-   * (max_tf, min_dl — Schemas.Block) and the CURRENT dictionary/meta stats:
-   *   blockbound_t(b) = idf25(t) · s(max_tf(b), min_dl(b), avgdl)
-   * with s(tf,dl,·) the BM25 tf-saturation term. Sound because s is
-   * increasing in tf and decreasing in dl, so every posting in the block
-   * scores ≤ the bound; appended batches change idf25/avgdl without
-   * invalidating stored blocks.
+   * Block-max pruned BM25 top-k (the north rule's WAND path): the query's
+   * candidate postings are decoded only from the blocks [[survivorBlocks]]
+   * keeps for it as a batch of one — θ = the k-th best full score among
+   * the docs in the top term's k most promising blocks, and a block
+   * survives iff qtf·bound + Σ_{t'≠t} qtf·gmax(t') ≥ θ. Results equal the
+   * exact path (WandFuzzSpec). At or below `exactCutover` candidate
+   * postings the query serves exact: the θ jobs would cost more than the
+   * decode they save.
    */
   def searchBm25Wand(
       spark: SparkSession,
@@ -664,124 +659,20 @@ class Searcher(index: IndexView) extends Serializable {
     import spark.implicits._
     val qts = queryTerms(spark, query)
     if (qts.isEmpty) return spark.emptyDataset[Hit].toDF()
-    if (qts.map(_.df).sum <= exactCutover)
-      return scoreTerms(spark, qts, k, Or, Bm25, None)
-    val (_, survivors) = wandPlan(spark, qts, k)
-    // decode via the native generator (same helper as the exact path) —
-    // postings stay in Tungsten; the survivors path is exactly the 10^9+-
-    // postings regime where a per-block object round-trip costs most
-    scoreTerms(spark, qts, k, Or, Bm25, Some(decodeBlocks(survivors)))
+    val pruned =
+      if (qts.map(_.df).sum <= exactCutover) None
+      else Some(decodeBlocks(wandPlan(spark, qts, k)._2))
+    scoreTerms(spark, qts, k, Or, Bm25, pruned)
   }
 
   /** The WAND pruning decision for an analyzed term set: (candidate block
-    * set, surviving block set). Shared by [[searchBm25Wand]] and the
-    * pruning diagnostics (graft.WandSkew / Bench's wand_prune section),
-    * so what the probe counts IS what serving decodes. */
+    * set, surviving block set) — [[survivorBlocks]] on a batch of one, all
+    * candidates surviving when nothing prunes. Shared by [[searchBm25Wand]]
+    * and Bench's wand_prune section, so what the probe counts IS what
+    * serving decodes. */
   private[graft] def wandPlan(
       spark: SparkSession, qts: Seq[QueryTerm], k: Int): (Dataset[Block], Dataset[Block]) = {
-    import spark.implicits._
-    val termIds = qts.map(_.termId)
-
-    val bk1 = cfg.k1; val bb = cfg.b
-    val bAvgdl = if (index.meta.avgdl > 0) index.meta.avgdl else 1.0
-    def sat(tf: Double, dl: Double): Double =
-      (tf * (bk1 + 1)) / (tf + bk1 * (1 - bb + bb * dl / bAvgdl))
-    val bIdfLit = typedLit(qts.map(q => q.termId -> q.bm25Idf).toMap)
-    // per-block sound upper bound on the BM25 per-posting term score; the
-    // query-side multiplier for doc contributions is then qtf alone
-    val blockBound = element_at(bIdfLit, col("term_id")) *
-      (col("max_tf") * (bk1 + 1)) /
-      (col("max_tf") + lit(bk1) * (lit(1 - bb) + lit(bb / bAvgdl) * col("min_dl")))
-
-    // per-term global max BM25 doc weight: ZERO jobs from the view's
-    // driver-resident term-level block bounds (sound: s is increasing in tf,
-    // decreasing in dl, so pairing the term-wide max_tf with the term-wide
-    // min_dl only raises the bound); per-query metadata agg above the guard
-    val gmax: Map[Long, Double] = index.wandTermBounds match {
-      case Some(tb) =>
-        qts.map(q => q.termId -> (tb.get(q.termId) match {
-          case Some((mt, md)) => q.bm25Idf * sat(mt.toDouble, md.toDouble)
-          case None => 0.0
-        })).toMap
-      case None => index.postings
-        .filter(col("term_id").isin(termIds: _*))
-        .withColumn("bound", blockBound)
-        .groupBy("term_id").agg(max("bound").as("m"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    }
-
-    val tStar = qts.maxBy(q => q.qtf * gmax.getOrElse(q.termId, 0.0))
-    // θ = k-th largest EXACT FULL score among the docs living in t*'s k most
-    // promising blocks. The r1–r4 θ used t*-ONLY contributions — sound, but
-    // structurally powerless on multi-term queries: the prune condition
-    // compares θ against bound_t(b) + Σ_{t'≠t} gmax(t'), and a θ capped at
-    // one term's contribution can never exceed the other terms' global
-    // maxima, so nothing pruned unless one term dominated (measured 0% even
-    // on the score-skewed fixture). Scoring the candidate docs FULLY costs
-    // one more tiny decode — other terms' blocks overlapping t*'s top-block
-    // docId intervals (any doc inside the intervals has ALL its postings in
-    // overlapping blocks, so its computed score is complete; docs straddling
-    // the edges score partially, which only lowers θ) — and the resulting
-    // θ is a set of real documents' true scores, so its k-th largest lower-
-    // bounds the true k-th best total: pruning stays exact (WandFuzzSpec)
-    // and now bites whenever score mass is block-clustered (WandSkew).
-    val theta: Double = {
-      // fewer than k docs carry t* → the candidate set may be < k docs →
-      // θ would not be a sound k-th-total lower bound → disable pruning
-      if (tStar.df < k) 0.0
-      else {
-        // the k most promising t* blocks' intervals — from the view's
-        // (term, k) cache; one metadata job on a cold term, zero warm
-        // (VERDICT r5 #4)
-        val intervals = topBlockIntervals(Seq(tStar.termId), k)(tStar.termId)
-        if (intervals.isEmpty) 0.0
-        else {
-          val starts = intervals.map(_._1)
-          val ends = intervals.map(_._2)
-          val overlaps = udf((first: Long, last: Long) => {
-            var lo = 0
-            var hi = starts.length
-            while (lo < hi) {
-              val m = (lo + hi) >>> 1
-              if (starts(m) <= last) lo = m + 1 else hi = m
-            }
-            lo > 0 && ends(lo - 1) >= first
-          })
-          // job 2: decode every query term's overlapping blocks (≤ |q|·k
-          // blocks), broadcast the tiny decoded side into the stats probe,
-          // and take the k-th largest exact per-doc total
-          val qbLit = typedLit(qts.map(q => q.termId -> q.qb).toMap)
-          val cand = index.postings
-            .filter(col("term_id").isin(termIds: _*))
-            .filter(overlaps(col("first_doc_id"), col("last_doc_id")))
-            .as[Block]
-          val cs = index.docStats.select(col("doc_id"), col("doc_len"))
-            .join(broadcast(decodeBlocks(cand)), "doc_id")
-            .withColumn("c", element_at(qbLit, col("term_id")) * (col("tf") * (bk1 + 1)) /
-              (col("tf") + lit(bk1) * (lit(1 - bb) + lit(bb / bAvgdl) * col("doc_len"))))
-            .groupBy(col("doc_id")).agg(sum(col("c")).as("s"))
-            .orderBy(col("s").desc)
-            .limit(k)
-            .select("s")
-            .collect()
-          // the same 1e-9 margin the batch path subtracts: scores accumulate
-          // on the 1e-15 fixed-point grid (ScoreScale), so a doc's quantized
-          // total can land an ulp below its exact sum — the margin keeps θ a
-          // sound lower bound under quantization (ADVICE r4)
-          if (cs.length < k) 0.0 else math.max(0.0, cs.last.getDouble(0) - 1e-9)
-        }
-      }
-    }
-
-    val sumGmax = qts.map(q => q.qtf * gmax.getOrElse(q.termId, 0.0)).sum
-    val gmaxLit = typedLit(qts.map(q =>
-      q.termId -> (sumGmax - q.qtf * gmax.getOrElse(q.termId, 0.0))).toMap)
-    val qtfLit = typedLit(qts.map(q => q.termId -> q.qtf.toDouble).toMap)
-
-    val candidates = index.postings.filter(col("term_id").isin(termIds: _*))
-    val survivors = candidates
-      .filter(element_at(qtfLit, col("term_id")) * blockBound +
-        element_at(gmaxLit, col("term_id")) >= theta)
-    (candidates, survivors)
+    val candidates = index.postings.filter(col("term_id").isin(qts.map(_.termId): _*))
+    (candidates, survivorBlocks(spark, Seq("" -> qts), k).getOrElse(candidates))
   }
 }

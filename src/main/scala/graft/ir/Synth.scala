@@ -96,8 +96,8 @@ object Synth {
    * min_dl bounds, while the cold tail's blocks bound far below any θ —
    * the shape a real corpus has when docId order correlates with source
    * or quality tiers. On this corpus pruning must discard the cold tail's
-   * blocks and return results identical to the exact path (WandSkew
-   * probe + Bench's wand_prune section record the measured fraction).
+   * blocks and return results identical to the exact path (Bench's
+   * wand_prune section records the measured fraction).
    */
   def skewedTurns(
       spark: SparkSession, nConvs: Int, seed: Long = 43L,

@@ -146,6 +146,16 @@ class RankIdentitySpec extends SparkSpec {
       assertIdentical(hits(b.searchBm25Wand(spark, q, K, exactCutover = 0L)),
         hits(a.searchBm25Wand(spark, q, K, exactCutover = 0L)), s"fallback WAND '$q'")
     }
+    // the batch prune takes the same fallback: forced pruning on the big
+    // view still serves every query exactly as single-query search
+    val qs = Fixtures.referenceQueries.distinct.zipWithIndex.map { case (q, i) => s"q$i" -> q }
+    val batch = b.searchBatch(spark, qs, K, Bm25, 0L).collect()
+      .groupBy(_.getString(0))
+    qs.foreach { case (qid, q) =>
+      val rows = batch.getOrElse(qid, Array.empty).sortBy(_.getInt(4))
+        .map(r => (r.getLong(1), r.getDouble(3))).toSeq
+      assertIdentical(rows, hits(a.search(spark, q, K, Or, Bm25)), s"fallback batch '$q'")
+    }
   }
 
   test("empty and fully-OOV queries short-circuit to empty results") {

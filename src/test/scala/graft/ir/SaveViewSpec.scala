@@ -96,5 +96,31 @@ class SaveViewSpec extends SparkSpec {
     val exact = s.search(spark, q, 5, Or, Bm25).collect().toSeq
     assert(r2.map(r => (r.getLong(0), math.floor(r.getDouble(2) * 1e9 + 0.5))) ==
       exact.map(r => (r.getLong(0), math.floor(r.getDouble(2) * 1e9 + 0.5))))
+    // and it prunes: equality alone would pass a plan that never drops a
+    // block. One query through wandPlan, then a batch of two through the
+    // batch prune (survivorBlocks has no cutover: exactCutover = 0)
+    val qts = s.queryTerms(spark, q)
+    val (cand, surv) = s.wandPlan(spark, qts, 5)
+    assert(surv.count() < cand.count(), "single-query WAND pruned no block")
+    val live = Seq("a" -> qts, "b" -> s.queryTerms(spark, "cultura produccion"))
+    val batchCand = view.postings
+      .filter(col("term_id").isin(live.flatMap(_._2.map(_.termId)).distinct: _*))
+    val batchSurv = s.survivorBlocks(spark, live, 5)
+    assert(batchSurv.exists(_.count() < batchCand.count()), "batch prune pruned no block")
+  }
+
+  test("topBlockIntervals never returns null when its puts cross the cache cap") {
+    val view = IndexBuilder.build(spark, Synth.skewedTurns(spark, 500), BuildConfig())
+    val s = new Searcher(view)
+    val Seq(t1, t2) = view.termDict.collect().map(_.term_id).sorted.take(2).toSeq
+    // cap − 1 entries: the first fresh put reaches the cap, the second
+    // clears the cache — the first term's entry must not be read back
+    val none = Array.empty[(Long, Long)]
+    (1 until IndexView.ThetaCacheMaxEntries).foreach(i =>
+      view.thetaIntervalCache.put((-i.toLong, 5), none))
+    val got = s.topBlockIntervals(Seq(t1, t2), 5)
+    assert(got.keySet == Set(t1, t2))
+    assert(got.values.forall(_ != null), s"null intervals: $got")
+    assert(got.values.forall(_.nonEmpty))
   }
 }

@@ -15,7 +15,9 @@ import graft.ir._
   * expression ids, plan ids and object hashes normalised, to
   * <dir>/<class>_<suffix>.txt — so two revisions' files diff to exactly
   * their plan changes. The build plan stored with each pinned table is
-  * left out: it is not the query's.
+  * left out: it is not the query's. The build's own optimized plans
+  * (term_dict, doc_stats, postings, cached stages included) go to
+  * <dir>/build_<table>_<suffix>.txt the same way.
   *
   *   sbt "runMain graft.PlanDumpServe <dir> <suffix>"
   */
@@ -35,6 +37,20 @@ object PlanDumpServe {
     spark.sparkContext.setLogLevel("ERROR")
 
     val built = IndexBuilder.build(spark, Synth.turns(spark, 2000))
+    Files.createDirectories(Paths.get(dir))
+    def write(name: String, plan: String): Unit = {
+      val path = Paths.get(dir, s"${name}_$suffix.txt")
+      Files.writeString(path, plan
+        .replaceAll("#\\d+", "#x")
+        .replaceAll("plan_id=\\d+", "plan_id=x")
+        .replaceAll("@[0-9a-f]+\\b", "@x") // object identity hashes
+        .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")) // JVM lambda class names
+      println(s"[plan] wrote $path")
+    }
+    Seq("termdict" -> built.termDict.toDF(), "docstats" -> built.docStats.toDF(),
+      "postings" -> built.postings.toDF()).foreach { case (name, df) =>
+      write(s"build_$name", df.queryExecution.optimizedPlan.treeString)
+    }
     spark.conf.set("spark.sql.shuffle.partitions",
       IndexView.servingPartitions(built.meta, spark).toString)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -55,18 +71,10 @@ object PlanDumpServe {
       "wand_bm25" -> (() => searcher.searchBm25Wand(spark, q, 10)),
       "batch32_bm25" -> (() => searcher.searchBatch(spark, batch, 10)))
 
-    Files.createDirectories(Paths.get(dir))
     classes.foreach { case (name, run) =>
       val df = run()
       df.collect()
-      val txt = render(df.queryExecution.executedPlan)
-        .mkString("", "\n", "\n")
-        .replaceAll("#\\d+", "#x")
-        .replaceAll("plan_id=\\d+", "plan_id=x")
-        .replaceAll("@[0-9a-f]+\\b", "@x") // object identity hashes
-      val path = Paths.get(dir, s"${name}_$suffix.txt")
-      Files.writeString(path, txt)
-      println(s"[plan] wrote $path")
+      write(name, render(df.queryExecution.executedPlan).mkString("", "\n", "\n"))
     }
     spark.stop()
   }

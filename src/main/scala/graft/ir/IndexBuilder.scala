@@ -261,14 +261,17 @@ object IndexBuilder {
    * cheap projection over the cache — callers must NOT persist it again;
    * the cache lives as long as the derived index does (same lifetime the
    * previous caller-side persists had).
+   *
+   * Returns (ids, row count, staged cache, sum). The PERSISTED staged frame
+   * rides along so callers can release the cache — the public result is a
+   * projection over it, whose unpersist() would not reach the cached plan
+   * (ADVICE r4).
+   *
+   * @param sumCol optional column whose global sum rides the SAME counting
+   *   job (e.g. Σ df over the dictionary = the corpus posting count) —
+   *   callers that need such an aggregate would otherwise pay one more
+   *   full-fledged action for it. 0 when None.
    */
-  /** Also returns the PERSISTED staged frame (3rd element) so callers can
-    * release the cache — the public result is a projection over it, whose
-    * unpersist() would not reach the cached plan (ADVICE r4). */
-  /** @param sumCol optional column whose global sum rides the SAME counting
-    *   job (e.g. Σ df over the dictionary = the corpus posting count) —
-    *   callers that need such an aggregate would otherwise pay one more
-    *   full-fledged action for it. 4th result element; 0 when None. */
   private[graft] def zipWithDenseIdCounted(
       df: DataFrame, order: Seq[Column], idName: String,
       sumCol: Option[String] = None): (DataFrame, Long, DataFrame, Long) = {
@@ -309,6 +312,60 @@ object IndexBuilder {
   /** Broadcast a dimension table while it fits, shuffle-join past it. */
   private[graft] def dim(df: DataFrame, rows: Long): DataFrame =
     if (rows <= BroadcastRowLimit) broadcast(df) else df
+
+  /** Dictionary order: term_id = rank by (df desc, term asc) — frequent
+    * terms get small ids (a consistent scheme is all rank identity needs,
+    * SURVEY.md §1.2). */
+  private[graft] val TermOrder: Seq[Column] = Seq(col("df").desc, col("term").asc)
+
+  /** A2: (term, df, cf) over a (doc_id, term, tf) table. */
+  private[graft] def termAgg(tf: DataFrame): DataFrame =
+    tf.groupBy("term").agg(count(lit(1)).as("df"), sum("tf").as("cf"))
+
+  /** The dictionary table: id'd (term, df, cf) rows plus idf (log10 N/df,
+    * the reference tf-idf weight) and bm25_idf over an `nDocs` corpus. */
+  private[graft] def withIdf(dict: DataFrame, nDocs: Long): DataFrame =
+    dict
+      .withColumn("idf", log10(lit(nDocs.toDouble) / col("df")))
+      .withColumn("bm25_idf",
+        log((lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+      .select("term_id", "term", "df", "cf", "idf", "bm25_idf")
+
+  /** A3 + A7 in one pass: one doc_stats row per doc_map row, with
+    * norm = sqrt(sum((tf*idf)^2)) / max_tf, exploiting that max_tf is
+    * constant per doc so it factors out of the sum. `idf` is the dictionary
+    * and its size; None is BM25-only mode, which skips the idf join — norms
+    * stay 0 and cosine queries are refused (Searcher guard). The left join
+    * keeps conversations whose every token was filtered out (max_tf=0,
+    * norm=0 — the reference's empty-doc guard, ir_manager.py:86-88). */
+  private[graft] def docStats(
+      docMap: DataFrame, tf: DataFrame, idf: Option[(DataFrame, Long)]): DataFrame = {
+    val docAgg = idf match {
+      case Some((dict, nTerms)) =>
+        tf.join(dim(dict.select("term", "idf"), nTerms), "term")
+          .groupBy("doc_id").agg(
+            max("tf").as("max_tf"),
+            sum("tf").as("doc_len"),
+            sum(pow(col("tf") * col("idf"), 2.0)).as("sq"))
+      case None =>
+        tf.groupBy("doc_id").agg(
+          max("tf").as("max_tf"),
+          sum("tf").as("doc_len"),
+          lit(0.0).as("sq"))
+    }
+    docMap
+      .join(docAgg, Seq("doc_id"), "left")
+      .select(
+        col("doc_id"), col("conv_id"),
+        coalesce(col("max_tf"), lit(0)).cast("int").as("max_tf"),
+        coalesce(col("doc_len"), lit(0L)).as("doc_len"),
+        coalesce(sqrt(col("sq")) / col("max_tf"), lit(0.0)).as("norm"))
+  }
+
+  /** (doc_id, term_id, tf): the tf table keyed by the dictionary's ids. */
+  private[graft] def withTermIds(tf: DataFrame, dict: DataFrame, nTerms: Long): DataFrame =
+    tf.join(dim(dict.select("term", "term_id"), nTerms), "term")
+      .select("doc_id", "term_id", "tf")
 
   /**
    * A1 tf stage, shared by the in-memory and staged builds: map-side docId
@@ -399,57 +456,23 @@ object IndexBuilder {
     val tf = tfStage(turns, docMap, nDocs, cfg.analyzer)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // A2: vocabulary with df/cf; deterministic term_id = rank by (df desc,
-    // term asc) — frequent terms get small ids (a consistent scheme is all
-    // rank-identity needs, SURVEY.md §1.2). Staged/counted like doc_map:
-    // this one action also materializes the tf cache (the dict aggregation
-    // is tf's first consumer), and idf columns are cheap projections over
-    // the staged cache for every later consumer.
-    val termAgg = tf.groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
+    // A2: vocabulary with df/cf and dictionary-ordered ids. Staged/counted
+    // like doc_map: this one action also materializes the tf cache (the
+    // dict aggregation is tf's first consumer), and idf columns are cheap
+    // projections over the staged cache for every later consumer.
     // Σ df (= the corpus posting count, meta.postings) rides the dictionary
     // counting job — previously one more dict-wide action at the end of build
     val (dictRaw, nTerms, dictStaged, nPostings) = zipWithDenseIdCounted(
-      termAgg, Seq(col("df").desc, col("term").asc), "term_id", sumCol = Some("df"))
-    val termDict = dictRaw
-      .withColumn("idf", log10(lit(nDocs.toDouble) / col("df")))
-      .withColumn("bm25_idf",
-        log((lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      .select("term_id", "term", "df", "cf", "idf", "bm25_idf")
-      .as[TermStat]
+      termAgg(tf), TermOrder, "term_id", sumCol = Some("df"))
+    val termDict = withIdf(dictRaw, nDocs).as[TermStat]
 
-    // A3 + A7 in one pass: norm = sqrt(sum((tf*idf)^2)) / max_tf, exploiting
-    // that max_tf is constant per doc so it factors out of the sum.
     // The dict join is NOT persisted: it is a broadcast (map-side) join over
     // the cached tf table, and re-running it per consumer is pure
     // well-scaling CPU, whereas materializing a second 15M-row cache is a
     // memory-bandwidth pass that measured 0.73 efficiency at 2→8 cores
     // (BENCH/BASELINE.md round-2 stage profile).
-    // BM25-only mode skips the idf join entirely — norms stay 0 and cosine
-    // queries are refused (Searcher guard)
-    val docAgg =
-      if (cfg.cosineNorms)
-        tf.join(dim(termDict.select("term", "idf").toDF(), nTerms), "term")
-          .groupBy("doc_id").agg(
-            max("tf").as("max_tf"),
-            sum("tf").as("doc_len"),
-            sum(pow(col("tf") * col("idf"), 2.0)).as("sq"))
-      else
-        tf.groupBy("doc_id").agg(
-          max("tf").as("max_tf"),
-          sum("tf").as("doc_len"),
-          lit(0.0).as("sq"))
-
-    // left join: conversations whose every token was filtered out still get a
-    // doc_stats row (max_tf=0, norm=0 — the reference's empty-doc guard,
-    // ir_manager.py:86-88)
-    val docStats = docMap
-      .join(docAgg, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"), col("conv_id"),
-        coalesce(col("max_tf"), lit(0)).cast("int").as("max_tf"),
-        coalesce(col("doc_len"), lit(0L)).as("doc_len"),
-        coalesce(sqrt(col("sq")) / col("max_tf"), lit(0.0)).as("norm"))
+    val docStats = IndexBuilder.docStats(docMap, tf,
+      if (cfg.cosineNorms) Some(termDict.toDF() -> nTerms) else None)
       .as[DocStat]
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -460,11 +483,8 @@ object IndexBuilder {
 
     val parts = math.max(1,
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val tfWithIds = tf
-      .join(dim(termDict.select("term", "term_id").toDF(), nTerms), "term")
-      .select("doc_id", "term_id", "tf")
-    val postings = buildPostings(spark, tfWithIds, docStats,
-      cfg.resolveSaltRange(nDocs, parts), nDocs)
+    val postings = buildPostings(spark, withTermIds(tf, termDict.toDF(), nTerms),
+      docStats, cfg.resolveSaltRange(nDocs, parts), nDocs)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val meta = IndexMeta(
@@ -503,13 +523,17 @@ object IndexBuilder {
       tfWithIds: DataFrame,
       docStats: Dataset[DocStat],
       saltRange: Long,
-      nDocs: Long = -1L): Dataset[Block] = {
-    import spark.implicits._
+      nDocs: Long = -1L): Dataset[Block] =
+    blocksFromRows(spark, postingRows(tfWithIds, docStats.toDF(), saltRange, nDocs))
 
+  /** (term_id, salt, doc_id, tf, ntf, dl): the doc-local posting inputs of
+    * [[blocksFromRows]], salted by docId range. */
+  private[graft] def postingRows(
+      tfWithIds: DataFrame, docStats: DataFrame, saltRange: Long, nDocs: Long): DataFrame = {
     val statsDim = docStats.select("doc_id", "max_tf", "doc_len")
     val statsJoin =
       if (nDocs > 0 && nDocs <= BroadcastRowLimit) broadcast(statsDim) else statsDim
-    val rows = tfWithIds
+    tfWithIds
       .join(statsJoin, "doc_id")
       .select(
         col("term_id"),
@@ -518,8 +542,6 @@ object IndexBuilder {
         col("tf"),
         (col("tf").cast("double") / col("max_tf")).as("ntf"),
         col("doc_len").as("dl"))
-
-    blocksFromRows(spark, rows)
   }
 
   /** (term_id, salt, doc_id, tf, ntf, dl) rows → codec blocks, one group per

@@ -1,9 +1,12 @@
 package graft.ir
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import scala.collection.mutable
+import scala.util.Try
 
 /**
  * Persistent index layout + checkpoint-resumable staged build.
@@ -23,10 +26,12 @@ import scala.collection.mutable
  *   dir/build_metrics.parquet
  *   dir/_manifest.tsv         (stage → rows, millis, bytes, lineage)
  *
- * Resume contract (north rule): every stage is recorded in the manifest only
- * after its Parquet output is fully committed; a re-run skips completed
- * stages and recomputes from the persisted outputs of earlier stages, so a
- * build killed mid-postings redoes only the unfinished buckets. Postings are
+ * Resume contract (north rule): every mutation — build, append, delete,
+ * compact, saveView — runs its stages through one [[Commit]] log, which
+ * records a stage in the manifest only after its Parquet output is fully
+ * committed; a re-run of the same call skips completed stages and
+ * recomputes from the persisted outputs of earlier stages, so a build
+ * killed mid-postings redoes only the unfinished buckets. Postings are
  * bucketed by term_id so each bucket is an independently restartable unit
  * (the per-partition checkpoint granularity demanded at 10^12-turn scale).
  */
@@ -34,26 +39,40 @@ object IndexStore {
 
   final case class StageRecord(stage: String, rows: Long, millis: Long, bytes: Long, detail: String)
 
-  // explicit table schemas for load-path reads: every schemaless
-  // `spark.read.parquet` runs a footer-inference job first, and the load
-  // path (called twice by a delete — resolve + reload) otherwise pays ~10
-  // such sub-100ms jobs per store before any real work
+  // explicit table schemas for reads: every schemaless `spark.read.parquet`
+  // runs a footer-inference job first, and the load path (called twice by a
+  // delete — resolve + reload) otherwise pays ~10 such sub-100ms jobs per
+  // store before any real work
   private lazy val blockSchema =
     org.apache.spark.sql.Encoders.product[Block].schema
-  private lazy val termStatSchema =
-    org.apache.spark.sql.Encoders.product[TermStat].schema
-  private lazy val docStatSchema =
-    org.apache.spark.sql.Encoders.product[DocStat].schema
-  private lazy val metaSchema =
-    org.apache.spark.sql.Encoders.product[IndexMeta].schema
-  private lazy val docMapSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField(
-      "doc_id", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField(
-      "conv_id", org.apache.spark.sql.types.StringType, nullable = true)))
-  private lazy val tombSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField(
-      "doc_id", org.apache.spark.sql.types.LongType, nullable = false)))
+  private lazy val tombSchema = StructType(Seq(StructField("doc_id", LongType, nullable = false)))
+  private lazy val tableSchema = Map(
+    "postings.parquet" -> blockSchema,
+    "doc_stats.parquet" -> org.apache.spark.sql.Encoders.product[DocStat].schema,
+    "doc_map.parquet" -> StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("conv_id", StringType, nullable = true))),
+    "term_dict.parquet" -> org.apache.spark.sql.Encoders.product[TermStat].schema,
+    "index_meta.parquet" -> org.apache.spark.sql.Encoders.product[IndexMeta].schema,
+    "tf.parquet" -> StructType(Seq(
+      StructField("doc_id", LongType), StructField("term", StringType),
+      StructField("tf", IntegerType))))
+
+  /** A table under `root`, read with its schema when the store knows it
+    * (only the schema's columns: a bucketed table's partition column is
+    * dropped, so every root of a table unions by position). */
+  private def read(spark: SparkSession, root: String, table: String): DataFrame =
+    tableSchema.get(table) match {
+      case Some(s) => spark.read.schema(s).parquet(s"$root/$table")
+        .select(s.fieldNames.toSeq.map(col): _*)
+      case None => spark.read.parquet(s"$root/$table")
+    }
+
+  /** Overwrite `table` under `root`; rows committed, read back. */
+  private def save(spark: SparkSession, df: DataFrame, root: String, table: String): Long = {
+    df.write.mode("overwrite").parquet(s"$root/$table")
+    read(spark, root, table).count()
+  }
 
   // all small-file I/O (manifest, config, tombstone paths, sizes) routes
   // through the dir's Hadoop FileSystem (StoreIO) so the staged build /
@@ -64,7 +83,7 @@ object IndexStore {
   private def manifestPath(dir: String): String = s"$dir/_manifest.tsv"
 
   private[graft] def readManifest(dir: String): Map[String, StageRecord] =
-    StoreIO.readLines(manifestPath(dir))
+    StoreIO.readLog(manifestPath(dir))
       .map { line =>
         val a = line.split("\t", -1)
         a(0) -> StageRecord(a(0), a(1).toLong, a(2).toLong, a(3).toLong, a(4))
@@ -76,21 +95,96 @@ object IndexStore {
       s"${r.stage}\t${r.rows}\t${r.millis}\t${r.bytes}\t${r.detail}")
   }
 
-  private def dirBytes(path: String): Long = StoreIO.dirBytes(path)
-
   /**
-   * Staged, resumable build. Returns the loaded IndexView plus the metrics
-   * rows written to build_metrics.parquet.
+   * The commit protocol of every store mutation: one run's stage log in
+   * `dir`'s manifest. Stage `name` is recorded as `prefix + name` (`""` for
+   * a base build or saveView, `bN:` for append batch N, `tN:` for
+   * tombstone N); its output lives under `root`. A stage runs only if the
+   * manifest does not record it yet, and is recorded — one manifest line,
+   * the only writer of manifest lines — only after its body has committed
+   * its output. So a crashed run is finished by re-running the same call:
+   * recorded stages are skipped, the rest recompute from persisted outputs.
+   * What "committed" means per mutation: a base build or saveView is
+   * committed once `build_metrics` is recorded, an append batch once
+   * `bN:commit` is, a tombstone once `tN:commit` is.
+   *
+   * Stage bodies may run concurrently (saveView): recording is serialised.
    */
-  /** The build config is part of the index (an index is only queryable with
-    * the analyzer it was built with — rank identity dies silently otherwise),
-    * so it is persisted alongside the tables and restored by load(). */
+  private final class Commit(dir: String, prefix: String = "", root: String) {
+    @volatile private var done = readManifest(dir)
+
+    /** The run's input signature, recorded before any other stage; a run
+      * resumed against a different input is refused. */
+    def begin(sig: String, rows: Long = 0L): Unit = {
+      done.get(prefix + "begin").foreach { rec =>
+        require(rec.detail == sig,
+          s"${if (prefix.isEmpty) "index" else s"batch ${prefix.init}"} at $dir was " +
+            s"begun from a different input (stored ${rec.detail}, given $sig); " +
+            "resume must use the original input")
+      }
+      stage("begin", sig)(rows)
+    }
+
+    /** Run `body` (its committed row count) unless the stage is recorded,
+      * then record it. `table` (relative to `root`) sizes the line's bytes;
+      * `since` is when the stage's work began. */
+    def stage(
+        name: String, detail: => String,
+        table: String = "", since: Long = System.nanoTime())(body: => Long): Unit =
+      if (!done.contains(prefix + name)) {
+        val rows = body
+        val rec = StageRecord(prefix + name, rows, (System.nanoTime() - since) / 1000000,
+          StoreIO.dirBytes(s"$root/${if (table.nonEmpty) table else s"$name.parquet"}"), detail)
+        synchronized {
+          appendManifest(dir, rec)
+          done += rec.stage -> rec
+        }
+      }
+
+    def records: Map[String, StageRecord] = done
+
+    /** `build_metrics` under `root`: the run's stage lines, as recorded in
+      * the manifest (so a resumed run still reports its earlier stages),
+      * plus `extra` rows. */
+    def metrics(spark: SparkSession, detail: String)(
+        extra: => Seq[BuildMetric] = Nil): Unit = {
+      import spark.implicits._
+      stage("build_metrics", detail) {
+        val rows = done.values.toSeq.filter(_.stage.startsWith(prefix)).map(r =>
+          BuildMetric(r.stage, r.detail, r.rows, r.bytes, r.millis, r.detail)) ++ extra
+        rows.toDS().coalesce(1)
+          .write.mode("overwrite").parquet(s"$root/build_metrics.parquet")
+        rows.size.toLong
+      }
+    }
+  }
+
+  /** Deterministic input signature of a run: count and xor-hash of the
+    * distinct conv_ids it indexes. Equal for a build and for a compaction
+    * or saveView of the same corpus, so resume and append input checks
+    * behave alike on all three. */
+  private def signature(convIds: DataFrame): String = {
+    val r = convIds.select("conv_id").distinct()
+      .selectExpr("count(*) c", "coalesce(bit_xor(xxhash64(conv_id)), 0) x").head()
+    s"n=${r.getLong(0)},x=${r.getLong(1)}"
+  }
+
   /** On-disk layout version; bump when table schemas change incompatibly
     * (v2 = corpus-stat-free block metadata). Checked on load so a stale
     * index fails loudly instead of reading NULLs into non-nullable fields. */
   private[graft] val LayoutVersion = 2
 
-  private def writeConfig(dir: String, cfg: BuildConfig): Unit = {
+  /** Persist `cfg` as `dir`'s build config, refusing a root that already
+    * holds a different one. The config is part of the index (an index is
+    * only queryable with the analyzer it was built with — rank identity
+    * dies silently otherwise); load() restores it. */
+  private def claim(dir: String, cfg: BuildConfig): Unit = {
+    StoreIO.mkdirs(dir)
+    readConfig(dir).foreach { stored =>
+      require(stored == cfg,
+        s"index at $dir was built with a different config; resume must use it " +
+          s"(stored=$stored given=$cfg)")
+    }
     val a = cfg.analyzer
     val lines = Seq(
       s"layout\t$LayoutVersion",
@@ -131,133 +225,71 @@ object IndexStore {
       cosineNorms = kv.get("cosineNorms").forall(_.toBoolean)))
   }
 
+  /** The config of the committed base build at `dir`. */
+  private def committedConfig(dir: String, manifest: Map[String, StageRecord]): BuildConfig = {
+    val cfg = readConfig(dir).getOrElse(throw new IllegalArgumentException(
+      s"no index at $dir (missing _config.tsv)"))
+    require(manifest.contains("build_metrics"), s"base build at $dir is incomplete")
+    cfg
+  }
+
+  /**
+   * Staged, resumable build of `turns` into `dir`. Returns the loaded
+   * IndexView; the stage lineage (plus skew and postings throughput) is
+   * written to build_metrics.parquet.
+   */
   def buildAndSave(
       spark: SparkSession,
       turns: DataFrame,
       dir: String,
-      cfg: BuildConfig = BuildConfig()): IndexView = {
-    import spark.implicits._
-    StoreIO.mkdirs(dir)
-    readConfig(dir).foreach { stored =>
-      require(stored == cfg,
-        s"index at $dir was built with a different config; resume must use it " +
-          s"(stored=$stored given=$cfg)")
-    }
-    writeConfig(dir, cfg)
-    var done = readManifest(dir)
-    val metrics = mutable.ArrayBuffer.empty[BuildMetric]
-
-    /** Run a stage unless the manifest already has it; record lineage. */
-    def stage(name: String, detail: String)(body: => Long): Unit = {
-      if (done.contains(name)) return
-      val t0 = System.nanoTime()
-      val rows = body
-      val ms = (System.nanoTime() - t0) / 1000000
-      val bytes = dirBytes(s"$dir/${name.takeWhile(_ != ':')}.parquet")
-      val rec = StageRecord(name, rows, ms, bytes, detail)
-      appendManifest(dir, rec)
-      done += (name -> rec)
-      metrics += BuildMetric(name, detail, rows, bytes, ms, detail)
-    }
-
-    val acfg = cfg.analyzer
-
-    // deterministic input signature, recorded before any stage and required
-    // to match on resume: without it a build killed mid-way and re-run
-    // against a DIFFERENT turns table would silently combine stages computed
-    // from two corpora (ADVICE r1; the append path already guards with the
-    // same b$N:begin discipline)
-    val inputSig = {
-      val r = turns.select("conv_id").distinct()
-        .selectExpr("count(*) c", "coalesce(bit_xor(xxhash64(conv_id)), 0) x").head()
-      s"n=${r.getLong(0)},x=${r.getLong(1)}"
-    }
-    done.get("begin").foreach { rec =>
-      require(rec.detail == inputSig,
-        s"index at $dir was begun from a different input (stored ${rec.detail}, " +
-          s"given $inputSig); resume must use the original turns table")
-    }
-    stage("begin", inputSig) { 0L }
-
-    stage("doc_map", "dense-docId over distinct conv_id") {
+      cfg: BuildConfig = BuildConfig()): IndexView =
+    stagedBuild(spark, dir, cfg, turns,
+      "dense-docId over distinct conv_id", "per-turn analyze+explode+hash-agg")(
       IndexBuilder.zipWithDenseId(
-        turns.select("conv_id").distinct(),
-        Seq(col("conv_id")), "doc_id")
-        .select("doc_id", "conv_id")
-        .write.mode("overwrite").parquet(s"$dir/doc_map.parquet")
-      spark.read.parquet(s"$dir/doc_map.parquet").count()
-    }
-    lazy val docMap = spark.read.parquet(s"$dir/doc_map.parquet")
+        turns.select("conv_id").distinct(), Seq(col("conv_id")), "doc_id")
+        .select("doc_id", "conv_id"))(
+      (docMap, nDocs) => IndexBuilder.tfStage(turns, docMap, nDocs, cfg.analyzer))
 
+  /** The staged build behind buildAndSave and compact: only the doc_map and
+    * tf stage bodies differ; dictionary, stats, postings, meta and metrics
+    * derive from the persisted doc_map/tf. `convIds` feeds the begin
+    * signature (deterministic, so a build killed mid-way and re-run against
+    * a DIFFERENT input cannot combine stages of two corpora — ADVICE r1). */
+  private def stagedBuild(
+      spark: SparkSession, dir: String, cfg: BuildConfig, convIds: DataFrame,
+      docMapDetail: String, tfDetail: String)(docMapOut: => DataFrame)(
+      tfOut: (DataFrame, Long) => DataFrame): IndexView = {
+    claim(dir, cfg)
+    val log = new Commit(dir, root = dir)
+    log.begin(signature(convIds))
+
+    log.stage("doc_map", docMapDetail)(save(spark, docMapOut, dir, "doc_map.parquet"))
+    lazy val docMap = read(spark, dir, "doc_map.parquet")
     lazy val nDocs = docMap.count()
-    def dim(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= IndexBuilder.BroadcastRowLimit) broadcast(df) else df
 
-    stage("tf", "per-turn analyze+explode+hash-agg") {
-      IndexBuilder.tfStage(turns, docMap, nDocs, acfg)
-        .write.mode("overwrite").parquet(s"$dir/tf.parquet")
-      spark.read.parquet(s"$dir/tf.parquet").count()
+    log.stage("tf", tfDetail)(save(spark, tfOut(docMap, nDocs), dir, "tf.parquet"))
+    lazy val tf = read(spark, dir, "tf.parquet")
+
+    log.stage("term_dict", "df/cf+dense-termId") {
+      save(spark, IndexBuilder.withIdf(IndexBuilder.zipWithDenseId(
+        IndexBuilder.termAgg(tf), IndexBuilder.TermOrder, "term_id"), nDocs),
+        dir, "term_dict.parquet")
     }
-    lazy val tf = spark.read.parquet(s"$dir/tf.parquet")
-
-    stage("term_dict", "df/cf+dense-termId") {
-      val termAgg = tf.groupBy("term")
-        .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      IndexBuilder.zipWithDenseId(
-        termAgg, Seq(col("df").desc, col("term").asc), "term_id")
-        .withColumn("idf", log10(lit(nDocs.toDouble) / col("df")))
-        .withColumn("bm25_idf",
-          log((lit(nDocs.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-        .select("term_id", "term", "df", "cf", "idf", "bm25_idf")
-        .write.mode("overwrite").parquet(s"$dir/term_dict.parquet")
-      spark.read.parquet(s"$dir/term_dict.parquet").count()
-    }
-    lazy val termDict = spark.read.parquet(s"$dir/term_dict.parquet")
-
+    lazy val termDict = read(spark, dir, "term_dict.parquet")
     lazy val nTerms = termDict.count()
 
-    stage("doc_stats", if (cfg.cosineNorms) "maxtf+len+norm" else "maxtf+len (bm25-only)") {
-      val docAgg =
-        if (cfg.cosineNorms)
-          tf.join(dim(termDict.select("term", "idf"), nTerms), "term")
-            .groupBy("doc_id").agg(
-              max("tf").as("max_tf"),
-              sum("tf").as("doc_len"),
-              sum(pow(col("tf") * col("idf"), 2.0)).as("sq"))
-        else
-          tf.groupBy("doc_id").agg(
-            max("tf").as("max_tf"),
-            sum("tf").as("doc_len"),
-            lit(0.0).as("sq"))
-      docMap
-        .join(docAgg, Seq("doc_id"), "left")
-        .select(
-          col("doc_id"), col("conv_id"),
-          coalesce(col("max_tf"), lit(0)).cast("int").as("max_tf"),
-          coalesce(col("doc_len"), lit(0L)).as("doc_len"),
-          coalesce(sqrt(col("sq")) / col("max_tf"), lit(0.0)).as("norm"))
-        .write.mode("overwrite").parquet(s"$dir/doc_stats.parquet")
-      spark.read.parquet(s"$dir/doc_stats.parquet").count()
+    log.stage("doc_stats", if (cfg.cosineNorms) "maxtf+len+norm" else "maxtf+len (bm25-only)") {
+      save(spark, IndexBuilder.docStats(docMap, tf,
+        if (cfg.cosineNorms) Some(termDict -> nTerms) else None), dir, "doc_stats.parquet")
     }
-    lazy val docStats = spark.read.parquet(s"$dir/doc_stats.parquet")
-    lazy val avgdl: Double = {
-      val r = docStats.agg(avg("doc_len")).head()
-      if (r.isNullAt(0) || r.getDouble(0) <= 0) 1.0 else r.getDouble(0)
-    }
+    lazy val docStats = read(spark, dir, "doc_stats.parquet")
 
-    stage("posting_rows", "doc-local stats+salt+bucket-partitioned scratch") {
+    log.stage("posting_rows", "doc-local stats+salt+bucket-partitioned scratch") {
       val parts = math.max(1,
         spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      val saltRange = cfg.resolveSaltRange(nDocs, parts)
-      tf.join(dim(termDict.select("term", "term_id"), nTerms), "term")
-        .join(dim(docStats.select("doc_id", "max_tf", "doc_len"), nDocs), "doc_id")
-        .select(
-          col("term_id"),
-          (col("doc_id") / lit(saltRange)).cast("long").as("salt"),
-          col("doc_id"), col("tf"),
-          (col("tf").cast("double") / col("max_tf")).as("ntf"),
-          col("doc_len").as("dl"),
-          pmod(col("term_id"), lit(cfg.buckets)).as("bucket"))
+      IndexBuilder.postingRows(IndexBuilder.withTermIds(tf, termDict, nTerms), docStats,
+        cfg.resolveSaltRange(nDocs, parts), nDocs)
+        .withColumn("bucket", pmod(col("term_id"), lit(cfg.buckets)))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$dir/posting_rows.parquet")
       spark.read.parquet(s"$dir/posting_rows.parquet").count()
@@ -266,41 +298,38 @@ object IndexStore {
     // one independently-resumable job per term_id bucket (partition-pruned
     // read of the scratch table — no rescan of earlier lineage)
     (0 until cfg.buckets).foreach { bkt =>
-      stage(s"postings:bucket=$bkt", s"bucket=$bkt") {
+      log.stage(s"postings:bucket=$bkt", s"bucket=$bkt", s"postings.parquet/bucket=$bkt") {
         val rows = spark.read.parquet(s"$dir/posting_rows.parquet")
           .filter(col("bucket") === bkt)
-        IndexBuilder.blocksFromRows(spark, rows)
-          .write.mode("overwrite").parquet(s"$dir/postings.parquet/bucket=$bkt")
-        spark.read.parquet(s"$dir/postings.parquet/bucket=$bkt").count()
+        save(spark, IndexBuilder.blocksFromRows(spark, rows).toDF(), dir,
+          s"postings.parquet/bucket=$bkt")
       }
     }
 
     // postings count = Σ df over the (small) dict — not a tf-table scan
     lazy val nPostings = termDict.agg(coalesce(sum("df"), lit(0L))).head().getLong(0)
 
-    stage("index_meta", "corpus stats") {
-      val totalTokens = docStats.agg(coalesce(sum("doc_len"), lit(0L))).head().getLong(0)
-      val nBlocks = spark.read.parquet(s"$dir/postings.parquet").count()
-      Seq(IndexMeta(nDocs, termDict.count(), totalTokens, avgdl, nPostings, nBlocks))
+    log.stage("index_meta", "corpus stats") {
+      import spark.implicits._
+      val r = docStats.agg(coalesce(sum("doc_len"), lit(0L)), avg("doc_len")).head()
+      val avgdl = if (r.isNullAt(1) || r.getDouble(1) <= 0) 1.0 else r.getDouble(1)
+      val nBlocks = read(spark, dir, "postings.parquet").count()
+      Seq(IndexMeta(nDocs, nTerms, r.getLong(0), avgdl, nPostings, nBlocks))
         .toDS().write.mode("overwrite").parquet(s"$dir/index_meta.parquet")
       1L
     }
 
-    stage("build_metrics", "lineage+skew") {
-      val manifest = readManifest(dir)
+    log.metrics(spark, "lineage+skew") {
       val skew = termDict.agg(max("df").cast("double") / avg("df")).head().getDouble(0)
-      val postingsMs = manifest.collect {
+      val postingsMs = log.records.collect {
         case (s, r) if s.startsWith("postings:") || s == "posting_rows" => r.millis
       }.sum
       val postingsPerSec =
         if (postingsMs > 0) nPostings * 1000.0 / postingsMs else 0.0
-      val rows = manifest.values.toSeq.map(r =>
-        BuildMetric(r.stage, r.detail, r.rows, r.bytes, r.millis, r.detail)) ++ Seq(
+      Seq(
         BuildMetric("skew_ratio", "max_df/mean_df", skew.toLong, 0, 0, f"$skew%.3f"),
         BuildMetric("postings_per_sec", "build throughput",
           postingsPerSec.toLong, 0, postingsMs, f"$postingsPerSec%.1f"))
-      rows.toDS().write.mode("overwrite").parquet(s"$dir/build_metrics.parquet")
-      rows.size.toLong
     }
 
     load(spark, dir, cfg)
@@ -330,6 +359,31 @@ object IndexStore {
   private def nextEventId(manifest: Map[String, StageRecord]): Int =
     (allBatches(manifest) ++ committedTombstones(manifest)).maxOption.getOrElse(0) + 1
 
+  /** A store as of an event horizon: the base root, then each committed
+    * batch root ≤ asOf, and the tombstones committed ≤ asOf. */
+  private final class Snapshot(spark: SparkSession, dir: String, asOf: Int = Int.MaxValue) {
+    val manifest: Map[String, StageRecord] = readManifest(dir)
+    val batches: Seq[Int] = committedBatches(manifest).filter(_ <= asOf)
+    private val tombs = committedTombstones(manifest).filter(_ <= asOf)
+
+    /** Tables that every root rewrites in full (dict, meta, cosine stats)
+      * are served from the newest root. */
+    def latest(table: String): DataFrame =
+      read(spark, batches.lastOption.fold(dir)(batchDir(dir, _)), table)
+
+    /** Tables that every root holds a delta of, unioned base-first. Per-root
+      * reads (not one multi-path read) keep partition discovery, pushdown
+      * and bucket pruning local to each root. */
+    def union(table: String): DataFrame =
+      (dir +: batches.map(batchDir(dir, _))).map(read(spark, _, table)).reduce(_ union _)
+
+    /** `df` without tombstoned docs. */
+    def live(df: DataFrame): DataFrame =
+      if (tombs.isEmpty) df
+      else df.join(tombs.map(t => spark.read.schema(tombSchema).parquet(tombPath(dir, t)))
+        .reduce(_ union _), Seq("doc_id"), "left_anti")
+  }
+
   /**
    * Append a new batch of conversations to an existing index WITHOUT
    * rebuilding it (the 10^12-turn maintenance path; the reference instead
@@ -347,11 +401,11 @@ object IndexStore {
    *                        sums are exact — no pass over old tf); old
    *                        term_ids preserved, new terms appended after old
    *                        max; idf/bm25_idf from the new corpus size
-   *   - doc_stats.parquet  full: recomputed from tf_all × new idf. This is
-   *                        the one whole-corpus pass, over the COMPACT tf
-   *                        table (no text, one agg) — exact cosine norms
-   *                        need the new idf for every doc. BM25-only
-   *                        deployments could skip it: max_tf/doc_len are
+   *   - doc_stats.parquet  cosine mode: full, recomputed from tf_all × new
+   *                        idf — the one whole-corpus pass, over the COMPACT
+   *                        tf table (no text, one agg), since exact cosine
+   *                        norms need the new idf of every doc. BM25-only
+   *                        mode: delta only — max_tf/doc_len are
    *                        append-invariant per doc.
    *   - postings.parquet   delta blocks only; delta docIds all exceed old
    *                        max, so per-term block runs stay docId-sorted
@@ -366,103 +420,57 @@ object IndexStore {
    */
   def append(spark: SparkSession, newTurns: DataFrame, dir: String): IndexView = {
     import spark.implicits._
-    val cfg = readConfig(dir).getOrElse(throw new IllegalArgumentException(
-      s"no index at $dir (missing _config.tsv)"))
-    var done = readManifest(dir)
-    require(done.contains("build_metrics"), s"base build at $dir is incomplete")
-
-    val committed = committedBatches(done)
-    val incomplete = allBatches(done).filterNot(committed.contains)
-
-    def dim(df: DataFrame, rows: Long): DataFrame =
-      if (rows <= IndexBuilder.BroadcastRowLimit) broadcast(df) else df
-    def latestOr(table: String): String =
-      committed.lastOption.map(b => s"${batchDir(dir, b)}/$table")
-        .getOrElse(s"$dir/$table")
-
-    val docMapPaths =
-      s"$dir/doc_map.parquet" +: committed.map(b => s"${batchDir(dir, b)}/doc_map.parquet")
-    val oldDocMap = docMapPaths.map(spark.read.parquet(_)).reduce(_ union _)
-    val oldMeta = spark.read.parquet(latestOr("index_meta.parquet")).as[IndexMeta].head()
+    val old = new Snapshot(spark, dir)
+    val cfg = committedConfig(dir, old.manifest)
+    val oldDocMap = old.union("doc_map.parquet")
+    val oldMeta = old.latest("index_meta.parquet").as[IndexMeta].head()
 
     // "already present" means present in the LIVE view: a conversation whose
     // doc was tombstoned may be re-appended (it gets a fresh doc_id; the old
     // id stays dead). doc_id allocation below still maxes over the RAW
     // doc_map — ids are never reused.
-    val liveConvs = tombstoneDf(spark, dir, done) match {
-      case Some(t) =>
-        oldDocMap.join(t, Seq("doc_id"), "left_anti").select("conv_id")
-      case None => oldDocMap.select("conv_id")
-    }
     val newConvs = newTurns.select("conv_id").distinct()
-      .join(liveConvs, Seq("conv_id"), "left_anti")
+      .join(old.live(oldDocMap).select("conv_id"), Seq("conv_id"), "left_anti")
       .persist()
     try {
       val nNew = newConvs.count()
       if (nNew == 0) return load(spark, dir)
-      // deterministic input signature: ties a resumed batch to its input
-      val sig = {
-        val r = newConvs.selectExpr("count(*) c", "bit_xor(xxhash64(conv_id)) x").head()
-        s"n=${r.getLong(0)},x=${r.getLong(1)}"
-      }
-      val batch = incomplete match {
-        case Seq() => nextEventId(done)
-        case bs =>
-          val b = bs.max
-          val stored = done(s"b$b:begin").detail
-          require(stored == sig,
-            s"append batch b$b at $dir is incomplete (input $stored); finish it " +
-              s"with its original input before appending a different batch ($sig)")
-          b
-      }
+      // an unfinished batch is resumed (its begin refuses another input),
+      // else the batch opens the next event id
+      val batch = allBatches(old.manifest).filterNot(old.batches.contains)
+        .maxOption.getOrElse(nextEventId(old.manifest))
       val bdir = batchDir(dir, batch)
-      StoreIO.mkdirs(bdir)
-
-      val metrics = mutable.ArrayBuffer.empty[BuildMetric]
-      def stage(name: String, detail: String)(body: => Long): Unit = {
-        val full = s"b$batch:$name"
-        if (done.contains(full)) return
-        val t0 = System.nanoTime()
-        val rows = body
-        val ms = (System.nanoTime() - t0) / 1000000
-        val bytes = dirBytes(s"$bdir/$name.parquet")
-        val rec = StageRecord(full, rows, ms, bytes, detail)
-        appendManifest(dir, rec)
-        done += (full -> rec)
-        metrics += BuildMetric(full, detail, rows, bytes, ms, detail)
-      }
-
-      stage("begin", sig) { nNew }
+      val log = new Commit(dir, s"b$batch:", bdir)
+      val sig = signature(newConvs)
+      log.begin(sig, nNew)
 
       val oldMaxDoc = {
         val r = oldDocMap.agg(max("doc_id")).head()
         if (r.isNullAt(0)) -1L else r.getLong(0) // empty base (streaming bootstrap)
       }
-      stage("doc_map", s"delta dense-docId after $oldMaxDoc") {
-        IndexBuilder.zipWithDenseId(newConvs.toDF(), Seq(col("conv_id")), "rk")
-          .select((col("rk") + lit(oldMaxDoc + 1)).as("doc_id"), col("conv_id"))
-          .write.mode("overwrite").parquet(s"$bdir/doc_map.parquet")
-        spark.read.parquet(s"$bdir/doc_map.parquet").count()
+      log.stage("doc_map", s"delta dense-docId after $oldMaxDoc") {
+        save(spark, IndexBuilder.zipWithDenseId(newConvs.toDF(), Seq(col("conv_id")), "rk")
+          .select((col("rk") + lit(oldMaxDoc + 1)).as("doc_id"), col("conv_id")),
+          bdir, "doc_map.parquet")
       }
-      lazy val deltaDocMap = spark.read.parquet(s"$bdir/doc_map.parquet")
+      lazy val deltaDocMap = read(spark, bdir, "doc_map.parquet")
 
-      stage("tf", "delta per-turn analyze+explode+hash-agg") {
-        // the docMap join filters to the new conversations — old text is
-        // neither read (source pruning is the caller's partition filter)
-        // nor tokenized nor shuffled
-        IndexBuilder.tfStage(newTurns, deltaDocMap, nNew, cfg.analyzer)
-          .write.mode("overwrite").parquet(s"$bdir/tf.parquet")
-        spark.read.parquet(s"$bdir/tf.parquet").count()
+      // the docMap join filters to the new conversations — old text is
+      // neither read (source pruning is the caller's partition filter) nor
+      // tokenized nor shuffled
+      log.stage("tf", "delta per-turn analyze+explode+hash-agg") {
+        save(spark, IndexBuilder.tfStage(newTurns, deltaDocMap, nNew, cfg.analyzer),
+          bdir, "tf.parquet")
       }
-      lazy val deltaTf = spark.read.parquet(s"$bdir/tf.parquet")
+      lazy val deltaTf = read(spark, bdir, "tf.parquet")
 
       val nDocsAll = oldMeta.docs + nNew
-      stage("term_dict", "old df/cf + delta, ids preserved, idf from new N") {
-        val oldDict = spark.read.parquet(latestOr("term_dict.parquet"))
-        val deltaAgg = deltaTf.groupBy("term")
-          .agg(count(lit(1)).as("ddf"), sum("tf").as("dcf"))
+      log.stage("term_dict", "old df/cf + delta, ids preserved, idf from new N") {
+        val oldDict = old.latest("term_dict.parquet")
         val joined = oldDict.select("term_id", "term", "df", "cf")
-          .join(deltaAgg, Seq("term"), "full_outer")
+          .join(IndexBuilder.termAgg(deltaTf)
+            .select(col("term"), col("df").as("ddf"), col("cf").as("dcf")),
+            Seq("term"), "full_outer")
         val known = joined.filter(col("term_id").isNotNull)
           .select(col("term_id"), col("term"),
             (col("df") + coalesce(col("ddf"), lit(0L))).as("df"),
@@ -474,110 +482,61 @@ object IndexStore {
         val fresh = IndexBuilder.zipWithDenseId(
           joined.filter(col("term_id").isNull)
             .select(col("term"), col("ddf").as("df"), col("dcf").as("cf")),
-          Seq(col("df").desc, col("term").asc), "rk")
+          IndexBuilder.TermOrder, "rk")
           .select((col("rk") + lit(oldMaxTid + 1)).as("term_id"),
             col("term"), col("df"), col("cf"))
-        known.unionByName(fresh)
-          .withColumn("idf", log10(lit(nDocsAll.toDouble) / col("df")))
-          .withColumn("bm25_idf",
-            log((lit(nDocsAll.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-          .select("term_id", "term", "df", "cf", "idf", "bm25_idf")
-          .write.mode("overwrite").parquet(s"$bdir/term_dict.parquet")
-        spark.read.parquet(s"$bdir/term_dict.parquet").count()
+        save(spark, IndexBuilder.withIdf(known.unionByName(fresh), nDocsAll),
+          bdir, "term_dict.parquet")
       }
-      lazy val newDict = spark.read.parquet(s"$bdir/term_dict.parquet")
+      lazy val newDict = read(spark, bdir, "term_dict.parquet")
       lazy val nTermsAll = newDict.count()
 
-      val statsDetail =
+      log.stage("doc_stats",
         if (cfg.cosineNorms) "full recompute from tf_all x new idf (text-free)"
-        else "delta-only (bm25-only: max_tf/doc_len append-invariant)"
-      stage("doc_stats", statsDetail) {
-        val out =
-          if (cfg.cosineNorms) {
-            // exact cosine norms need the NEW idf of every term in every doc
-            // — the one whole-corpus pass of the append path, over the
-            // COMPACT (doc_id, term, tf) table (no text, one agg)
-            val tfPaths = (s"$dir/tf.parquet" +:
-              committed.map(b => s"${batchDir(dir, b)}/tf.parquet")) :+ s"$bdir/tf.parquet"
-            val tfAll = tfPaths.map(spark.read.parquet(_)).reduce(_ union _)
-            val docAgg = tfAll
-              .join(dim(newDict.select("term", "idf"), nTermsAll), "term")
-              .groupBy("doc_id").agg(
-                max("tf").as("max_tf"),
-                sum("tf").as("doc_len"),
-                sum(pow(col("tf") * col("idf"), 2.0)).as("sq"))
-            oldDocMap.union(deltaDocMap)
-              .join(docAgg, Seq("doc_id"), "left")
-              .select(
-                col("doc_id"), col("conv_id"),
-                coalesce(col("max_tf"), lit(0)).cast("int").as("max_tf"),
-                coalesce(col("doc_len"), lit(0L)).as("doc_len"),
-                coalesce(sqrt(col("sq")) / col("max_tf"), lit(0.0)).as("norm"))
-          } else {
-            // BM25-only: per-doc stats never change once indexed — write
-            // ONLY the delta's rows (load() unions base + batch deltas, like
-            // doc_map/postings). Neither compute NOR I/O touches old docs.
-            val deltaAgg = deltaTf.groupBy("doc_id").agg(
-              max("tf").as("max_tf"),
-              sum("tf").as("doc_len"))
-            deltaDocMap
-              .join(deltaAgg, Seq("doc_id"), "left")
-              .select(
-                col("doc_id"), col("conv_id"),
-                coalesce(col("max_tf"), lit(0)).cast("int").as("max_tf"),
-                coalesce(col("doc_len"), lit(0L)).as("doc_len"),
-                lit(0.0).as("norm"))
-          }
-        out.write.mode("overwrite").parquet(s"$bdir/doc_stats.parquet")
-        spark.read.parquet(s"$bdir/doc_stats.parquet").count()
+        else "delta-only (bm25-only: max_tf/doc_len append-invariant)") {
+        // BM25-only: per-doc stats never change once indexed — write ONLY
+        // the delta's rows (load() unions base + batch deltas, like
+        // doc_map/postings). Neither compute NOR I/O touches old docs.
+        save(spark,
+          if (cfg.cosineNorms)
+            IndexBuilder.docStats(oldDocMap.union(deltaDocMap),
+              old.union("tf.parquet").union(deltaTf), Some(newDict -> nTermsAll))
+          else IndexBuilder.docStats(deltaDocMap, deltaTf, None),
+          bdir, "doc_stats.parquet")
       }
-      lazy val newStats = spark.read.parquet(s"$bdir/doc_stats.parquet")
+      lazy val deltaStats =
+        read(spark, bdir, "doc_stats.parquet").filter(col("doc_id") > oldMaxDoc)
 
-      stage("postings", "delta blocks (docIds after old max; old blocks untouched)") {
+      log.stage("postings", "delta blocks (docIds after old max; old blocks untouched)") {
         val parts = math.max(1,
           spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-        val tfWithIds = deltaTf
-          .join(dim(newDict.select("term", "term_id"), nTermsAll), "term")
-          .select("doc_id", "term_id", "tf")
-        val deltaStats = newStats.filter(col("doc_id") > oldMaxDoc).as[DocStat]
-        IndexBuilder.buildPostings(spark, tfWithIds, deltaStats,
+        IndexBuilder.buildPostings(spark,
+          IndexBuilder.withTermIds(deltaTf, newDict, nTermsAll), deltaStats.as[DocStat],
           cfg.resolveSaltRange(nNew, parts), nNew)
           .withColumn("bucket", pmod(col("term_id"), lit(cfg.buckets)))
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$bdir/postings.parquet")
-        spark.read.schema(blockSchema).parquet(s"$bdir/postings.parquet").count()
+        read(spark, bdir, "postings.parquet").count()
       }
 
-      stage("index_meta", "corpus stats after append") {
+      log.stage("index_meta", "corpus stats after append") {
         // total_tokens = old + delta (doc_len is append-invariant per doc),
         // avgdl = exact long division — works whether the stats file is
         // full (cosine mode) or delta-only (BM25-only mode)
-        val deltaTokens = newStats.filter(col("doc_id") > oldMaxDoc)
-          .agg(coalesce(sum("doc_len"), lit(0L))).head().getLong(0)
-        val totalTokens = oldMeta.total_tokens + deltaTokens
+        val totalTokens = oldMeta.total_tokens +
+          deltaStats.agg(coalesce(sum("doc_len"), lit(0L))).head().getLong(0)
         val avgdl =
           if (nDocsAll <= 0 || totalTokens <= 0) 1.0
           else totalTokens.toDouble / nDocsAll
-        val deltaPostings = deltaTf.count()
-        val deltaBlocks =
-          spark.read.schema(blockSchema).parquet(s"$bdir/postings.parquet").count()
         Seq(IndexMeta(nDocsAll, nTermsAll, totalTokens, avgdl,
-          oldMeta.postings + deltaPostings, oldMeta.blocks + deltaBlocks))
+          oldMeta.postings + deltaTf.count(),
+          oldMeta.blocks + read(spark, bdir, "postings.parquet").count()))
           .toDS().write.mode("overwrite").parquet(s"$bdir/index_meta.parquet")
         1L
       }
 
-      stage("build_metrics", "append lineage") {
-        // derive from the manifest (not the in-memory buffer) so a resumed
-        // batch still records its earlier stages' lineage
-        val rows = done.values.toSeq
-          .filter(_.stage.startsWith(s"b$batch:"))
-          .map(r => BuildMetric(r.stage, r.detail, r.rows, r.bytes, r.millis, r.detail))
-        rows.toDS().write.mode("overwrite").parquet(s"$bdir/build_metrics.parquet")
-        rows.size.toLong
-      }
-
-      stage("commit", sig) { 1L }
+      log.metrics(spark, "append lineage")()
+      log.stage("commit", sig)(1L)
       load(spark, dir)
     } finally newConvs.unpersist()
   }
@@ -585,17 +544,6 @@ object IndexStore {
   // --------------------------------------------------------------- deletes
 
   private def tombPath(dir: String, t: Int): String = s"$dir/tombstones/t$t.parquet"
-
-  /** Union of committed tombstone doc_ids with event id ≤ upTo, if any. */
-  private def tombstoneDf(
-      spark: SparkSession, dir: String, manifest: Map[String, StageRecord],
-      upTo: Int = Int.MaxValue): Option[DataFrame] = {
-    val ids = committedTombstones(manifest).filter(_ <= upTo)
-    if (ids.isEmpty) None
-    else Some(ids.map(t =>
-        spark.read.schema(tombSchema).parquet(tombPath(dir, t)).select("doc_id"))
-      .reduce(_ union _))
-  }
 
   /**
    * Tombstone deletion — the missing half of the dedup pipeline (r3 verdict
@@ -621,25 +569,22 @@ object IndexStore {
    */
   def delete(spark: SparkSession, convIds: DataFrame, dir: String): Long = {
     val manifest = readManifest(dir)
-    require(manifest.contains("build_metrics"), s"base build at $dir is incomplete")
+    committedConfig(dir, manifest)
     val t0 = System.nanoTime()
     // resolve against the LIVE view (load applies existing tombstones), so
     // double-deletes are no-ops and a re-appended conv's fresh doc survives
-    val view = load(spark, dir)
-    val victims = view.docMap
+    val victims = load(spark, dir).docMap
       .join(convIds.select("conv_id").distinct(), "conv_id")
       .select("doc_id")
+    // an uncommitted tombstone of a crashed delete holds no id: the retry
+    // takes the same one and overwrites it
     val id = nextEventId(manifest)
     victims.write.mode("overwrite").parquet(tombPath(dir, id))
     val n = spark.read.schema(tombSchema).parquet(tombPath(dir, id)).count()
-    if (n == 0) {
-      // nothing resolved: drop the empty file, commit nothing
-      StoreIO.delete(tombPath(dir, id))
-      return 0L
-    }
-    val ms = (System.nanoTime() - t0) / 1000000
-    appendManifest(dir, StageRecord(s"t$id:commit", n, ms,
-      dirBytes(tombPath(dir, id)), s"tombstoned $n docs"))
+    // nothing resolved: drop the empty file, commit nothing
+    if (n == 0) StoreIO.delete(tombPath(dir, id))
+    else new Commit(dir, s"t$id:", dir)
+      .stage("commit", s"tombstoned $n docs", s"tombstones/t$id.parquet", since = t0)(n)
     n
   }
 
@@ -661,61 +606,32 @@ object IndexStore {
    * cost of re-aggregating the COMPACT (doc_id, term, tf) table — the text
    * is never re-read or re-tokenized.
    *
-   * Mechanics: write the unioned doc_map/tf to `dstDir`, record their
-   * stages (plus the begin signature, derived from conv_ids exactly as
-   * buildAndSave derives it) in the manifest, then let buildAndSave's
-   * resume machinery compute dictionary/stats/postings/meta from the
-   * persisted tables — compaction IS a resumed build whose first two
-   * stages were supplied.
+   * Compaction IS a staged build whose doc_map/tf stage bodies are the
+   * unioned live source tables: tombstones fold in physically, so the
+   * dictionary/stats/postings equal a from-scratch build without the
+   * deleted docs, and the fresh root carries no tombstones. Like any build,
+   * a crashed compaction resumes by re-running it onto the same `dstDir`.
    */
   def compact(spark: SparkSession, srcDir: String, dstDir: String): IndexView = {
-    val cfg = readConfig(srcDir).getOrElse(throw new IllegalArgumentException(
-      s"no index at $srcDir (missing _config.tsv)"))
-    val src = readManifest(srcDir)
-    require(src.contains("build_metrics"), s"base build at $srcDir is incomplete")
-    require(readManifest(dstDir).isEmpty && readConfig(dstDir).isEmpty,
-      s"compaction target $dstDir is not empty")
-    val committed = committedBatches(src)
-    val incomplete = allBatches(src).filterNot(committed.contains)
+    val src = new Snapshot(spark, srcDir)
+    val cfg = committedConfig(srcDir, src.manifest)
+    val incomplete = allBatches(src.manifest).filterNot(src.batches.contains)
     require(incomplete.isEmpty,
       s"finish or discard incomplete append batches $incomplete before compacting")
-
-    StoreIO.mkdirs(dstDir)
-    writeConfig(dstDir, cfg)
-    def unionOf(table: String): DataFrame =
-      (s"$srcDir/$table" +: committed.map(b => s"${batchDir(srcDir, b)}/$table"))
-        .map(spark.read.parquet(_)).reduce(_ unionByName _)
-    // tombstones fold in physically here: the compacted doc_map/tf exclude
-    // deleted docs, so the resumed build's dictionary/stats/postings equal a
-    // from-scratch build without them; the fresh root carries no tombstones
-    def dropDead(df: DataFrame): DataFrame =
-      tombstoneDf(spark, srcDir, src) match {
-        case Some(t) => df.join(t, Seq("doc_id"), "left_anti")
-        case None => df
-      }
-
-    val t0 = System.nanoTime()
-    dropDead(unionOf("doc_map.parquet").select("doc_id", "conv_id"))
-      .write.mode("overwrite").parquet(s"$dstDir/doc_map.parquet")
-    dropDead(unionOf("tf.parquet").select("doc_id", "term", "tf"))
-      .write.mode("overwrite").parquet(s"$dstDir/tf.parquet")
-    val docMap = spark.read.parquet(s"$dstDir/doc_map.parquet")
-    val sig = {
-      val r = docMap.select("conv_id").distinct()
-        .selectExpr("count(*) c", "coalesce(bit_xor(xxhash64(conv_id)), 0) x").head()
-      s"n=${r.getLong(0)},x=${r.getLong(1)}"
-    }
-    val ms = (System.nanoTime() - t0) / 1000000
-    appendManifest(dstDir, StageRecord("begin", 0L, 0L, 0L, sig))
-    appendManifest(dstDir, StageRecord("doc_map", docMap.count(), ms,
-      dirBytes(s"$dstDir/doc_map.parquet"), s"compacted from $srcDir"))
-    appendManifest(dstDir, StageRecord("tf",
-      spark.read.parquet(s"$dstDir/tf.parquet").count(), 0L,
-      dirBytes(s"$dstDir/tf.parquet"), s"compacted from $srcDir"))
-    // remaining stages (dict/stats/postings/meta) run via resume; the turns
-    // argument only feeds the begin-signature check, which needs conv_ids
-    buildAndSave(spark, docMap.select("conv_id"), dstDir, cfg)
+    val docMap = src.live(src.union("doc_map.parquet"))
+    stagedBuild(spark, dstDir, cfg, docMap,
+      s"compacted from $srcDir", s"compacted from $srcDir")(docMap)(
+      (_, _) => src.live(src.union("tf.parquet")))
   }
+
+  /** Output partition count targeting ~128 MB files (guide §6): a saveView
+    * of a small corpus otherwise writes one near-empty file per cached
+    * partition per table (16 partitions × 8 postings buckets ≈ 128 files at
+    * sf0.1), and every later load/scan of the store pays per-file open cost.
+    * Derived from estimated bytes so large views still get full write
+    * parallelism. */
+  private def outParts(estBytes: Long): Int =
+    math.max(1, math.min(10000, (estBytes / (128L << 20)).toInt + 1))
 
   /**
    * Persist an in-memory IndexView as a complete store root at `dir` — the
@@ -727,215 +643,131 @@ object IndexStore {
    * straight writes of the view's (typically cached) tables, and the tf
    * table (needed only by cosine-mode appends and compaction) is
    * reconstructed from the stored blocks, a lossless codec round-trip.
+   *
+   * The table writes are INDEPENDENT reads of the in-memory view, so after
+   * the begin signature they run as concurrent stages from a small driver
+   * pool (guide §2.6): each alone is a fixed-cost action whose tail leaves
+   * the box idle. A crashed save resumes by re-running it with the same view.
    */
-  /** Output partition count targeting ~128 MB files (guide §6): a saveView
-    * of a small corpus otherwise writes one near-empty file per cached
-    * partition per table (16 partitions × 8 postings buckets ≈ 128 files at
-    * sf0.1), and every later load/scan of the store pays per-file open cost.
-    * Derived from estimated bytes so large views still get full write
-    * parallelism. */
-  private def outParts(estBytes: Long): Int =
-    math.max(1, math.min(10000, (estBytes / (128L << 20)).toInt + 1))
-
   def saveView(spark: SparkSession, view: IndexView, dir: String): Unit = {
     import spark.implicits._
-    require(readManifest(dir).isEmpty && readConfig(dir).isEmpty,
-      s"saveView target $dir is not empty")
     val cfg = view.cfg
-    StoreIO.mkdirs(dir)
-
-    // The five table writes (and the begin-signature job) are INDEPENDENT
-    // reads of the in-memory view, so they run as concurrent Spark jobs from
-    // a small driver pool (guide §2.6): each alone is a fixed-cost action
-    // whose tail leaves the box idle. Config + manifest commit LAST, so a
-    // crash mid-save leaves a root that readManifest/readConfig report empty
-    // and a retry simply overwrites the partial tables (the resumability gap
-    // ADVICE r6 flagged); each stage also records its own duration instead
-    // of cumulative-since-t0 millis (the other half of that advice).
-    def timed(body: => Unit): Long = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1000000
-    }
-    @volatile var sig = ""
-    val tasks: Seq[() => (String, Long, String, String, Long)] = Seq(
-      () => {
-        val ms = timed {
-          // identical formula to buildAndSave's, over the same rows the
-          // doc_map write commits - so resume/append input checks behave as
-          // if the store had been built from the view's corpus
-          val r = view.docMap
-            .select("conv_id").distinct()
-            .selectExpr(
-              "count(*) c", "coalesce(bit_xor(xxhash64(conv_id)), 0) x").head()
-          sig = s"n=${r.getLong(0)},x=${r.getLong(1)}"
-        }
-        ("begin", 0L, "", "", ms)
+    claim(dir, cfg)
+    val log = new Commit(dir, root = dir)
+    log.begin(signature(view.docMap))
+    val detail = "saved from in-memory view"
+    def write(df: DataFrame, table: String, estBytes: Long): Unit =
+      df.coalesce(outParts(estBytes)).write.mode("overwrite").parquet(s"$dir/$table")
+    val stages: Seq[() => Unit] = Seq(
+      () => log.stage("doc_map", detail) {
+        write(view.docMap.select("doc_id", "conv_id"), "doc_map.parquet", view.meta.docs * 48)
+        view.meta.docs
       },
-      () => ("doc_map", view.meta.docs, "doc_map.parquet",
-        "saved from in-memory view", timed {
-          view.docMap.select("doc_id", "conv_id")
-            .coalesce(outParts(view.meta.docs * 48))
-            .write.mode("overwrite").parquet(s"$dir/doc_map.parquet")
-        }),
-      () => ("tf", view.meta.postings, "tf.parquet",
-        "decoded from view blocks", timed {
-          Exports.decodedPostings(view)
-            .join(view.termDict.toDF().select("term_id", "term"), "term_id")
-            .select("doc_id", "term", "tf")
-            .coalesce(outParts(view.meta.postings * 24))
-            .write.mode("overwrite").parquet(s"$dir/tf.parquet")
-        }),
-      () => ("term_dict", view.meta.terms, "term_dict.parquet",
-        "saved from in-memory view", timed {
-          view.termDict.toDF().coalesce(outParts(view.meta.terms * 64))
-            .write.mode("overwrite").parquet(s"$dir/term_dict.parquet")
-        }),
-      () => ("doc_stats", view.meta.docs, "doc_stats.parquet",
-        "saved from in-memory view", timed {
-          view.docStats.toDF().coalesce(outParts(view.meta.docs * 64))
-            .write.mode("overwrite").parquet(s"$dir/doc_stats.parquet")
-        }),
-      () => ("postings", -1L, "postings.parquet",
-        "saved from in-memory view", timed {
-          view.postings.toDF()
-            .withColumn("bucket", pmod(col("term_id"), lit(cfg.buckets)))
-            // cluster by bucket before the partitionBy write: without it
-            // every cached postings partition writes a sliver into every
-            // bucket dir (parts x buckets files); with it each bucket dir
-            // holds ~outParts-worth of full-size files
-            .repartition(outParts(view.meta.blocks * 400), col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(s"$dir/postings.parquet")
-        }))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val results =
-      try {
-        val futures = tasks.map(t => pool.submit(
-          new java.util.concurrent.Callable[(String, Long, String, String, Long)] {
-            override def call(): (String, Long, String, String, Long) = t()
-          }))
-        futures.map(_.get())
-      } finally pool.shutdown()
-
-    Seq(view.meta).toDS().coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/index_meta.parquet")
-
-    // commit: config first, then manifest records in the canonical order
-    writeConfig(dir, cfg)
-    results.foreach {
-      case ("begin", _, _, _, ms) =>
-        appendManifest(dir, StageRecord("begin", 0L, ms, 0L, sig))
-      case ("postings", _, table, detail, ms) =>
-        appendManifest(dir, StageRecord("posting_rows", 0L, 0L, 0L,
-          "skipped: blocks saved directly from the view"))
+      () => log.stage("tf", "decoded from view blocks") {
+        write(Exports.decodedPostings(view)
+          .join(view.termDict.toDF().select("term_id", "term"), "term_id")
+          .select("doc_id", "term", "tf"), "tf.parquet", view.meta.postings * 24)
+        view.meta.postings
+      },
+      () => log.stage("term_dict", detail) {
+        write(view.termDict.toDF(), "term_dict.parquet", view.meta.terms * 64)
+        view.meta.terms
+      },
+      () => log.stage("doc_stats", detail) {
+        write(view.docStats.toDF(), "doc_stats.parquet", view.meta.docs * 64)
+        view.meta.docs
+      },
+      () => {
+        log.stage("posting_rows", "skipped: blocks saved directly from the view")(0L)
+        // one partitioned write commits every bucket: bucket 0's stage
+        // carries it, the later buckets only record theirs
         (0 until cfg.buckets).foreach { bkt =>
-          appendManifest(dir, StageRecord(s"postings:bucket=$bkt", -1L,
-            if (bkt == 0) ms else 0L,
-            dirBytes(s"$dir/$table/bucket=$bkt"), detail))
+          log.stage(s"postings:bucket=$bkt", detail, s"postings.parquet/bucket=$bkt") {
+            if (bkt == 0) view.postings.toDF()
+              .withColumn("bucket", pmod(col("term_id"), lit(cfg.buckets)))
+              // cluster by bucket before the partitionBy write: without it
+              // every cached postings partition writes a sliver into every
+              // bucket dir (parts x buckets files); with it each bucket dir
+              // holds ~outParts-worth of full-size files
+              .repartition(outParts(view.meta.blocks * 400), col("bucket"))
+              .write.mode("overwrite").partitionBy("bucket")
+              .parquet(s"$dir/postings.parquet")
+            -1L
+          }
         }
-      case (stage, rows, table, detail, ms) =>
-        appendManifest(dir,
-          StageRecord(stage, rows, ms, dirBytes(s"$dir/$table"), detail))
+      },
+      () => log.stage("index_meta", detail) {
+        write(Seq(view.meta).toDS().toDF(), "index_meta.parquet", 0L)
+        1L
+      })
+    val pool = Executors.newFixedThreadPool(3)
+    val outcomes =
+      try stages.map(s => pool.submit(new Callable[Unit] { def call(): Unit = s() }))
+        .map(f => Try(f.get())) // every stage settles before any error surfaces
+      finally pool.shutdown()
+    outcomes.flatMap(_.failed.toOption).map {
+      case e: ExecutionException => e.getCause
+      case e => e
+    } match {
+      case Seq() =>
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
     }
-    appendManifest(dir, StageRecord("index_meta", 1L, 0L,
-      dirBytes(s"$dir/index_meta.parquet"), "saved from in-memory view"))
-
-    val rows = readManifest(dir).values.toSeq.map(r =>
-      BuildMetric(r.stage, r.detail, r.rows, r.bytes, r.millis, r.detail))
-    rows.toDS().coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/build_metrics.parquet")
-    appendManifest(dir, StageRecord("build_metrics", rows.size.toLong, 0L,
-      dirBytes(s"$dir/build_metrics.parquet"), "saveView lineage"))
+    log.metrics(spark, "saveView lineage")()
   }
 
-  /** Build the base index on first call, append on every later call — the
-    * streaming-sink entry point (StreamingIndexer). Both paths are staged
-    * and resumable, so a replayed micro-batch converges. */
+  /** Build the base index until it is committed, append on every later
+    * call — the streaming-sink entry point (StreamingIndexer). Both paths
+    * are staged and resumable, so a replayed micro-batch converges, also
+    * when the crash fell inside the very first build. */
   def appendOrCreate(
       spark: SparkSession,
       turns: DataFrame,
       dir: String,
       cfg: BuildConfig = BuildConfig()): IndexView =
-    if (readConfig(dir).isEmpty) buildAndSave(spark, turns, dir, cfg)
-    else append(spark, turns, dir)
+    if (readManifest(dir).contains("build_metrics")) append(spark, turns, dir)
+    else buildAndSave(spark, turns, dir, cfg)
 
-  /** Load an index; the persisted build config wins over the caller's
-    * default (the analyzer is part of the index, not of the session).
-    * Serves dict/stats/meta from the latest committed append batch (if any)
-    * and unions base + batch-delta postings/doc_map. */
-  /** Load the serving view — optionally AS OF a committed append batch
-    * (`asOf`), the Iceberg-snapshot analog the batch-root layout gives for
-    * free: batch roots are immutable, and every append's root carries the
-    * complete dictionary/meta (and, in cosine mode, stats) state of its
-    * moment, so reading base + batches ≤ asOf reproduces the index exactly
-    * as it stood after that append. `asOf = 0` loads the base build alone;
-    * the default loads the latest. An `asOf` that is neither 0 nor a
-    * committed batch fails loudly rather than silently serving a different
-    * snapshot. */
+  /** Load the serving view; the persisted build config wins over the
+    * caller's default (the analyzer is part of the index, not of the
+    * session). Serves dict/stats/meta from the latest committed append
+    * batch (if any) and unions base + batch-delta postings/doc_map.
+    *
+    * Optionally AS OF a committed event (`asOf`), the Iceberg-snapshot
+    * analog the batch-root layout gives for free: batch roots are
+    * immutable, and every append's root carries the complete
+    * dictionary/meta (and, in cosine mode, stats) state of its moment, so
+    * reading base + batches ≤ asOf reproduces the index exactly as it stood
+    * after that append; tombstones ≤ asOf apply. `asOf = 0` loads the base
+    * build alone; the default loads the latest. An `asOf` that is neither 0
+    * nor a committed batch or tombstone fails loudly rather than silently
+    * serving a different snapshot. */
   def load(
       spark: SparkSession, dir: String, cfg: BuildConfig = BuildConfig(),
       asOf: Int = Int.MaxValue): IndexView = {
     import spark.implicits._
     val effective = readConfig(dir).getOrElse(cfg)
-    val manifest = readManifest(dir)
-    val allCommitted = committedBatches(manifest)
-    val allTombs = committedTombstones(manifest)
+    val snap = new Snapshot(spark, dir, asOf)
+    val allCommitted = committedBatches(snap.manifest)
+    val allTombs = committedTombstones(snap.manifest)
     require(asOf == Int.MaxValue || asOf == 0 ||
         allCommitted.contains(asOf) || allTombs.contains(asOf),
       s"load: asOf=$asOf is not a committed batch or tombstone of $dir " +
         s"(batches: ${allCommitted.mkString(",")}; tombstones: ${allTombs.mkString(",")})")
-    val committed = allCommitted.filter(_ <= asOf)
-    // deletes visible as of the same event horizon: batches and tombstones
-    // share one id sequence, so an asOf snapshot is consistent across both
-    val tombs = tombstoneDf(spark, dir, manifest, upTo = asOf)
-    def dropDead(df: DataFrame): DataFrame =
-      tombs match {
-        case Some(t) => df.join(t, Seq("doc_id"), "left_anti")
-        case None => df
-      }
-    def latestOr(table: String): String =
-      committed.lastOption.map(b => s"${batchDir(dir, b)}/$table")
-        .getOrElse(s"$dir/$table")
-    // per-root reads (not one multi-path read): keeps partition discovery,
-    // pushdown and bucket pruning local to each root. Every read supplies
-    // its table schema explicitly — a schemaless read runs a footer-
-    // inference job first, and the load path otherwise pays ~10 such jobs
-    // per store (also lets an empty postings delta — all-stopword batch —
-    // still read).
-    val tableSchema = Map(
-      "postings.parquet" -> blockSchema,
-      "doc_stats.parquet" -> docStatSchema,
-      "doc_map.parquet" -> docMapSchema,
-      "term_dict.parquet" -> termStatSchema)
-    def unionAll(table: String, cols: Seq[String]): DataFrame =
-      (s"$dir/$table" +: committed.map(b => s"${batchDir(dir, b)}/$table"))
-        .map(p => spark.read.schema(tableSchema(table)).parquet(p)
-          .select(cols.map(col): _*))
-        .reduce(_ union _)
-
-    val meta = spark.read.schema(metaSchema)
-      .parquet(latestOr("index_meta.parquet")).as[IndexMeta].head()
-    val blockCols = Seq("term_id", "first_doc_id", "last_doc_id", "count",
-      "doc_ids", "tfs", "max_tf", "block_max_ntf", "min_dl")
     // cosine mode rewrites doc_stats in full per append (norms shift with
     // idf); BM25-only mode appends delta stats files like doc_map/postings
     val docStats =
-      if (effective.cosineNorms)
-        spark.read.schema(docStatSchema).parquet(latestOr("doc_stats.parquet"))
-      else unionAll("doc_stats.parquet",
-        Seq("doc_id", "conv_id", "max_tf", "doc_len", "norm"))
+      if (effective.cosineNorms) snap.latest("doc_stats.parquet")
+      else snap.union("doc_stats.parquet")
     // tombstones apply at the doc tables only: every query path resolves
     // hits through the doc_stats join, so deleted docs vanish from all
     // results without touching a posting block; df/idf/avgdl stay as built
     // until compact() folds the deletes in physically (see `delete`)
     IndexView(
-      termDict = spark.read.schema(termStatSchema)
-        .parquet(latestOr("term_dict.parquet")).as[TermStat],
-      postings = unionAll("postings.parquet", blockCols).as[Block],
-      docStats = dropDead(docStats).as[DocStat],
-      docMap = dropDead(unionAll("doc_map.parquet", Seq("doc_id", "conv_id"))),
-      meta = meta,
+      termDict = snap.latest("term_dict.parquet").as[TermStat],
+      postings = snap.union("postings.parquet").as[Block],
+      docStats = snap.live(docStats).as[DocStat],
+      docMap = snap.live(snap.union("doc_map.parquet")),
+      meta = snap.latest("index_meta.parquet").as[IndexMeta].head(),
       cfg = effective)
   }
 }

@@ -63,16 +63,30 @@ private[graft] object StoreIO {
     try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
+  private def tmpOf(p: Path): Path = new Path(p.getParent, "." + p.getName + ".tmp")
+
+  /** The whole lines of a log written by [[appendLine]]. When the log is
+    * absent but its tmp copy exists, a crash fell between appendLine's
+    * delete and rename: the tmp holds every line, the new one included (it
+    * is closed before the delete), so it is read instead. A trailing
+    * unterminated line is a write that never finished and is ignored. */
+  def readLog(path: String): Seq[String] =
+    readString(path).orElse(readString(tmpOf(new Path(path)).toString)).toSeq
+      .flatMap(_.split("\n", -1).dropRight(1)).filter(_.nonEmpty)
+
   /** Append one line to a small log file. Object stores have no appendable
-    * files, so this is read + rewrite-to-temp + rename — fine for the
-    * manifest's single-writer, tens-of-lines scale; a crash between the
-    * delete and the rename loses at most the stage line being recorded,
-    * which the resume machinery simply re-runs (stages are idempotent and
-    * recorded only after their output committed). */
+    * files, so this is read + rewrite-to-temp + delete + rename — fine for
+    * the manifest's single-writer, tens-of-lines scale. A crash before the
+    * delete leaves the log as it was; a crash between the delete and the
+    * rename leaves only the complete tmp copy, which [[readLog]] reads and
+    * the next append first renames into place, so no recorded line is
+    * lost. */
   def appendLine(path: String, line: String): Unit = {
     val (f, p) = fs(path)
-    val prev = readString(path).getOrElse("")
-    val tmp = new Path(p.getParent, "." + p.getName + ".tmp")
+    val tmp = tmpOf(p)
+    if (!f.exists(p) && f.exists(tmp))
+      require(f.rename(tmp, p), s"StoreIO: rename $tmp -> $p failed")
+    val prev = readLog(path).map(_ + "\n").mkString
     val out = f.create(tmp, true)
     try out.write((prev + line + "\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()

@@ -7,16 +7,17 @@ import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.spark.input.WholeTextFileInputFormat
 import org.apache.spark.rdd.{RDD, WholeTextFileRDD}
 
-/** `SparkContext.wholeTextFiles` but with the input paths fed through the
-  * Path-varargs `FileInputFormat.setInputPaths` (ADVICE r2): the public
-  * String overload re-splits its argument on commas BEFORE Hadoop's escape
-  * handling, so a file name containing a comma cannot be expressed through
-  * it at all. The varargs overload escapes each path itself; glob
-  * metacharacters must still be backslash-escaped by the caller (Hadoop
-  * glob-expands every input path). Mirrors `SparkContext.wholeTextFiles`
-  * line for line otherwise — no Spark internals are modified. */
+/** The Spark core hooks graft needs that Spark keeps package-private. */
 object GraftCoreBridge {
 
+  /** `SparkContext.wholeTextFiles` but with the input paths fed through the
+    * Path-varargs `FileInputFormat.setInputPaths` (ADVICE r2): the public
+    * String overload re-splits its argument on commas BEFORE Hadoop's escape
+    * handling, so a file name containing a comma cannot be expressed through
+    * it at all. The varargs overload escapes each path itself; glob
+    * metacharacters must still be backslash-escaped by the caller (Hadoop
+    * glob-expands every input path). Mirrors `SparkContext.wholeTextFiles`
+    * line for line otherwise — no Spark internals are modified. */
   def wholeTextFiles(
       sc: SparkContext,
       paths: Seq[String],
@@ -32,4 +33,8 @@ object GraftCoreBridge {
       minPartitions
     ).map(record => (record._1.toString, record._2.toString))
   }
+
+  /** Block until every listener has seen every event posted so far, so
+    * totals read after a job returns are complete (the bus is package-private). */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 }

@@ -46,7 +46,11 @@ final case class BuildConfig(
   * frames (the staged dense-id sorts, the compact tf table) whose public
   * tables are mere PROJECTIONS over them — `termDict.unpersist()` cannot
   * release a cache it is not sameResult with, so the actual cached plans
-  * ride here for `unpin()` to free. Empty for store-loaded views. */
+  * ride here for `unpin()` to free. Empty for store-loaded views.
+  *
+  * `statsPartitions`: the doc_id hash-partition count `pin()` gave
+  * doc_stats; None on every other view (a build, a load, an append and a
+  * rebuild each make a new, unpinned view). */
 final case class IndexView(
     termDict: Dataset[TermStat],
     postings: Dataset[Block],
@@ -54,7 +58,8 @@ final case class IndexView(
     docMap: DataFrame, // (doc_id, conv_id)
     meta: IndexMeta,
     cfg: BuildConfig,
-    buildCaches: Seq[DataFrame] = Nil) {
+    buildCaches: Seq[DataFrame] = Nil,
+    statsPartitions: Option[Int] = None) {
 
   /** S12 analog (serving tier): the reference bulk-loads the whole index
     * into GPU memory once (GpuServerHandler.java:178-284); here the hot
@@ -70,12 +75,13 @@ final case class IndexView(
     *  - doc_stats is hash-partitioned + sorted on doc_id with the same
     *    partition count the per-doc score aggregation produces, so the
     *    scoring join needs no exchange and no sort on the stats side —
-    *    doc_stats never moves at query time, at any corpus size. */
+    *    doc_stats never moves at query time, at any corpus size (under AQE
+    *    too: the first query plans the cache as a stage and sees its
+    *    layout once it has run). */
   def pin(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): IndexView = {
     import org.apache.spark.sql.functions.col
     val spark = postings.sparkSession
-    val parts = math.max(1,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
     copy(
       termDict = termDict.persist(level),
       postings = postings
@@ -86,7 +92,8 @@ final case class IndexView(
         .repartitionByRange(parts, col("term_id"), col("first_doc_id"))
         .sortWithinPartitions("term_id", "first_doc_id").persist(level),
       docStats = docStats.repartition(parts, col("doc_id"))
-        .sortWithinPartitions("doc_id").persist(level))
+        .sortWithinPartitions("doc_id").persist(level),
+      statsPartitions = Some(parts))
   }
 
   def unpin(): IndexView = {

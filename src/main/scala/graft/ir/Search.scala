@@ -13,12 +13,18 @@ case object Bm25 extends Scorer        // north-rule production scorer
 
 /**
  * Query-side engine: analyze → vocabulary lookup (OOV drop) → postings scan
- * with predicate pushdown on term_id → block decode → per-doc score
- * aggregation → threshold → top-k (TakeOrderedAndProject) → doc resolution.
+ * with predicate pushdown on term_id → block decode → per-posting score
+ * contribution → per-(query, doc) sum → threshold → top-k → doc resolution.
  *
- * One Spark job, two shuffles (doc agg + top-k merge) — the Spark-native
- * reshape of the reference's client→broker→server→GPU hop chain
- * (SURVEY.md §3.1).
+ * One scoring plan ([[scorePlan]]) serves every request class: OR, AND
+ * (block-skipped), WAND (block-max pruned) and batch. A single query is a
+ * batch of one; the callers differ in the top-k step (ordered for one
+ * query, a heap per query for a batch, whose winners then look up their
+ * conv_ids) and a large batch's respread. The decoded postings take the
+ * plan's one exchange, on doc_id; the pinned doc_stats merge-joins them
+ * without moving; the (query, doc) sum needs no second exchange. This is
+ * the Spark-native reshape of the reference's client→broker→server→GPU hop
+ * chain (SURVEY.md §3.1).
  *
  * Scoring semantics:
  *  - tf-idf cosine: score(d,q) = Σ_t w(t,d)·w(t,q) / (‖q‖·‖d‖) with
@@ -51,14 +57,24 @@ class Searcher(index: IndexView) extends Serializable {
 
   /** Joins the doc_stats columns `cols` onto `df` by doc_id. The merge hint
     * keeps the pinned stats side (doc_id-partitioned and sorted like the
-    * score aggregation's output) from moving: no exchange, no sort. */
-  private def withDocStats(df: DataFrame, cols: String*): DataFrame =
-    df.join(index.docStats.select("doc_id", cols: _*).hint("merge"), "doc_id")
-
-  private def requireNorms(scorer: Scorer): Unit =
-    require(scorer != TfIdfCosine || cfg.cosineNorms,
-      "index was built with cosineNorms=false (BM25-only maintenance mode); " +
-        "tf-idf cosine scoring needs a norms rebuild")
+    * decode's doc_id exchange) from moving: no exchange, no sort. It holds
+    * only while the session's shuffle partition count is the one
+    * [[IndexView.pin]] recorded; on any other layout the hint would shuffle
+    * both sides, so Spark chooses the join. `spread` = Some(n) first
+    * re-hashes `df` on doc_id into n partitions; the stats then join as a
+    * broadcast dimension (a shuffle join past IndexBuilder.BroadcastRowLimit
+    * docs), as the two sides no longer share a layout. */
+  private def withDocStats(spark: SparkSession, df: DataFrame, spread: Option[Int],
+      cols: String*): DataFrame = {
+    val stats = index.docStats.select("doc_id", cols: _*)
+    spread match {
+      case Some(n) =>
+        df.repartition(n, col("doc_id")).join(IndexBuilder.dim(stats, index.meta.docs), "doc_id")
+      case None =>
+        val pinned = index.statsPartitions.contains(spark.sessionState.conf.numShufflePartitions)
+        df.join(if (pinned) stats.hint("merge") else stats, "doc_id")
+    }
+  }
 
   /** Block filter: [first_doc_id, last_doc_id] overlaps one of `intervals`.
     * The intervals are sorted and merged once on the driver, so the
@@ -115,34 +131,17 @@ class Searcher(index: IndexView) extends Serializable {
     }
   }
 
-  /** Decode a block set to (term_id, doc_id, tf) rows — via the native
-    * DecodeBlock generator, so postings stay in Tungsten rows instead of
-    * round-tripping through Block case-class objects per query. */
-  private[graft] def decodeBlocks(blocks: Dataset[Block]): DataFrame =
-    graft.functions.DecodeBlock.postings(blocks.toDF())
-
-  /** Decoded candidate postings for a term set: (doc_id, term_id, tf). */
-  private[graft] def decodedPostings(
-      spark: SparkSession, termIds: Seq[Long]): DataFrame =
-    decodeBlocks(index.postings.filter(col("term_id").isin(termIds: _*)))
-
   /** Above this many blocks the rare term's interval list is not collected
     * and AND skip pruning is disabled (≈1M docs at BlockSize 128). */
   private[graft] val AndSkipMaxBlocks: Long = 8192L
 
-  /** Up to this many query terms BM25 scores through per-term conditional
-    * sums (flat codegen agg); longer queries take the collect_list fold
-    * (agg row width stays bounded). */
-  private[graft] val ScoreColumnsMaxTerms: Int = 16
-
-  /** BM25 accumulation grid: every per-term contribution is quantized to a
-    * scaled-long fixed point at the 1e-15 grid and summed in exact 64-bit
+  /** BM25 accumulation grid: every per-posting contribution is quantized to
+    * a scaled-long fixed point at the 1e-15 grid and summed in exact 64-bit
     * integer arithmetic. Long addition is associative and commutative, so
-    * the single-query fixed-order fold, the long-query array fold and the
-    * batch path's hash-aggregate `sum` all produce the IDENTICAL score for
-    * the same postings in ANY execution order — bit-stable run to run (a
-    * plain double sum drifts at ulp level with shuffle arrival order) and
-    * bit-equal batch vs single (RankIdentitySpec). This replaces the r4
+    * the one (query, doc) hash-aggregate `sum` is IDENTICAL in ANY execution
+    * order — bit-stable run to run (a plain double sum drifts at ulp level
+    * with shuffle arrival order) and bit-equal for a query served alone,
+    * pruned or in a batch (RankIdentitySpec). This replaces the r4
     * decimal(30,15) grid — same determinism contract, but the accumulation
     * stays a primitive-long codegen HashAggregate instead of an object-path
     * Decimal add (the source of the r4 ~30% serving-latency regression,
@@ -150,8 +149,8 @@ class Searcher(index: IndexView) extends Serializable {
     * (invisible at the oracle's 1e-6 rounding); capacity is |score| ≤
     * 2^63/1e15 ≈ 9.2e3, far above any BM25 total (idf25 ≤ ln N + 1). */
   private[graft] val ScoreScale: Double = 1e15
-  /** floor(x·1e15 + ½) as a codegen long — the one shared quantizer; batch
-    * and single-query paths MUST route every contribution through it. */
+  /** floor(x·1e15 + ½) as a codegen long — the one shared quantizer; every
+    * BM25 contribution MUST route through it. */
   private def qfix(c: Column): Column = floor(c * ScoreScale + lit(0.5))
 
   /**
@@ -219,6 +218,101 @@ class Searcher(index: IndexView) extends Serializable {
         (col("term_id").isin(others: _*) && overlapsAny(intervals))))
   }
 
+  /** Under cosine, ‖q‖ over the query weights w(t,q). */
+  private def qNorm(ts: Seq[QueryTerm]): Double = math.sqrt(ts.map(t => t.qw * t.qw).sum)
+
+  /** The queries that can score: some term left after the OOV drop and,
+    * under cosine, ‖q‖ > 0 (Query.isEmptyOfTerms; the reference returns
+    * nothing for either). */
+  private def scorable(
+      qs: Seq[(String, Seq[QueryTerm])], scorer: Scorer): Seq[(String, Seq[QueryTerm])] = {
+    require(scorer != TfIdfCosine || cfg.cosineNorms,
+      "index was built with cosineNorms=false (BM25-only maintenance mode); " +
+        "tf-idf cosine scoring needs a norms rebuild")
+    qs.filter { case (_, ts) => ts.nonEmpty && (scorer != TfIdfCosine || qNorm(ts) > 0.0) }
+  }
+
+  /**
+   * The one scoring plan: (qidx, doc_id, score) for every doc that scores
+   * > 0 for query `live(qidx)`, decoded from `blocks` (default: every block
+   * of the queries' terms), with conv_id after doc_id if `convIds`. The
+   * doc_stats columns join each decoded posting before the sum, so every
+   * scorer is one per-posting contribution over a broadcast
+   * (qidx, term_id, w) table:
+   *  - cosine: w(t,q)·idf(t)·tf / (max_tf·‖q‖·‖d‖), 0 on a zero divisor;
+   *  - BM25: the fixed-point qfix(bm25(tf, doc_len, qtf·idf25)).
+   * AND keeps a (query, doc) group only when all |q| terms matched. The
+   * sum groups by (qidx, doc_id): on the pinned layout the stats join's
+   * doc_id exchange already clusters it. `spread` = Some(n) re-hashes the
+   * decoded postings on doc_id into n partitions instead, which clusters
+   * the sum just as well (see [[BatchRespreadCutover]]). With `convIds`
+   * conv_id rides the stats join and the sum as a key, which suits one
+   * query; a batch's fan-out sums each doc once per query, and a string key
+   * there cost ~50% more task CPU than resolving the winners afterwards.
+   */
+  private def scorePlan(spark: SparkSession, live: Seq[(String, Seq[QueryTerm])],
+      mode: QueryMode, scorer: Scorer, blocks: Option[Dataset[Block]],
+      convIds: Boolean, spread: Option[Int] = None): DataFrame = {
+    import spark.implicits._
+    // w(t,q) is carried on QueryTerm, never recovered as qwIdf/idf: a term in
+    // EVERY doc has idf = 0, and 0/0 = NaN would poison ‖q‖; it contributes
+    // w = 0, as in the reference (ir_manager.py:69-96).
+    val weights = broadcast(live.zipWithIndex.flatMap { case ((_, ts), qi) =>
+      ts.map(t => (qi, t.termId, if (scorer == Bm25) t.qb else t.qwIdf, qNorm(ts), ts.length))
+    }.toDF("qidx", "term_id", "w", "qn", "nq"))
+    val termIds = live.flatMap(_._2.map(_.termId)).distinct
+    // the native DecodeBlock generator keeps postings in Tungsten rows, with
+    // no per-query round trip through Block objects
+    val decoded = graft.functions.DecodeBlock.postings(
+      blocks.getOrElse(index.postings.filter(col("term_id").isin(termIds: _*))).toDF())
+    val (stats, contrib) = scorer match {
+      case TfIdfCosine => (Seq("max_tf", "norm"),
+        when(col("max_tf") === 0 || col("norm") === 0.0, 0.0).otherwise(
+          col("w") * col("tf") / (col("max_tf") * col("qn") * col("norm"))))
+      case Bm25 => (Seq("doc_len"), qfix(bm25(col("tf"), col("doc_len"), Some(col("w")))))
+    }
+    val keys = Seq("qidx", "doc_id") ++ (if (convIds) Seq("conv_id") else Nil)
+    val grouped = withDocStats(spark, decoded, spread, keys.drop(2) ++ stats: _*)
+      .join(weights, "term_id")
+      .withColumn("c", contrib)
+    val summed = mode match {
+      case Or => grouped.groupBy(keys.map(col): _*).agg(sum(col("c")).as("s"))
+      case And => grouped.groupBy((keys :+ "nq").map(col): _*)
+        .agg(sum(col("c")).as("s"), count(lit(1)).as("n"))
+        .filter(col("n") === col("nq"))
+    }
+    val score = if (scorer == Bm25) col("s").cast("double") / ScoreScale else col("s")
+    summed.select(keys.map(col) :+ score.as("score"): _*)
+      // T2: engine standardizes on the client-side threshold (score > 0)
+      .filter(col("score") > 0.0)
+  }
+
+  /** One query's top k through [[scorePlan]]: TakeOrderedAndProject (a
+    * per-partition heap, then a merge), ties broken by doc_id (T1: the
+    * reference's tie order is HashMap-unstable, SURVEY.md §7.4 risk 3). */
+  private def topK(spark: SparkSession, qts: Seq[QueryTerm], k: Int,
+      mode: QueryMode, scorer: Scorer, blocks: Option[Dataset[Block]]): DataFrame = {
+    import spark.implicits._
+    val live = scorable(Seq("" -> qts), scorer)
+    if (live.isEmpty) return spark.emptyDataset[Hit].toDF()
+    scorePlan(spark, live, mode, scorer, blocks, convIds = true)
+      .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(k)
+      .select("doc_id", "conv_id", "score")
+  }
+
+  /** Each query's k best rows of a [[scorePlan]] result (no conv_ids) as
+    * (qidx, pos, h), h = (doc_id, score), pos 0..k−1 in (score desc,
+    * doc_id asc) order: a bounded heap per query (TopKAggregator). Partial
+    * aggregation keeps ≤ k rows per (query, task) before the qidx exchange,
+    * and nothing sorts a match list. */
+  private def heapTopK(scored: DataFrame, k: Int): DataFrame = {
+    val topk = udaf(new TopKAggregator(k), TopKAggregator.inputEncoder)
+    scored.groupBy("qidx")
+      .agg(topk(col("doc_id"), lit(""), col("score")).as("hits"))
+      .select(col("qidx"), posexplode(col("hits")).as(Seq("pos", "h")))
+  }
+
   def search(
       spark: SparkSession,
       query: String,
@@ -226,124 +320,8 @@ class Searcher(index: IndexView) extends Serializable {
       mode: QueryMode = Or,
       scorer: Scorer = TfIdfCosine): DataFrame = {
     val qts = queryTerms(spark, query)
-    val pruned =
-      if (mode == And && qts.length > 1)
-        andSurvivorBlocks(spark, qts).map(decodeBlocks)
-      else None
-    scoreTerms(spark, qts, k, mode, scorer, pruned)
-  }
-
-  /** Shared scoring tail; `onlyBlocks` lets the WAND path substitute a
-    * pruned block set. */
-  private def scoreTerms(
-      spark: SparkSession,
-      qts: Seq[QueryTerm],
-      k: Int,
-      mode: QueryMode,
-      scorer: Scorer,
-      prunedDecoded: Option[DataFrame]): DataFrame = {
-    import spark.implicits._
-    requireNorms(scorer)
-    val empty = spark.emptyDataset[Hit].toDF()
-    if (qts.isEmpty) return empty // Query.isEmptyOfTerms short-circuit
-
-    val qwIdf = qts.map(q => q.termId -> q.qwIdf).toMap
-    val qb = qts.map(q => q.termId -> q.qb).toMap
-    // w(t,q) is carried on QueryTerm, never recovered as qwIdf/idf: a query
-    // term present in EVERY doc has idf = log10(N/N) = 0, and 0/0 = NaN would
-    // poison qNorm (NaN sorts above all doubles in Spark SQL, so it would
-    // both survive the score > 0 filter and win the top-k). Such a term
-    // contributes w = 0, exactly as the reference (ir_manager.py:69-96).
-    val qNorm = math.sqrt(qts.map(q => q.qw * q.qw).sum)
-    if (qNorm == 0.0 && scorer == TfIdfCosine) return empty
-
-    val qwIdfMap = typedLit(qwIdf)
-    val qbMap = typedLit(qb)
-
-    val decoded = prunedDecoded.getOrElse(
-      decodedPostings(spark, qts.map(_.termId)))
-
-    // J1: per-doc union accumulation.
-    //  - Cosine: the numerator factors as (1/maxtf_d)·Σ_t qwIdf_t·tf, so the
-    //    agg is a plain codegen'd sum and (max_tf, norm, conv_id) join in
-    //    once per MATCHED doc after it.
-    //  - BM25 needs doc_len per doc, so the (≤ |q|-element) per-doc
-    //    contribution list rides through the agg and a codegen'd
-    //    higher-order `aggregate` folds it after the doc_stats join. (The
-    //    seemingly-cheaper "join doc_len BEFORE the agg and sum per-posting
-    //    contributions" variant measured ~30% SLOWER at p50: every decoded
-    //    posting pays a broadcast-hash probe and a wider agg row, vs. this
-    //    shape aggregating narrow (long, int) rows first and joining only
-    //    the matched docs — see BENCH/BASELINE.md round 2.)
-    val scored0 = scorer match {
-      case TfIdfCosine =>
-        // `nterms` exists only for And-mode conjunction filtering; Or mode
-        // (the serving default) keeps the hot agg one buffer column narrower
-        val grouped = decoded
-          .withColumn("c", element_at(qwIdfMap, col("term_id")) * col("tf"))
-          .groupBy("doc_id")
-        val matched = mode match {
-          case Or  => grouped.agg(sum(col("c")).as("cnum"))
-          case And => grouped
-            .agg(sum(col("c")).as("cnum"), count(lit(1)).as("nterms"))
-            .filter(col("nterms") === qts.length)
-        }
-        withDocStats(matched, "conv_id", "max_tf", "norm")
-          .withColumn("score",
-            when(col("max_tf") === 0 || col("norm") === 0.0, 0.0)
-              .otherwise(col("cnum") / col("max_tf") / (lit(qNorm) * col("norm"))))
-      case Bm25 if qts.length <= ScoreColumnsMaxTerms =>
-        // per-term conditional sums: the whole agg is a codegen'd
-        // HashAggregate over numeric columns (collect_list forces the
-        // slower ObjectHashAggregate), and the BM25 fold becomes a flat
-        // |q|-branch codegen expression after the stats join. ~25% off
-        // stage-2 task time at p50 on the 400k-conv synth index.
-        val tfAggs = qts.map(q =>
-          sum(when(col("term_id") === q.termId, col("tf"))).as(s"tf_${q.termId}"))
-        val grouped = decoded.groupBy("doc_id")
-        val matched = mode match {
-          case Or  => grouped.agg(tfAggs.head, tfAggs.tail: _*)
-          case And => grouped
-            .agg(count(lit(1)).as("nterms"), tfAggs: _*)
-            .filter(col("nterms") === qts.length)
-        }
-        val sat = qts.map { q =>
-          val tf = col(s"tf_${q.termId}")
-          when(tf.isNull, lit(0L)).otherwise(
-            qfix(bm25(tf, col("doc_len"), Some(lit(q.qb)))))
-        }.reduce(_ + _)
-        withDocStats(matched, "conv_id", "doc_len")
-          .withColumn("score", sat.cast("double") / ScoreScale)
-      case Bm25 =>
-        // long-query fallback: per-doc contribution list folded on the
-        // fixed-point grid — order-independent by construction (see
-        // ScoreScale), so no sort is needed before the fold
-        val contribAgg =
-          collect_list(struct(col("term_id"), col("qb"), col("tf"))).as("contribs")
-        val grouped = decoded
-          .withColumn("qb", element_at(qbMap, col("term_id")))
-          .groupBy("doc_id")
-        val matched = mode match {
-          case Or  => grouped.agg(contribAgg)
-          case And => grouped
-            .agg(count(lit(1)).as("nterms"), contribAgg)
-            .filter(col("nterms") === qts.length)
-        }
-        withDocStats(matched, "conv_id", "doc_len")
-          .withColumn("score",
-            aggregate(col("contribs"), lit(0L), (acc, c) =>
-              acc + qfix(bm25(c.getField("tf"), col("doc_len"), Some(c.getField("qb")))))
-              .cast("double") / ScoreScale)
-    }
-
-    scored0
-      // T2: engine standardizes on the client-side threshold (score > 0)
-      .filter(col("score") > 0.0)
-      // T1: deterministic tie-break by doc_id (reference tie order is
-      // HashMap-unstable; SURVEY.md §7.4 risk 3)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k) // TakeOrderedAndProject: per-partition heap + merge
-      .select("doc_id", "conv_id", "score")
+    val blocks = if (mode == And && qts.length > 1) andSurvivorBlocks(spark, qts) else None
+    topK(spark, qts, k, mode, scorer, blocks)
   }
 
   /** Below this many total candidate postings the WAND θ phase costs more
@@ -371,24 +349,24 @@ class Searcher(index: IndexView) extends Serializable {
   val BatchExactCutover: Long = 4L * WandExactCutover
 
   /** Below this many candidate (query, term) posting fan-out rows the batch
-    * path skips the full-parallelism respread of the shared decode (VERDICT
-    * r4 #5): the exchange bought the 13-query 3.9× win (5.9M fan-out rows
-    * were serializing into the serving cache's ~15 partitions) but costs
-    * more than it saves on a small batch. ≈2M rows ≈ the work of one
+    * path skips the full-parallelism respread (VERDICT r4 #5): the exchange
+    * bought the 13-query 3.9× win at 400k convs on 32 cores (5.9M fan-out
+    * rows were serializing into the serving cache's ~15 partitions) but
+    * costs more than it saves on a small batch. ≈2M rows ≈ the work of one
     * serving-sized partition (IndexView.servingPartitions), i.e. respread
-    * once the batch carries more than a couple of tasks' worth of scoring. */
+    * once the batch carries more than a couple of tasks' worth of scoring.
+    * It runs only where it widens: 2× the cores above the serving
+    * partition count. */
   val BatchRespreadCutover: Long = 1L << 21
 
   /**
    * Batch serving: score MANY queries in ONE Spark job — the offline
    * evaluation / reranking shape (score a query log, build a training set,
    * run a relevance sweep). Single-query serving pays ~0.2 s of fixed
-   * planning+scheduling per query; the batch path pays it once: the union
-   * of all queries' terms drives ONE pushed-`IN` decode, a small broadcast
-   * (query_id, term_id, weight) table fans each posting out to the queries
-   * that want it, one (query_id, doc_id) aggregation scores everything,
-   * and a bounded per-query heap aggregate takes each top-k. Results are
-   * IDENTICAL to `search` (RankIdentitySpec asserts equality).
+   * planning+scheduling per query; the batch path pays it once:
+   * [[scorePlan]] over one decode of the queries' term union, then a
+   * bounded heap per query ([[heapTopK]]). Results are IDENTICAL to
+   * `search` (RankIdentitySpec asserts equality).
    *
    * Output: (query_id, doc_id, conv_id, score, rank), rank 1..k per query,
    * ordered within a query by (score desc, doc_id asc). Queries that are
@@ -401,109 +379,35 @@ class Searcher(index: IndexView) extends Serializable {
       k: Int,
       scorer: Scorer = Bm25,
       exactCutover: Long = -1L): DataFrame = {
-    val cutover = if (exactCutover >= 0L) exactCutover else BatchExactCutover
     import spark.implicits._
-    requireNorms(scorer)
     // duplicate ids would silently merge two queries' contributions into
     // one aggregation group — refuse loudly instead
     require(queries.map(_._1).distinct.length == queries.length,
       s"searchBatch: duplicate query_id in ${queries.map(_._1).mkString(",")}")
-    val qts: Seq[(String, Seq[QueryTerm])] =
-      queries.map { case (qid, text) => qid -> queryTerms(spark, text) }
-    val live = qts.filter { case (_, ts) =>
-      ts.nonEmpty &&
-        (scorer != TfIdfCosine || math.sqrt(ts.map(t => t.qw * t.qw).sum) > 0.0)
-    }
-    val empty = spark.emptyDataset[(String, Long, String, Double, Int)]
+    val live = scorable(
+      queries.map { case (qid, text) => qid -> queryTerms(spark, text) }, scorer)
+    if (live.isEmpty) return spark.emptyDataset[(String, Long, String, Double, Int)]
       .toDF("query_id", "doc_id", "conv_id", "score", "rank")
-    if (live.isEmpty) return empty
-
+    // candidate (query, term) postings: the cutovers' measure of batch work
+    val fanout = live.flatMap(_._2).map(_.df).sum
+    // BM25 batches above the cutover get per-query block-max pruning on the
+    // SHARED decode
+    val cutover = if (exactCutover >= 0L) exactCutover else BatchExactCutover
+    val blocks =
+      if (scorer == Bm25 && fanout > cutover) survivorBlocks(spark, live, k) else None
+    // the serving layout deliberately keeps FEW partitions (single-query
+    // fixed cost ~ tasks/stage), but a LARGE batch's fan-out work is
+    // throughput-bound: spread it over the full parallelism
+    val wide = 2 * spark.sparkContext.defaultParallelism
+    val spread = Some(wide).filter(_ =>
+      fanout >= BatchRespreadCutover && wide > spark.sessionState.conf.numShufflePartitions)
     // queries ride through the big aggregation as a dense INT index, not
     // the caller's string id: the (query, doc) hash-agg touches millions of
     // rows, and narrow numeric keys measurably beat string keys there; the
     // string id is restored on the k·|queries| result rows at the end
-    val qids: Seq[String] = live.map(_._1)
-    val qidLit = typedLit(qids.zipWithIndex.map { case (q, i) => i -> q }.toMap)
-    // (qidx, term_id, w): w = qwIdf for cosine, qtf·idf25 for BM25
-    val qTermRows = live.zipWithIndex.flatMap { case ((_, ts), qi) =>
-      ts.map(t => (qi, t.termId, if (scorer == TfIdfCosine) t.qwIdf else t.qb))
-    }
-    val qTerms = broadcast(qTermRows.toDF("qidx", "term_id", "w"))
-    val termIds = live.flatMap(_._2.map(_.termId)).distinct
-    // candidate (query, term) postings: the cutovers' measure of batch work
-    val fanout = live.flatMap(_._2).map(_.df).sum
-
-    // BM25 batches above the cutover get per-query block-max pruning on the
-    // SHARED decode (survivorBlocks) — exact results, far fewer blocks
-    val decoded = (if (scorer == Bm25 && fanout > cutover)
-      survivorBlocks(spark, live, k) else None)
-      .map(decodeBlocks)
-      .getOrElse(decodedPostings(spark, termIds))
-
-    val scored = scorer match {
-      case TfIdfCosine =>
-        val qNorms = typedLit(live.zipWithIndex.map { case ((_, ts), qi) =>
-          qi -> math.sqrt(ts.map(t => t.qw * t.qw).sum)
-        }.toMap)
-        decoded.join(qTerms, "term_id")
-          .groupBy("qidx", "doc_id")
-          .agg(sum(col("w") * col("tf")).as("cnum"))
-          .join(index.docStats.select("doc_id", "max_tf", "norm"), "doc_id")
-          .withColumn("score",
-            when(col("max_tf") === 0 || col("norm") === 0.0, 0.0)
-              .otherwise(col("cnum") / col("max_tf") /
-                (element_at(qNorms, col("qidx")) * col("norm"))))
-      case Bm25 =>
-        // doc_len joins the DECODED postings once (guarded broadcast —
-        // 1 probe per posting, not per (query, posting) pair), the
-        // per-posting BM25 term is a codegen expression, and the
-        // per-(query, doc) accumulation is a plain hash-aggregate `sum` of
-        // fixed-point longs — order-independent, so it is bit-equal to the
-        // single-query path's fixed-order fold (see ScoreScale). This
-        // replaces the r3 collect_list/ObjectHashAggregate + post-agg stats
-        // join shape, which paid a per-group list materialization and a
-        // second join (r3 verdict #5: batch amortization was ~12%). Agg rows
-        // carry only (int, long, long) — conv_ids resolve on the
-        // k·|queries| result.
-        val dl = index.docStats.select("doc_id", "doc_len")
-        val dlDim =
-          if (index.meta.docs <= IndexBuilder.BroadcastRowLimit) broadcast(dl) else dl
-        // the serving layout deliberately keeps FEW partitions (single-query
-        // fixed cost ~ tasks/stage), but a LARGE batch's fan-out work is
-        // throughput-bound — respread the decoded postings across the full
-        // parallelism so the joins + per-posting scoring don't serialize
-        // into the cache's handful of partitions (measured: 13-query batch
-        // 4.4 s → ~1.5 s on 32 cores). ADAPTIVE (VERDICT r4 #5): the extra
-        // exchange is pure overhead on a small batch (j1_batch_topk
-        // 0.91 → 2.06 s in BENCH_r04), so it runs only when the batch's
-        // candidate (query, term) posting fan-out — the row count the
-        // scoring join actually produces — clears BatchRespreadCutover.
-        val batchParts = math.max(
-          2 * spark.sparkContext.defaultParallelism,
-          math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt))
-        val spread =
-          if (fanout >= BatchRespreadCutover)
-            decoded.repartition(batchParts, col("doc_id"))
-          else decoded
-        spread
-          .join(dlDim, "doc_id")
-          .join(qTerms, "term_id")
-          .withColumn("c", qfix(bm25(col("tf"), col("doc_len"), Some(col("w")))))
-          .groupBy("qidx", "doc_id")
-          .agg(sum(col("c")).as("sfix"))
-          .withColumn("score", col("sfix").cast("double") / ScoreScale)
-    }
-
-    // bounded per-query top-k heap aggregate instead of a row_number window:
-    // partial aggregation keeps ≤ k rows per (query, task) before the
-    // exchange and nothing sorts a full match list (TopKAggregator); the
-    // conv_id join touches only the ≤ k·|queries| winners afterwards
-    val topk = udaf(new TopKAggregator(k), TopKAggregator.inputEncoder)
-    val winners = scored
-      .filter(col("score") > 0.0)
-      .groupBy("qidx")
-      .agg(topk(col("doc_id"), lit(""), col("score")).as("hits"))
-      .select(col("qidx"), posexplode(col("hits")).as(Seq("pos", "h")))
+    val qidLit = typedLit(live.map(_._1).zipWithIndex.map(_.swap).toMap)
+    val scored = scorePlan(spark, live, Or, scorer, blocks, convIds = false, spread = spread)
+    val winners = heapTopK(scored, k)
       .select(
         element_at(qidLit, col("qidx")).as("query_id"),
         col("h.doc_id").as("doc_id"),
@@ -554,7 +458,6 @@ class Searcher(index: IndexView) extends Serializable {
       spark: SparkSession,
       live: Seq[(String, Seq[QueryTerm])],
       k: Int): Option[Dataset[Block]] = {
-    import spark.implicits._
     val allTerms: Map[Long, QueryTerm] = live.flatMap(_._2).map(t => t.termId -> t).toMap
     val termIds = live.flatMap(_._2.map(_.termId)).distinct
     val idfLit = typedLit(allTerms.map { case (tid, t) => tid -> t.bm25Idf })
@@ -590,37 +493,28 @@ class Searcher(index: IndexView) extends Serializable {
     // θ_q = k-th largest EXACT FULL q-score among the docs in the t* terms'
     // top-k blocks. At most two tiny jobs: (1) metadata-only top-k block
     // intervals per t* term, served from the view's (term, k) interval
-    // cache — zero jobs once the terms are warm (VERDICT r5 #4); (2) decode
-    // every query term's blocks overlapping the merged intervals, score per
-    // (query, doc) via the broadcast (qid, term, weight) table, collect the
-    // k-th value per query. Any doc inside the intervals has ALL its
-    // postings in overlapping blocks, so its score is complete; docs
-    // straddling the edges score partially, which only LOWERS θ.
+    // cache — zero jobs once the terms are warm (VERDICT r5 #4); (2) the
+    // scoring plan over every query term's blocks overlapping the merged
+    // intervals, and its heap top-k's k-th value per query. Any doc inside
+    // the intervals has ALL its postings in overlapping blocks, so its
+    // score is complete; docs straddling the edges score partially, which
+    // only LOWERS θ.
     val intervals = topBlockIntervals(infos.map(_.tStar.termId), k).values.flatten.toArray
     if (intervals.isEmpty) return None
-    val qw = broadcast(infos.flatMap(i => i.ts.map(t => (i.qid, t.termId, t.qb)))
-      .toDF("qid", "term_id", "w"))
     val candBlocks = index.postings
       .filter(col("term_id").isin(termIds: _*))
       .filter(overlapsAny(intervals))
-    val kth: Map[String, Double] = index.docStats
-      .select(col("doc_id"), col("doc_len"))
-      .join(broadcast(decodeBlocks(candBlocks)), "doc_id")
-      .join(qw, "term_id")
-      .groupBy(col("qid"), col("doc_id"))
-      .agg(sum(bm25(col("tf"), col("doc_len"), Some(col("w")))).as("s"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(col("s").desc)))
-      .filter(col("rn") === k)
-      .select("qid", "s")
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val scored = scorePlan(spark, live, Or, Bm25, Some(candBlocks), convIds = false)
+    val kth: Map[Int, Double] = heapTopK(scored, k)
+      .filter(col("pos") === k - 1)
+      .select(col("qidx"), col("h.score"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
     // fewer than k docs carry t* → the candidate set may be < k docs → θ
     // would not be a sound k-th-total lower bound → θ = 0 for that query
-    val thetas: Map[String, Double] = infos.map { i =>
+    val thetas: Map[String, Double] = infos.zipWithIndex.map { case (i, qi) =>
       i.qid -> (if (i.tStar.df < k) 0.0
-        else kth.get(i.qid).map(s => math.max(0.0, s - 1e-9)).getOrElse(0.0))
+        else kth.get(qi).map(s => math.max(0.0, s - 1e-9)).getOrElse(0.0))
     }.toMap
     if (thetas.values.forall(_ <= 0.0)) return None
 
@@ -642,27 +536,24 @@ class Searcher(index: IndexView) extends Serializable {
   }
 
   /**
-   * Block-max pruned BM25 top-k (the north rule's WAND path): the query's
-   * candidate postings are decoded only from the blocks [[survivorBlocks]]
-   * keeps for it as a batch of one — θ = the k-th best full score among
-   * the docs in the top term's k most promising blocks, and a block
-   * survives iff qtf·bound + Σ_{t'≠t} qtf·gmax(t') ≥ θ. Results equal the
-   * exact path (WandFuzzSpec). At or below `exactCutover` candidate
-   * postings the query serves exact: the θ jobs would cost more than the
-   * decode they save.
+   * Block-max pruned BM25 top-k (the north rule's WAND path): the scoring
+   * plan decodes only the blocks [[survivorBlocks]] keeps for the query as
+   * a batch of one — θ = the k-th best full score among the docs in the
+   * top term's k most promising blocks, and a block survives iff
+   * qtf·bound + Σ_{t'≠t} qtf·gmax(t') ≥ θ. Results equal the exact path
+   * (WandFuzzSpec). At or below `exactCutover` candidate postings the query
+   * serves exact: the θ jobs would cost more than the decode they save.
    */
   def searchBm25Wand(
       spark: SparkSession,
       query: String,
       k: Int,
       exactCutover: Long = WandExactCutover): DataFrame = {
-    import spark.implicits._
     val qts = queryTerms(spark, query)
-    if (qts.isEmpty) return spark.emptyDataset[Hit].toDF()
-    val pruned =
-      if (qts.map(_.df).sum <= exactCutover) None
-      else Some(decodeBlocks(wandPlan(spark, qts, k)._2))
-    scoreTerms(spark, qts, k, Or, Bm25, pruned)
+    val blocks =
+      if (qts.isEmpty || qts.map(_.df).sum <= exactCutover) None
+      else Some(wandPlan(spark, qts, k)._2)
+    topK(spark, qts, k, Or, Bm25, blocks)
   }
 
   /** The WAND pruning decision for an analyzed term set: (candidate block

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
 
 /** Guard against narrow input scans feeding heavy per-row kernels (guide
   * §2.5 input skew): a corpus that arrives as one small parquet file gives
@@ -10,7 +11,10 @@ import org.apache.spark.sql.DataFrame
   * local[32]. Widening is a cheap round-robin exchange of the raw rows
   * (~10 MB here) and a NO-OP whenever the scan already carries at least the
   * session's parallelism — which any at-scale corpus does — so partitioning
-  * stays derived from input size, never from the box. */
+  * stays derived from input size, never from the box. Only a bare file
+  * scan (under projections and filters) is widened; any other input — a
+  * cached frame, a local relation, a coalesce or a union — keeps its width,
+  * even one partition. */
 private[ops] object Narrow {
   def widen(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -21,7 +25,20 @@ private[ops] object Narrow {
     // the ngram pair aggregation for no extra wall-clock win)
     val target = math.max(2, math.min(
       spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt))
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+      spark.sessionState.conf.numShufflePartitions))
+    if (scanPartitions(df.queryExecution.sparkPlan).forall(_ >= target)) df
+    else df.repartition(target)
+  }
+
+  /** The partition count of a bare file scan under projections and
+    * filters, from the planned scan's file splits: planning lists files but
+    * runs no job (`df.rdd` would, under AQE, run the input's upstream
+    * shuffle stages). None for any other input: a shuffle or a cache
+    * already sets its own width. */
+  private def scanPartitions(plan: SparkPlan): Option[Int] = plan match {
+    case p: ProjectExec => scanPartitions(p.child)
+    case f: FilterExec => scanPartitions(f.child)
+    case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+    case _ => None
   }
 }

@@ -1,5 +1,13 @@
 package graft.ir
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+
 import graft.SparkSpec
 
 /**
@@ -102,5 +110,92 @@ class PlanContractSpec extends SparkSpec {
     // the pinned doc_stats side joins with no exchange of its own: the only
     // hashpartitioning exchange keys on doc_id (the agg), nothing else
     assert(plan.contains("hashpartitioning(doc_id"), plan)
+  }
+
+  /** A node's children, through adaptive plans and their query stages. */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case _ => p.children
+  }
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+
+  /** The executed plan of `df`, after running it. */
+  private def executed(df: DataFrame): SparkPlan = { df.count(); df.queryExecution.executedPlan }
+
+  /** Every single-child chain of nodes that ends at a doc_stats scan: an
+    * Exchange on one means the stats table moves at query time. */
+  private def statsChains(plan: SparkPlan): Seq[Seq[SparkPlan]] = {
+    def down(p: SparkPlan): Seq[SparkPlan] = p +: (kids(p) match {
+      case Seq(c) => down(c)
+      case _ => Nil
+    })
+    nodes(plan).flatMap(kids).map(down).filter(_.last match {
+      case s: InMemoryTableScanExec => s.relation.output.exists(_.name == "doc_len")
+      case _ => false
+    })
+  }
+
+  private def assertStatsStay(plan: SparkPlan, ctx: String): Unit = {
+    val chains = statsChains(plan)
+    assert(chains.nonEmpty, s"$ctx: no doc_stats scan:\n$plan")
+    assert(!chains.flatten.exists(_.isInstanceOf[Exchange]),
+      s"$ctx: doc_stats is exchanged or broadcast:\n$plan")
+  }
+
+  /** The key names of each shuffle exchange, hash or range. */
+  private def shuffles(plan: SparkPlan): Seq[Seq[String]] = nodes(plan).collect {
+    case e: ShuffleExchangeExec => e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+      case other => Seq(other.toString)
+    }
+  }
+
+  test("stats join: merge hint on the pinned layout only") {
+    val s = new Searcher(view)
+    for (scorer <- Seq[Scorer](Bm25, TfIdfCosine))
+      assertStatsStay(executed(s.search(spark, "pais libre software", 10, Or, scorer)),
+        s"pinned $scorer")
+    // loaded from a store and not pinned, doc_stats is a plain parquet scan
+    // with no doc_id layout: a forced merge join would shuffle and sort both
+    // sides, so Spark chooses the join
+    val dir = SparkSpec.tmpDir("plan-contract") + "/index"
+    IndexStore.saveView(spark, view, dir)
+    val loaded = IndexStore.load(spark, dir)
+    val plan = executed(new Searcher(loaded).search(spark, "pais libre software", 10, Or, Bm25))
+    assert(!nodes(plan).exists(_.isInstanceOf[SortMergeJoinExec]),
+      s"unpinned stats join forced to a sort-merge join:\n$plan")
+  }
+
+  test("one plan: single queries take one exchange, a batch two; doc_stats never moves") {
+    val s = new Searcher(view)
+    val q = "pais libre software"
+    for ((name, df) <- Seq(
+        "or-cosine" -> s.search(spark, q, 10, Or, TfIdfCosine),
+        "and-bm25" -> s.search(spark, q, 10, And, Bm25))) {
+      val plan = executed(df)
+      assert(shuffles(plan) == Seq(Seq("doc_id")), s"$name:\n$plan")
+      assertStatsStay(plan, name)
+    }
+    // 32 queries: the decode's doc_id exchange, then the heap top-k's qidx one
+    val vocab = view.termDict.collect().sortBy(t => (-t.df, t.term)).map(_.term)
+    val batch = (0 until 32).map(i =>
+      s"q$i" -> Seq(i, i + 5, i + 11).map(j => vocab(j % vocab.length)).mkString(" "))
+    val plan = executed(s.searchBatch(spark, batch, 10))
+    assert(shuffles(plan).sortBy(_.mkString) == Seq(Seq("doc_id"), Seq("qidx")),
+      s"batch:\n$plan")
+    assertStatsStay(plan, "batch")
+  }
+
+  test("stats join under AQE: doc_stats stays put from a fresh pin's first query") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    // a fresh view, queried at once: no count() or earlier query fills its caches
+    val fresh = IndexBuilder.build(spark, Fixtures.synthTurns(spark, 40)).pin()
+    try {
+      val s = new Searcher(fresh)
+      assertStatsStay(executed(s.search(spark, "pais libre", 10, Or, Bm25)), "first query")
+      assertStatsStay(executed(s.searchBatch(spark, Seq("a" -> "pais", "b" -> "libre"), 10)),
+        "first batch")
+    } finally { fresh.unpin(); () }
   }
 }

@@ -1,5 +1,7 @@
 package graft.ir
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -178,8 +180,7 @@ object IndexView {
     * agg and the co-partitioned stats join all share one partitioning —
     * preserving the no-exchange stats join the pin() contract promises. */
   def servingPartitions(meta: IndexMeta, spark: org.apache.spark.sql.SparkSession): Int = {
-    val cap = math.max(1,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val cap = math.max(1, spark.sessionState.conf.numShufflePartitions)
     math.min(cap, math.max(8, (meta.postings / 2000000L).toInt))
   }
 }
@@ -204,112 +205,79 @@ object IndexBuilder {
     * broadcast); larger ones take the shuffle-join path. */
   val BroadcastRowLimit: Long = 4000000L
 
+  /** A stage's table before a sink keeps it: the frame, and — when a
+    * dense-id staging made it — the staging's counts and the cache the frame
+    * is a projection over (released by the sink that writes it). */
+  private[graft] final case class Staged(
+      table: DataFrame, counts: Option[Counts] = None, cache: Option[DataFrame] = None) {
+    def map(f: DataFrame => DataFrame): Staged = copy(table = f(table))
+  }
+
+  /** A table's rows and the values of its stage's aggregates, in order. */
+  private[graft] final case class Counts(rows: Long, aggs: Seq[Long])
+
   /**
    * Deterministic dense id assignment: global sort by a unique key, then
    * per-partition counts + prefix-sum offsets. Result is independent of
    * parallelism because the sort key is unique, so the total order is
    * data-defined; range partitions only move the (sorted) boundaries.
    *
-   * Two-phase mechanics, all inside Tungsten (r3 verdict: the previous
-   * `rdd.zipWithIndex` implementation was the build's only Amdahl term —
-   * a job barrier PLUS a per-row external-Row round-trip on both sides):
-   *  1. `monotonically_increasing_id()` on the sorted plan encodes
-   *     (partition, local row number) as pid·2^33 + i — a codegen'd counter.
-   *  2. ONE count job over the compiled RDD collects per-partition sizes;
-   *     running both this job and the downstream consumers against the SAME
-   *     RDD instance reuses the range-exchange map stage across jobs, so
-   *     upstream lineage (e.g. the distinct over the turns table) is scanned
-   *     once, exactly as zipWithIndex did.
-   *  3. The dense id is then the pure column expression
-   *     offset[mono >>> 33] + (mono & (2^33-1)) — no external rows, no
-   *     non-codegen hop, and the barrier job now carries no sort-payload
-   *     serialization cost.
+   * Mechanics, all inside Tungsten (r3 verdict: an `rdd.zipWithIndex`
+   * implementation was the build's only Amdahl term — a job barrier PLUS a
+   * per-row external-Row round-trip on both sides):
+   *  1. the input is staged (persisted) first: repartitionByRange's boundary
+   *     sampling is a separate job over the input lineage, so an unstaged
+   *     input (a distinct over the turns table, the dictionary aggregation)
+   *     would be computed twice — once for the sample, once for the real
+   *     shuffle (guide §2.4);
+   *  2. `monotonically_increasing_id()` on the sorted plan encodes
+   *     (partition, local row number) as pid·2^33 + i — a codegen'd counter —
+   *     and the sorted stage is PERSISTED;
+   *  3. ONE aggregation over that cache collects per-partition sizes, which
+   *     doubles as the cache's materialization (so upstream lineage is
+   *     scanned exactly once) and returns the total row count — no separate
+   *     `.count()` action;
+   *  4. the dense id is then the pure column expression
+   *     offset[mono >>> 33] + (mono & (2^33-1)).
    * Raw `monotonically_increasing_id` alone would be partition-order
    * dependent (SURVEY.md §7.4 risk 1); anchored to the deterministic sort
    * and rebased by counted offsets it is exactly the data-defined rank.
-   */
-  private[graft] def zipWithDenseId(
-      df: DataFrame, order: Seq[Column], idName: String): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    val spark = df.sparkSession
-    // stage the exchange INPUT: repartitionByRange's boundary sampling is a
-    // separate job over the input lineage, so an unstaged input (a distinct
-    // over the turns table, the dictionary aggregation) is computed twice —
-    // once for the sample, once for the real shuffle (guide §2.4). The cache
-    // is dropped as soon as the shuffle map output exists (the count job
-    // below), which downstream jobs on the SAME RDD instance reuse.
-    val preCached = df.storageLevel != StorageLevel.NONE
-    val pre = if (preCached) df else df.persist(StorageLevel.MEMORY_AND_DISK)
-    val withMono = sortedWithMono(pre, order)
-    val rdd = GraftBridge.toInternalRdd(withMono)
-    val counts: Array[Long] = spark.sparkContext.runJob(
-      rdd,
-      (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        n
-      })
-    if (!preCached) pre.unpersist()
-    GraftBridge.internalCreateDataFrame(spark, rdd, withMono.schema)
-      .withColumn(idName, denseIdExpr(
-        counts.indices.map(p => p.toLong -> counts.take(p).sum).toMap))
-      .drop("__mono")
-  }
-
-  /**
-   * The in-memory build's variant: the sorted+mono stage is PERSISTED, the
-   * per-partition counts come from one cheap aggregation over the cache
-   * (which doubles as the cache's materialization — so upstream lineage is
-   * scanned exactly ONCE, where the unstaged variant needs a count pass and
-   * a consumer pass), and the total row count rides back to the caller,
-   * eliminating the separate `.count()` action every caller was issuing.
-   * Build-time actions (each a scheduling barrier that caps thread-scaling
-   * efficiency) drop from 4 per id-assignment to 1. The returned frame is a
-   * cheap projection over the cache — callers must NOT persist it again;
-   * the cache lives as long as the derived index does (same lifetime the
-   * previous caller-side persists had).
    *
-   * Returns (ids, row count, staged cache, sum). The PERSISTED staged frame
-   * rides along so callers can release the cache — the public result is a
-   * projection over it, whose unpersist() would not reach the cached plan
-   * (ADVICE r4).
+   * The table is a cheap projection over the staged cache — callers must NOT
+   * persist it again. The cache rides along in the result so its keeper can
+   * release it: unpersist() on the projection would not reach the cached
+   * plan (ADVICE r4).
    *
-   * @param sumCol optional column whose global sum rides the SAME counting
-   *   job (e.g. Σ df over the dictionary = the corpus posting count) —
-   *   callers that need such an aggregate would otherwise pay one more
-   *   full-fledged action for it. 0 when None.
+   * @param aggs long-valued aggregates over the input whose values ride the
+   *   SAME counting job, as its grand-total row (e.g. Σ df over the
+   *   dictionary = the corpus posting count; 0 each over an empty input) —
+   *   callers that need them would otherwise pay one more full action each.
    */
   private[graft] def zipWithDenseIdCounted(
-      df: DataFrame, order: Seq[Column], idName: String,
-      sumCol: Option[String] = None): (DataFrame, Long, DataFrame, Long) = {
-    // same input-staging rationale as zipWithDenseId: without it the range
-    // partitioner's sampling job recomputes the input lineage a second time
+      df: DataFrame, order: Seq[Column], idName: String, aggs: Seq[Column] = Nil): Staged = {
     val preCached = df.storageLevel != StorageLevel.NONE
     val pre = if (preCached) df else df.persist(StorageLevel.MEMORY_AND_DISK)
-    val staged = sortedWithMono(pre, order)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val rows = staged
-      .groupBy(shiftrightunsigned(col("__mono"), 33).as("__pid"))
-      .agg(count(lit(1)).as("__n"),
-        sum(sumCol.map(col).getOrElse(lit(0L))).as("__s"))
-      .collect()
-    val counts = rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val extraSum = rows.iterator.map(r => if (r.isNullAt(2)) 0L else r.getLong(2)).sum
-    if (!preCached) pre.unpersist() // staged is fully materialized above
-    // pids of empty partitions are absent; prefix-sum over the present ones
-    val (offsets, total) = counts.foldLeft((Map.empty[Long, Long], 0L)) {
-      case ((m, acc), (pid, n)) => (m + (pid -> acc), acc + n)
-    }
-    (staged.withColumn(idName, denseIdExpr(offsets)).drop("__mono"), total, staged,
-      extraSum)
-  }
-
-  private def sortedWithMono(df: DataFrame, order: Seq[Column]): DataFrame = {
-    val parts = math.max(1,
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    df.repartitionByRange(parts, order: _*)
+    val parts = math.max(1, df.sparkSession.sessionState.conf.numShufflePartitions)
+    val staged = pre.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("__mono", monotonically_increasing_id())
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the rollup's grand-total row (null pid) carries `aggs`
+    val (totals, perPid) = staged
+      .rollup(shiftrightunsigned(col("__mono"), 33).as("__pid"))
+      .agg(count(lit(1)).as("__n"), aggs: _*)
+      .collect()
+      .partition(_.isNullAt(0))
+    if (!preCached) pre.unpersist() // staged is fully materialized above
+    // pids of empty partitions are absent; prefix-sum over the present ones
+    val (offsets, total) = perPid.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      .foldLeft((Map.empty[Long, Long], 0L)) {
+        case ((m, acc), (pid, n)) => (m + (pid -> acc), acc + n)
+      }
+    val aggValues = totals.headOption
+      .fold(aggs.map(_ => 0L))(r => (2 until r.length).map(r.getLong))
+    Staged(staged.withColumn(idName, denseIdExpr(offsets)).drop("__mono"),
+      Some(Counts(total, aggValues)), Some(staged))
   }
 
   private def denseIdExpr(offsets: Map[Long, Long]): Column =
@@ -418,11 +386,6 @@ object IndexBuilder {
         transform(array_sort(collect_list(col("t"))), x => x.getField("text")),
         " ").as("text"))
 
-  /** docs with deterministic docId = dense rank of conv_id ascending. */
-  def docsWithIds(turns: DataFrame): DataFrame =
-    zipWithDenseId(assembleDocs(turns), Seq(col("conv_id")), "doc_id")
-      .select(col("doc_id"), col("conv_id"), col("text"))
-
   /**
    * Per-turn text-equality invariant vs the source (north rule): re-split is
    * impossible after concat, so the invariant is checked the other way —
@@ -435,10 +398,7 @@ object IndexBuilder {
       .filter(col("expected") =!= col("text"))
       .count()
 
-  /** Full build. All shuffles are keyed on the natural keys (term, doc_id,
-    * term_id) so Catalyst plans partial aggregation map-side; AQE splits
-    * skewed reducers; hot-term posting groups are additionally salted by
-    * docId range.
+  /** Full build, in memory: [[stages]] into the memory sink.
     *
     * The document TEXT is never shuffled: whitespace tokenization distributes
     * over turn concatenation (tokenize(a + " " + b) == tokenize(a) ++
@@ -446,71 +406,134 @@ object IndexBuilder {
     * turn in place and aggregating (conv_id, term) — only compact token rows
     * hit the exchange. Document assembly (assembleDocs) exists solely for the
     * turn-order invariant check and tests. */
-  def build(spark: SparkSession, turns: DataFrame, cfg: BuildConfig = BuildConfig()): IndexView = {
+  def build(spark: SparkSession, turns: DataFrame, cfg: BuildConfig = BuildConfig()): IndexView =
+    buildInto(new MemorySink, turns, cfg)
+
+  /** The build of a transcript table into `sink`: doc_map is the dense rank
+    * of the distinct conv_ids — it sorts only the key column — and tf the
+    * per-turn [[tfStage]]. */
+  private[graft] def buildInto(sink: Sink, turns: DataFrame, cfg: BuildConfig): IndexView =
+    stages(sink, cfg, "dense-docId over distinct conv_id", "per-turn analyze+explode+hash-agg")(
+      zipWithDenseIdCounted(turns.select("conv_id").distinct(), Seq(col("conv_id")), "doc_id")
+        .map(_.select("doc_id", "conv_id")))(
+      (docMap, nDocs) => tfStage(turns, docMap, nDocs, cfg.analyzer))
+
+  /** Where [[stages]] keeps its tables: cached in memory ([[MemorySink]]) or
+    * written to a store root (IndexStore's sink). */
+  private[graft] trait Sink {
+    /** Keep stage `name`'s table `df`; returns the frame later stages read. */
+    def table(name: String, detail: String)(df: => DataFrame): DataFrame
+
+    /** Keep stage `name`'s table `t` and count it: its rows and the values of
+      * `aggs` over it (the memory sink takes both from the dense-id staging
+      * that made `t`). Returns the frame later stages read, and the counts. */
+    def counted(name: String, detail: String, aggs: Seq[Column] = Nil)(
+        t: => Staged): (DataFrame, Counts)
+
+    /** Keep the postings assembled from the (term_id, salt, doc_id, tf, ntf,
+      * dl) `rows`; returns the blocks and their count. */
+    def postings(rows: => DataFrame): (DataFrame, Long)
+
+    /** What the build returns, given the built `view` and its df skew. */
+    def finish(view: IndexView, skew: Double): IndexView
+  }
+
+  /** The in-memory sink: every table is cached (a dense-id staging already
+    * is), counts come from the dense-id stagings' counting jobs, and the
+    * ACTUAL cached plans behind the public tables (plus the compact tf cache,
+    * which nothing public exposes) ride the view as `buildCaches` for
+    * unpin(); without them each build in a long-lived JVM leaks a set of
+    * MEMORY_AND_DISK caches (ADVICE r4). doc_stats/postings ride along too:
+    * pin() replaces both with re-laid-out caches on the COPY, so after
+    * pin().unpin() the build-level persists would otherwise be unreachable. */
+  private final class MemorySink extends Sink {
+    private val caches = ArrayBuffer.empty[DataFrame]
+    private def cached(df: DataFrame): DataFrame = {
+      caches += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+
+    def table(name: String, detail: String)(df: => DataFrame): DataFrame = cached(df)
+
+    def counted(name: String, detail: String, aggs: Seq[Column])(
+        t: => Staged): (DataFrame, Counts) = {
+      val s = t
+      require(s.counts.isDefined, s"stage $name: the memory sink counts dense-id stagings only")
+      s.cache.foreach(caches += _)
+      (s.table, s.counts.get)
+    }
+
+    def postings(rows: => DataFrame): (DataFrame, Long) = {
+      val p = cached(blocksFromRows(rows.sparkSession, rows).toDF())
+      (p, p.count())
+    }
+
+    def finish(view: IndexView, skew: Double): IndexView = view.copy(buildCaches = caches.toSeq)
+  }
+
+  /** The dictionary's counting aggregate over (term, df, cf) rows, besides
+    * its row count: Σ df (the corpus's postings), Σ cf (its tokens) and the
+    * largest df. */
+  private[graft] val DictAggs: Seq[Column] = Seq(
+    coalesce(sum("df"), lit(0L)).as("postings"),
+    coalesce(sum("cf"), lit(0L)).as("tokens"),
+    coalesce(max("df"), lit(0L)).as("max_df"))
+
+  /** The index meta and the dictionary's df skew (max df / mean df) from
+    * the build's counts alone: `docs`, the dictionary's counts over
+    * [[DictAggs]] and the block count. avgdl is tokens / docs, and 1.0 for a
+    * corpus without tokens (BM25's length norm needs a positive mean). */
+  private[graft] def corpusStats(docs: Long, dict: Counts, blocks: Long): (IndexMeta, Double) = {
+    val Seq(postings, tokens, maxDf) = dict.aggs
+    val avgdl = if (docs > 0 && tokens > 0) tokens.toDouble / docs else 1.0
+    val skew = if (postings > 0) maxDf / (postings.toDouble / dict.rows) else 0.0
+    (IndexMeta(docs, dict.rows, tokens, avgdl, postings, blocks), skew)
+  }
+
+  /** The index build (SURVEY.md §2.3 A1–A9), each stage kept by `sink`:
+    * doc_map → tf → term_dict → doc_stats → postings → meta. `docMap`
+    * stages the (doc_id, conv_id) table and `tf` derives the (doc_id, term,
+    * tf) table from the kept doc_map and its size; the details describe the
+    * two in a store's manifest.
+    *
+    * All shuffles are keyed on the natural keys (term, doc_id, term_id) so
+    * Catalyst plans partial aggregation map-side; AQE splits skewed
+    * reducers; hot-term posting groups are additionally salted by docId
+    * range. Dimension tables are broadcast while they fit; past the guard
+    * Catalyst falls back to a shuffle join (the 10^12-turn path, SURVEY.md
+    * §4). Every count the meta needs comes from a stage's own counting —
+    * no stage table is aggregated again. */
+  private[graft] def stages(sink: Sink, cfg: BuildConfig, docMapDetail: String, tfDetail: String)(
+      docMap: => Staged)(tf: (DataFrame, Long) => DataFrame): IndexView = {
+    val (docs, docCounts) = sink.counted("doc_map", docMapDetail)(docMap)
+    val nDocs = docCounts.rows
+    val spark = docs.sparkSession
     import spark.implicits._
 
-    // doc_map: dense docId over distinct conv_id — sorts only the key
-    // column. The counted/staged id assignment materializes its cache in
-    // the SAME action that returns nDocs (no separate count), and the
-    // projection below reads from that cache — no second persist.
-    val (docMapRaw, nDocs, docMapStaged, _) = zipWithDenseIdCounted(
-      turns.select("conv_id").distinct(), Seq(col("conv_id")), "doc_id")
-    val docMap = docMapRaw.select("doc_id", "conv_id")
+    // A1: per-doc term frequency
+    val tfs = sink.table("tf", tfDetail)(tf(docs, nDocs))
 
-    // A1: per-doc term frequency — the shared tf stage (dimension tables
-    // broadcast while they fit; past the guard Catalyst falls back to a
-    // shuffle join — the 10^12-turn path, SURVEY.md §4)
-    val tf = tfStage(turns, docMap, nDocs, cfg.analyzer)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // A2: vocabulary with df/cf and dictionary-ordered ids; the idf columns
+    // are cheap projections over the staged ids
+    val (dict, dictCounts) = sink.counted("term_dict", "df/cf+dense-termId", DictAggs)(
+      zipWithDenseIdCounted(termAgg(tfs), TermOrder, "term_id", DictAggs).map(withIdf(_, nDocs)))
 
-    // A2: vocabulary with df/cf and dictionary-ordered ids. Staged/counted
-    // like doc_map: this one action also materializes the tf cache (the
-    // dict aggregation is tf's first consumer), and idf columns are cheap
-    // projections over the staged cache for every later consumer.
-    // Σ df (= the corpus posting count, meta.postings) rides the dictionary
-    // counting job — previously one more dict-wide action at the end of build
-    val (dictRaw, nTerms, dictStaged, nPostings) = zipWithDenseIdCounted(
-      termAgg(tf), TermOrder, "term_id", sumCol = Some("df"))
-    val termDict = withIdf(dictRaw, nDocs).as[TermStat]
-
-    // The dict join is NOT persisted: it is a broadcast (map-side) join over
-    // the cached tf table, and re-running it per consumer is pure
+    // A3 + A7. The dict join is NOT kept: it is a broadcast (map-side) join
+    // over the kept tf table, and re-running it per consumer is pure
     // well-scaling CPU, whereas materializing a second 15M-row cache is a
     // memory-bandwidth pass that measured 0.73 efficiency at 2→8 cores
     // (BENCH/BASELINE.md round-2 stage profile).
-    val docStats = IndexBuilder.docStats(docMap, tf,
-      if (cfg.cosineNorms) Some(termDict.toDF() -> nTerms) else None)
-      .as[DocStat]
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val stats = sink.table("doc_stats",
+      if (cfg.cosineNorms) "maxtf+len+norm" else "maxtf+len (bm25-only)")(
+      docStats(docs, tfs, if (cfg.cosineNorms) Some(dict -> dictCounts.rows) else None))
 
-    val (totalTokens, avgdl) = {
-      val r = docStats.agg(sum("doc_len"), avg("doc_len")).head()
-      (r.getLong(0), r.getDouble(1))
-    }
+    // A4
+    val (postings, blocks) = sink.postings(postingRows(withTermIds(tfs, dict, dictCounts.rows),
+      stats, cfg.resolveSaltRange(nDocs, spark.sessionState.conf.numShufflePartitions), nDocs))
 
-    val parts = math.max(1,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val postings = buildPostings(spark, withTermIds(tf, termDict.toDF(), nTerms),
-      docStats, cfg.resolveSaltRange(nDocs, parts), nDocs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val meta = IndexMeta(
-      docs = nDocs,
-      terms = nTerms,
-      total_tokens = totalTokens,
-      avgdl = avgdl,
-      postings = nPostings,
-      blocks = postings.count())
-
-    IndexView(termDict, postings, docStats, docMap, meta, cfg,
-      // the ACTUAL cached plans behind the projected public tables (+ the
-      // compact tf cache, which nothing public exposes) — unpin() releases
-      // these; without them each build in a long-lived JVM leaks a set of
-      // MEMORY_AND_DISK caches (ADVICE r4). docStats/postings ride along
-      // too: pin() replaces both with re-laid-out caches on the COPY, so
-      // after pin().unpin() the build-level persists would otherwise be
-      // unreachable (unpersist is idempotent when unpin runs unpinned).
-      buildCaches = Seq(docMapStaged, dictStaged, tf, docStats.toDF(), postings.toDF()))
+    val (meta, skew) = corpusStats(nDocs, dictCounts, blocks)
+    sink.finish(
+      IndexView(dict.as[TermStat], postings.as[Block], stats.as[DocStat], docs, meta, cfg), skew)
   }
 
   /**
@@ -524,17 +547,10 @@ object IndexBuilder {
    * Block metadata uses only doc-local stats (tf/maxtf, doc_len) — no
    * idf/avgdl — so this stage needs no corpus-global inputs and appended
    * batches produce blocks that coexist with old ones (Schemas.Block).
+   *
+   * This is the first half: (term_id, salt, doc_id, tf, ntf, dl), the
+   * doc-local posting inputs of [[blocksFromRows]], salted by docId range.
    */
-  private[graft] def buildPostings(
-      spark: SparkSession,
-      tfWithIds: DataFrame,
-      docStats: Dataset[DocStat],
-      saltRange: Long,
-      nDocs: Long = -1L): Dataset[Block] =
-    blocksFromRows(spark, postingRows(tfWithIds, docStats.toDF(), saltRange, nDocs))
-
-  /** (term_id, salt, doc_id, tf, ntf, dl): the doc-local posting inputs of
-    * [[blocksFromRows]], salted by docId range. */
   private[graft] def postingRows(
       tfWithIds: DataFrame, docStats: DataFrame, saltRange: Long, nDocs: Long): DataFrame = {
     val statsDim = docStats.select("doc_id", "max_tf", "doc_len")

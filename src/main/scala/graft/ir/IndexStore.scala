@@ -2,14 +2,18 @@ package graft.ir
 
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField,
+  StructType}
+
+import graft.ir.IndexBuilder.{Counts, Staged}
 
 import scala.util.Try
 
 /**
- * Persistent index layout + checkpoint-resumable staged build.
+ * Persistent index layout + checkpoint-resumable staged build: the store
+ * sink of [[IndexBuilder.stages]], plus append, delete, compact and saveView.
  *
  * Iceberg-shaped logical tables materialized as Parquet (no Iceberg runtime
  * jar in the offline sandbox — SURVEY.md §7.3; the schemas and the
@@ -34,6 +38,10 @@ import scala.util.Try
  * killed mid-postings redoes only the unfinished buckets. Postings are
  * bucketed by term_id so each bucket is an independently restartable unit
  * (the per-partition checkpoint granularity demanded at 10^12-turn scale).
+ *
+ * Nothing is read back to be counted: a stage's rows (and the dictionary's
+ * Σdf, Σcf and max df) ride an Observation on the stage's own write and are
+ * recorded in its manifest line, where a resumed run finds them.
  */
 object IndexStore {
 
@@ -56,22 +64,36 @@ object IndexStore {
     "index_meta.parquet" -> org.apache.spark.sql.Encoders.product[IndexMeta].schema,
     "tf.parquet" -> StructType(Seq(
       StructField("doc_id", LongType), StructField("term", StringType),
-      StructField("tf", IntegerType))))
+      StructField("tf", IntegerType))),
+    "posting_rows.parquet" -> StructType(Seq(
+      StructField("term_id", LongType), StructField("salt", LongType),
+      StructField("doc_id", LongType), StructField("tf", IntegerType),
+      StructField("ntf", DoubleType), StructField("dl", LongType),
+      StructField("bucket", IntegerType))))
 
-  /** A table under `root`, read with its schema when the store knows it
-    * (only the schema's columns: a bucketed table's partition column is
-    * dropped, so every root of a table unions by position). */
-  private def read(spark: SparkSession, root: String, table: String): DataFrame =
-    tableSchema.get(table) match {
-      case Some(s) => spark.read.schema(s).parquet(s"$root/$table")
-        .select(s.fieldNames.toSeq.map(col): _*)
-      case None => spark.read.parquet(s"$root/$table")
-    }
+  /** A table under `root`, read with its schema and only the schema's
+    * columns: postings' bucket partition column is dropped, so every root of
+    * a table unions by position; posting_rows keeps it for the per-bucket
+    * filter. */
+  private def read(spark: SparkSession, root: String, table: String): DataFrame = {
+    val s = tableSchema(table)
+    spark.read.schema(s).parquet(s"$root/$table").select(s.fieldNames.toSeq.map(col): _*)
+  }
 
-  /** Overwrite `table` under `root`; rows committed, read back. */
-  private def save(spark: SparkSession, df: DataFrame, root: String, table: String): Long = {
-    df.write.mode("overwrite").parquet(s"$root/$table")
-    read(spark, root, table).count()
+  /** Overwrite `path` with `t`'s table, partitioned by `partitionBy`, then
+    * release the staging cache `t` reads. Returns the rows written followed
+    * by the values of `aggs`, all counted by an Observation on the write
+    * itself: nothing is read back. */
+  private def save(t: Staged, path: String, partitionBy: Seq[String] = Nil,
+      aggs: Seq[Column] = Nil): Row = {
+    val obs = Observation()
+    val w = t.table.observe(obs, count(lit(1)).as("rows"), aggs: _*).write.mode("overwrite")
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(path)
+    t.cache.foreach(_.unpersist())
+    // a plan that lost the observation completes it with an empty row
+    val r = GraftBridge.observed(obs)
+    require(r.length == aggs.size + 1, s"the write of $path observed no counts")
+    r
   }
 
   // all small-file I/O (manifest, config, tombstone paths, sizes) routes
@@ -130,16 +152,38 @@ object IndexStore {
       * `since` is when the stage's work began. */
     def stage(
         name: String, detail: => String,
-        table: String = "", since: Long = System.nanoTime())(body: => Long): Unit =
-      if (!done.contains(prefix + name)) {
-        val rows = body
+        table: String = "", since: Long = System.nanoTime())(body: => Long): Unit = {
+      record(name, if (table.nonEmpty) table else s"$name.parquet", since)((body, detail))
+      ()
+    }
+
+    /** [[stage]] whose body returns its line's detail with the row count. */
+    private def record(name: String, table: String, since: Long = System.nanoTime())(
+        body: => (Long, String)): StageRecord =
+      done.getOrElse(prefix + name, {
+        val (rows, detail) = body
         val rec = StageRecord(prefix + name, rows, (System.nanoTime() - since) / 1000000,
-          StoreIO.dirBytes(s"$root/${if (table.nonEmpty) table else s"$name.parquet"}"), detail)
+          StoreIO.dirBytes(s"$root/$table"), detail)
         synchronized {
           appendManifest(dir, rec)
           done += rec.stage -> rec
         }
+        rec
+      })
+
+    /** Stage `name` [[save]]s `t` as `table` under `root`. Its manifest line
+      * records the rows written and, after `detail`, the values of `aggs`
+      * as name=value; a resumed run takes the counts from that line. */
+    def write(name: String, detail: String, table: String = "", partitionBy: Seq[String] = Nil,
+        aggs: Seq[Column] = Nil)(t: => Staged): Counts = {
+      val path = if (table.nonEmpty) table else s"$name.parquet"
+      val rec = record(name, path) {
+        val r = save(t, s"$root/$path", partitionBy, aggs)
+        val values = (1 until r.length).map(i => s"${r.schema(i).name}=${r.getLong(i)}")
+        (r.getLong(0), (detail +: values).mkString(" "))
       }
+      Counts(rec.rows, rec.detail.split(" ").toSeq.takeRight(aggs.size).map(_.split("=")(1).toLong))
+    }
 
     def records: Map[String, StageRecord] = done
 
@@ -234,105 +278,74 @@ object IndexStore {
   }
 
   /**
-   * Staged, resumable build of `turns` into `dir`. Returns the loaded
-   * IndexView; the stage lineage (plus skew and postings throughput) is
-   * written to build_metrics.parquet.
+   * Staged, resumable build of `turns` into `dir`: [[IndexBuilder.stages]]
+   * into the store sink. Returns the stored view; the stage lineage (plus
+   * skew and postings throughput) is written to build_metrics.parquet.
    */
   def buildAndSave(
       spark: SparkSession,
       turns: DataFrame,
       dir: String,
       cfg: BuildConfig = BuildConfig()): IndexView =
-    stagedBuild(spark, dir, cfg, turns,
-      "dense-docId over distinct conv_id", "per-turn analyze+explode+hash-agg")(
-      IndexBuilder.zipWithDenseId(
-        turns.select("conv_id").distinct(), Seq(col("conv_id")), "doc_id")
-        .select("doc_id", "conv_id"))(
-      (docMap, nDocs) => IndexBuilder.tfStage(turns, docMap, nDocs, cfg.analyzer))
+    IndexBuilder.buildInto(new StoreSink(spark, dir, cfg, turns), turns, cfg)
 
-  /** The staged build behind buildAndSave and compact: only the doc_map and
-    * tf stage bodies differ; dictionary, stats, postings, meta and metrics
-    * derive from the persisted doc_map/tf. `convIds` feeds the begin
-    * signature (deterministic, so a build killed mid-way and re-run against
-    * a DIFFERENT input cannot combine stages of two corpora — ADVICE r1). */
-  private def stagedBuild(
-      spark: SparkSession, dir: String, cfg: BuildConfig, convIds: DataFrame,
-      docMapDetail: String, tfDetail: String)(docMapOut: => DataFrame)(
-      tfOut: (DataFrame, Long) => DataFrame): IndexView = {
+  /** The store sink of [[IndexBuilder.stages]] behind buildAndSave and
+    * compact: each stage is a [[Commit]] stage that writes its table under
+    * `dir` and records the rows its write counted, and later stages read the
+    * written table. Creating the sink claims `dir` for `cfg` and begins the
+    * run with the signature of `convIds` (deterministic, so a build killed
+    * mid-way and re-run against a DIFFERENT input cannot combine stages of
+    * two corpora — ADVICE r1). */
+  private final class StoreSink(spark: SparkSession, dir: String, cfg: BuildConfig,
+      convIds: DataFrame) extends IndexBuilder.Sink {
     claim(dir, cfg)
-    val log = new Commit(dir, root = dir)
+    private val log = new Commit(dir, root = dir)
     log.begin(signature(convIds))
 
-    log.stage("doc_map", docMapDetail)(save(spark, docMapOut, dir, "doc_map.parquet"))
-    lazy val docMap = read(spark, dir, "doc_map.parquet")
-    lazy val nDocs = docMap.count()
+    def table(name: String, detail: String)(df: => DataFrame): DataFrame =
+      counted(name, detail, Nil)(Staged(df))._1
 
-    log.stage("tf", tfDetail)(save(spark, tfOut(docMap, nDocs), dir, "tf.parquet"))
-    lazy val tf = read(spark, dir, "tf.parquet")
-
-    log.stage("term_dict", "df/cf+dense-termId") {
-      save(spark, IndexBuilder.withIdf(IndexBuilder.zipWithDenseId(
-        IndexBuilder.termAgg(tf), IndexBuilder.TermOrder, "term_id"), nDocs),
-        dir, "term_dict.parquet")
-    }
-    lazy val termDict = read(spark, dir, "term_dict.parquet")
-    lazy val nTerms = termDict.count()
-
-    log.stage("doc_stats", if (cfg.cosineNorms) "maxtf+len+norm" else "maxtf+len (bm25-only)") {
-      save(spark, IndexBuilder.docStats(docMap, tf,
-        if (cfg.cosineNorms) Some(termDict -> nTerms) else None), dir, "doc_stats.parquet")
-    }
-    lazy val docStats = read(spark, dir, "doc_stats.parquet")
-
-    log.stage("posting_rows", "doc-local stats+salt+bucket-partitioned scratch") {
-      val parts = math.max(1,
-        spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      IndexBuilder.postingRows(IndexBuilder.withTermIds(tf, termDict, nTerms), docStats,
-        cfg.resolveSaltRange(nDocs, parts), nDocs)
-        .withColumn("bucket", pmod(col("term_id"), lit(cfg.buckets)))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/posting_rows.parquet")
-      spark.read.parquet(s"$dir/posting_rows.parquet").count()
+    def counted(name: String, detail: String, aggs: Seq[Column])(
+        t: => Staged): (DataFrame, Counts) = {
+      val c = log.write(name, detail, aggs = aggs)(t)
+      (read(spark, dir, s"$name.parquet"), c)
     }
 
-    // one independently-resumable job per term_id bucket (partition-pruned
-    // read of the scratch table — no rescan of earlier lineage)
-    (0 until cfg.buckets).foreach { bkt =>
-      log.stage(s"postings:bucket=$bkt", s"bucket=$bkt", s"postings.parquet/bucket=$bkt") {
-        val rows = spark.read.parquet(s"$dir/posting_rows.parquet")
-          .filter(col("bucket") === bkt)
-        save(spark, IndexBuilder.blocksFromRows(spark, rows).toDF(), dir,
-          s"postings.parquet/bucket=$bkt")
-      }
-    }
-
-    // postings count = Σ df over the (small) dict — not a tf-table scan
-    lazy val nPostings = termDict.agg(coalesce(sum("df"), lit(0L))).head().getLong(0)
-
-    log.stage("index_meta", "corpus stats") {
-      import spark.implicits._
-      val r = docStats.agg(coalesce(sum("doc_len"), lit(0L)), avg("doc_len")).head()
-      val avgdl = if (r.isNullAt(1) || r.getDouble(1) <= 0) 1.0 else r.getDouble(1)
-      val nBlocks = read(spark, dir, "postings.parquet").count()
-      Seq(IndexMeta(nDocs, nTerms, r.getLong(0), avgdl, nPostings, nBlocks))
-        .toDS().write.mode("overwrite").parquet(s"$dir/index_meta.parquet")
-      1L
-    }
-
-    log.metrics(spark, "lineage+skew") {
-      val skew = termDict.agg(max("df").cast("double") / avg("df")).head().getDouble(0)
-      val postingsMs = log.records.collect {
-        case (s, r) if s.startsWith("postings:") || s == "posting_rows" => r.millis
+    /** The rows land in a bucket-partitioned scratch table first; then one
+      * independently-resumable job per term_id bucket assembles that
+      * bucket's blocks from a partition-pruned read of the scratch table (no
+      * rescan of earlier lineage). */
+    def postings(rows: => DataFrame): (DataFrame, Long) = {
+      log.write("posting_rows", "doc-local stats+salt+bucket-partitioned scratch",
+        partitionBy = Seq("bucket"))(
+        Staged(rows.withColumn("bucket", pmod(col("term_id"), lit(cfg.buckets)))))
+      val blocks = (0 until cfg.buckets).map { bkt =>
+        log.write(s"postings:bucket=$bkt", s"bucket=$bkt", s"postings.parquet/bucket=$bkt")(
+          Staged(IndexBuilder.blocksFromRows(spark,
+            read(spark, dir, "posting_rows.parquet").filter(col("bucket") === bkt)).toDF())).rows
       }.sum
-      val postingsPerSec =
-        if (postingsMs > 0) nPostings * 1000.0 / postingsMs else 0.0
-      Seq(
-        BuildMetric("skew_ratio", "max_df/mean_df", skew.toLong, 0, 0, f"$skew%.3f"),
-        BuildMetric("postings_per_sec", "build throughput",
-          postingsPerSec.toLong, 0, postingsMs, f"$postingsPerSec%.1f"))
+      (read(spark, dir, "postings.parquet"), blocks)
     }
 
-    load(spark, dir, cfg)
+    def finish(view: IndexView, skew: Double): IndexView = {
+      import spark.implicits._
+      log.stage("index_meta", "corpus stats") {
+        Seq(view.meta).toDS().write.mode("overwrite").parquet(s"$dir/index_meta.parquet")
+        1L
+      }
+      log.metrics(spark, "lineage+skew") {
+        val postingsMs = log.records.collect {
+          case (s, r) if s.startsWith("postings:") || s == "posting_rows" => r.millis
+        }.sum
+        val postingsPerSec =
+          if (postingsMs > 0) view.meta.postings * 1000.0 / postingsMs else 0.0
+        Seq(
+          BuildMetric("skew_ratio", "max_df/mean_df", skew.toLong, 0, 0, f"$skew%.3f"),
+          BuildMetric("postings_per_sec", "build throughput",
+            postingsPerSec.toLong, 0, postingsMs, f"$postingsPerSec%.1f"))
+      }
+      view
+    }
   }
 
   // ---------------------------------------------------------------- append
@@ -382,6 +395,26 @@ object IndexStore {
       if (tombs.isEmpty) df
       else df.join(tombs.map(t => spark.read.schema(tombSchema).parquet(tombPath(dir, t)))
         .reduce(_ union _), Seq("doc_id"), "left_anti")
+
+    /** The serving view of this snapshot, whose meta is `meta`. */
+    def view(cfg: BuildConfig, meta: IndexMeta): IndexView = {
+      import spark.implicits._
+      // cosine mode rewrites doc_stats in full per append (norms shift with
+      // idf); BM25-only mode appends delta stats files like doc_map/postings
+      val docStats =
+        if (cfg.cosineNorms) latest("doc_stats.parquet") else union("doc_stats.parquet")
+      // tombstones apply at the doc tables only: every query path resolves
+      // hits through the doc_stats join, so deleted docs vanish from all
+      // results without touching a posting block; df/idf/avgdl stay as built
+      // until compact() folds the deletes in physically (see `delete`)
+      IndexView(
+        termDict = latest("term_dict.parquet").as[TermStat],
+        postings = union("postings.parquet").as[Block],
+        docStats = live(docStats).as[DocStat],
+        docMap = live(union("doc_map.parquet")),
+        meta = meta,
+        cfg = cfg)
+    }
   }
 
   /**
@@ -448,24 +481,24 @@ object IndexStore {
         val r = oldDocMap.agg(max("doc_id")).head()
         if (r.isNullAt(0)) -1L else r.getLong(0) // empty base (streaming bootstrap)
       }
-      log.stage("doc_map", s"delta dense-docId after $oldMaxDoc") {
-        save(spark, IndexBuilder.zipWithDenseId(newConvs.toDF(), Seq(col("conv_id")), "rk")
-          .select((col("rk") + lit(oldMaxDoc + 1)).as("doc_id"), col("conv_id")),
-          bdir, "doc_map.parquet")
+      log.write("doc_map", s"delta dense-docId after $oldMaxDoc") {
+        IndexBuilder.zipWithDenseIdCounted(newConvs.toDF(), Seq(col("conv_id")), "rk")
+          .map(_.select((col("rk") + lit(oldMaxDoc + 1)).as("doc_id"), col("conv_id")))
       }
-      lazy val deltaDocMap = read(spark, bdir, "doc_map.parquet")
+      val deltaDocMap = read(spark, bdir, "doc_map.parquet")
 
       // the docMap join filters to the new conversations — old text is
       // neither read (source pruning is the caller's partition filter) nor
       // tokenized nor shuffled
-      log.stage("tf", "delta per-turn analyze+explode+hash-agg") {
-        save(spark, IndexBuilder.tfStage(newTurns, deltaDocMap, nNew, cfg.analyzer),
-          bdir, "tf.parquet")
-      }
-      lazy val deltaTf = read(spark, bdir, "tf.parquet")
+      log.write("tf", "delta per-turn analyze+explode+hash-agg")(
+        Staged(IndexBuilder.tfStage(newTurns, deltaDocMap, nNew, cfg.analyzer)))
+      val deltaTf = read(spark, bdir, "tf.parquet")
 
       val nDocsAll = oldMeta.docs + nNew
-      log.stage("term_dict", "old df/cf + delta, ids preserved, idf from new N") {
+      // the write counts the whole new dictionary: Σdf, Σcf and max df are
+      // the grown corpus's postings, tokens and skew
+      val dictCounts = log.write("term_dict", "old df/cf + delta, ids preserved, idf from new N",
+        aggs = IndexBuilder.DictAggs) {
         val oldDict = old.latest("term_dict.parquet")
         val joined = oldDict.select("term_id", "term", "df", "cf")
           .join(IndexBuilder.termAgg(deltaTf)
@@ -479,65 +512,51 @@ object IndexStore {
           val r = oldDict.agg(max("term_id")).head()
           if (r.isNullAt(0)) -1L else r.getLong(0) // empty base dict
         }
-        val fresh = IndexBuilder.zipWithDenseId(
+        val fresh = IndexBuilder.zipWithDenseIdCounted(
           joined.filter(col("term_id").isNull)
             .select(col("term"), col("ddf").as("df"), col("dcf").as("cf")),
           IndexBuilder.TermOrder, "rk")
+        Staged(IndexBuilder.withIdf(known.unionByName(fresh.table
           .select((col("rk") + lit(oldMaxTid + 1)).as("term_id"),
-            col("term"), col("df"), col("cf"))
-        save(spark, IndexBuilder.withIdf(known.unionByName(fresh), nDocsAll),
-          bdir, "term_dict.parquet")
+            col("term"), col("df"), col("cf"))), nDocsAll), cache = fresh.cache)
       }
-      lazy val newDict = read(spark, bdir, "term_dict.parquet")
-      lazy val nTermsAll = newDict.count()
+      val newDict = read(spark, bdir, "term_dict.parquet")
 
-      log.stage("doc_stats",
+      log.write("doc_stats",
         if (cfg.cosineNorms) "full recompute from tf_all x new idf (text-free)"
         else "delta-only (bm25-only: max_tf/doc_len append-invariant)") {
         // BM25-only: per-doc stats never change once indexed — write ONLY
         // the delta's rows (load() unions base + batch deltas, like
         // doc_map/postings). Neither compute NOR I/O touches old docs.
-        save(spark,
+        Staged(
           if (cfg.cosineNorms)
             IndexBuilder.docStats(oldDocMap.union(deltaDocMap),
-              old.union("tf.parquet").union(deltaTf), Some(newDict -> nTermsAll))
-          else IndexBuilder.docStats(deltaDocMap, deltaTf, None),
-          bdir, "doc_stats.parquet")
+              old.union("tf.parquet").union(deltaTf), Some(newDict -> dictCounts.rows))
+          else IndexBuilder.docStats(deltaDocMap, deltaTf, None))
       }
-      lazy val deltaStats =
+      val deltaStats =
         read(spark, bdir, "doc_stats.parquet").filter(col("doc_id") > oldMaxDoc)
 
-      log.stage("postings", "delta blocks (docIds after old max; old blocks untouched)") {
-        val parts = math.max(1,
-          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-        IndexBuilder.buildPostings(spark,
-          IndexBuilder.withTermIds(deltaTf, newDict, nTermsAll), deltaStats.as[DocStat],
-          cfg.resolveSaltRange(nNew, parts), nNew)
-          .withColumn("bucket", pmod(col("term_id"), lit(cfg.buckets)))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$bdir/postings.parquet")
-        read(spark, bdir, "postings.parquet").count()
-      }
+      val deltaBlocks = log.write("postings",
+        "delta blocks (docIds after old max; old blocks untouched)", partitionBy = Seq("bucket")) {
+        Staged(IndexBuilder.blocksFromRows(spark, IndexBuilder.postingRows(
+          IndexBuilder.withTermIds(deltaTf, newDict, dictCounts.rows), deltaStats,
+          cfg.resolveSaltRange(nNew, spark.sessionState.conf.numShufflePartitions), nNew))
+          .withColumn("bucket", pmod(col("term_id"), lit(cfg.buckets))))
+      }.rows
 
+      // doc_len is append-invariant per doc, so the grown dictionary's Σcf is
+      // old + delta tokens whether the stats file is full (cosine mode) or
+      // delta-only (BM25-only mode)
+      val meta = IndexBuilder.corpusStats(nDocsAll, dictCounts, oldMeta.blocks + deltaBlocks)._1
       log.stage("index_meta", "corpus stats after append") {
-        // total_tokens = old + delta (doc_len is append-invariant per doc),
-        // avgdl = exact long division — works whether the stats file is
-        // full (cosine mode) or delta-only (BM25-only mode)
-        val totalTokens = oldMeta.total_tokens +
-          deltaStats.agg(coalesce(sum("doc_len"), lit(0L))).head().getLong(0)
-        val avgdl =
-          if (nDocsAll <= 0 || totalTokens <= 0) 1.0
-          else totalTokens.toDouble / nDocsAll
-        Seq(IndexMeta(nDocsAll, nTermsAll, totalTokens, avgdl,
-          oldMeta.postings + deltaTf.count(),
-          oldMeta.blocks + read(spark, bdir, "postings.parquet").count()))
-          .toDS().write.mode("overwrite").parquet(s"$bdir/index_meta.parquet")
+        Seq(meta).toDS().write.mode("overwrite").parquet(s"$bdir/index_meta.parquet")
         1L
       }
 
       log.metrics(spark, "append lineage")()
       log.stage("commit", sig)(1L)
-      load(spark, dir)
+      new Snapshot(spark, dir).view(cfg, meta)
     } finally newConvs.unpersist()
   }
 
@@ -579,8 +598,7 @@ object IndexStore {
     // an uncommitted tombstone of a crashed delete holds no id: the retry
     // takes the same one and overwrites it
     val id = nextEventId(manifest)
-    victims.write.mode("overwrite").parquet(tombPath(dir, id))
-    val n = spark.read.schema(tombSchema).parquet(tombPath(dir, id)).count()
+    val n = save(Staged(victims), tombPath(dir, id)).getLong(0)
     // nothing resolved: drop the empty file, commit nothing
     if (n == 0) StoreIO.delete(tombPath(dir, id))
     else new Commit(dir, s"t$id:", dir)
@@ -619,9 +637,9 @@ object IndexStore {
     require(incomplete.isEmpty,
       s"finish or discard incomplete append batches $incomplete before compacting")
     val docMap = src.live(src.union("doc_map.parquet"))
-    stagedBuild(spark, dstDir, cfg, docMap,
-      s"compacted from $srcDir", s"compacted from $srcDir")(docMap)(
-      (_, _) => src.live(src.union("tf.parquet")))
+    val detail = s"compacted from $srcDir"
+    IndexBuilder.stages(new StoreSink(spark, dstDir, cfg, docMap), cfg, detail, detail)(
+      Staged(docMap))((_, _) => src.live(src.union("tf.parquet")))
   }
 
   /** Output partition count targeting ~128 MB files (guide §6): a saveView
@@ -753,21 +771,6 @@ object IndexStore {
         allCommitted.contains(asOf) || allTombs.contains(asOf),
       s"load: asOf=$asOf is not a committed batch or tombstone of $dir " +
         s"(batches: ${allCommitted.mkString(",")}; tombstones: ${allTombs.mkString(",")})")
-    // cosine mode rewrites doc_stats in full per append (norms shift with
-    // idf); BM25-only mode appends delta stats files like doc_map/postings
-    val docStats =
-      if (effective.cosineNorms) snap.latest("doc_stats.parquet")
-      else snap.union("doc_stats.parquet")
-    // tombstones apply at the doc tables only: every query path resolves
-    // hits through the doc_stats join, so deleted docs vanish from all
-    // results without touching a posting block; df/idf/avgdl stay as built
-    // until compact() folds the deletes in physically (see `delete`)
-    IndexView(
-      termDict = snap.latest("term_dict.parquet").as[TermStat],
-      postings = snap.union("postings.parquet").as[Block],
-      docStats = snap.live(docStats).as[DocStat],
-      docMap = snap.live(snap.union("doc_map.parquet")),
-      meta = snap.latest("index_meta.parquet").as[IndexMeta].head(),
-      cfg = effective)
+    snap.view(effective, snap.latest("index_meta.parquet").as[IndexMeta].head())
   }
 }

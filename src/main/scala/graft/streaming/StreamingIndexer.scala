@@ -403,7 +403,7 @@ object StreamingIndexer {
       val s = sparkIn.newSession()
       s.conf.set("spark.sql.shuffle.partitions", math.max(
         2 * sparkIn.sparkContext.defaultParallelism,
-        sparkIn.conf.get("spark.sql.shuffle.partitions", "32").toInt).toString)
+        sparkIn.sessionState.conf.numShufflePartitions).toString)
       s.conf.set("spark.sql.adaptive.enabled", "true")
       s
     }

@@ -81,13 +81,38 @@ class DeterminismResumeSpec extends SparkSpec {
     assert(resumed.meta == full.meta)
   }
 
+  /** doc_stats equal: integer fields exactly, norm to 1e-12. */
+  private def assertSameStats(a: IndexView, b: IndexView, clue: String): Unit = {
+    val sa = a.docStats.collect().sortBy(_.doc_id)
+    val sb = b.docStats.collect().sortBy(_.doc_id)
+    assert(sa.map(d => (d.doc_id, d.conv_id, d.max_tf, d.doc_len)).toSeq ==
+      sb.map(d => (d.doc_id, d.conv_id, d.max_tf, d.doc_len)).toSeq, clue)
+    sa.zip(sb).foreach { case (x, y) => assert(math.abs(x.norm - y.norm) < 1e-12, clue) }
+  }
+
   test("staged build equals in-memory build") {
-    val turns = Fixtures.synthTurns(spark, 80)
-    val dir = graft.SparkSpec.tmpDir("idx-mem")
-    val staged = IndexStore.buildAndSave(spark, turns, dir, BuildConfig(buckets = 4))
-    val mem = IndexBuilder.build(spark, turns, BuildConfig(buckets = 4))
-    assert(postingsDump(staged) == postingsDump(mem))
-    assert(dictDump(staged) == dictDump(mem))
+    import spark.implicits._
+    def turnsOf(convs: (String, String)*) = convs.map { case (c, text) =>
+      Turn(c, 0, "user", text, null, new java.sql.Timestamp(0L))
+    }.toDF()
+    // every token of the all-filtered corpus is a stopword or too short
+    Seq(
+      "synth-80" -> Fixtures.synthTurns(spark, 80),
+      "all-filtered" -> turnsOf("c1" -> "de la y el", "c2" -> "a x para como"),
+      "zero-row" -> turnsOf()).foreach { case (name, turns) =>
+      val dir = graft.SparkSpec.tmpDir("idx-mem")
+      val staged = IndexStore.buildAndSave(spark, turns, dir, BuildConfig(buckets = 4))
+      val mem = IndexBuilder.build(spark, turns, BuildConfig(buckets = 4))
+      assert(postingsDump(staged) == postingsDump(mem), name)
+      assert(dictDump(staged) == dictDump(mem), name)
+      assert(staged.meta == mem.meta, name)
+      assertSameStats(staged, mem, name)
+      if (name != "synth-80") {
+        // a corpus without tokens: the store's avgdl rule, 1.0
+        assert(mem.meta.terms == 0 && mem.meta.avgdl == 1.0, s"$name: ${mem.meta}")
+        assert(mem.meta.docs == (if (name == "zero-row") 0 else 2), s"$name: ${mem.meta}")
+      }
+    }
   }
 
   test("resuming a base build against a different input is refused") {

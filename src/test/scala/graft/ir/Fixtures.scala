@@ -60,6 +60,15 @@ object Fixtures {
   def synthTurns(spark: SparkSession, nConvs: Int, seed: Long = 42L): DataFrame =
     Synth.turns(spark, nConvs, seed)
 
+  /** Assembled documents with doc_id = the dense rank of conv_id, the ids
+    * IndexBuilder's doc_map assigns. */
+  def docsWithIds(turns: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    IndexBuilder.zipWithDenseIdCounted(
+      IndexBuilder.assembleDocs(turns), Seq(col("conv_id")), "doc_id")
+      .table.select(col("doc_id"), col("conv_id"), col("text"))
+  }
+
   /** Oracle-side corpus matching synthTurns: conv → concatenated text. */
   def synthCorpus(spark: SparkSession, nConvs: Int, seed: Long = 42L): Seq[(String, String)] = {
     import org.apache.spark.sql.functions._

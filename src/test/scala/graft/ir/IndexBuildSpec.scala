@@ -14,7 +14,7 @@ class IndexBuildSpec extends SparkSpec {
   test("turn-order invariant holds") {
     val turns = Fixtures.tp2Turns(spark)
     assert(IndexBuilder.checkTurnInvariant(turns,
-      IndexBuilder.docsWithIds(turns).select("conv_id", "text")) == 0)
+      Fixtures.docsWithIds(turns).select("conv_id", "text")) == 0)
   }
 
   test("docIds are dense rank of conv_id") {

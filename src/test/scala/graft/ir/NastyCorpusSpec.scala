@@ -34,7 +34,7 @@ class NastyCorpusSpec extends SparkSpec {
     val df = turns(spark)
     val view = IndexBuilder.build(spark, df)
     assert(view.meta.docs == nasty.length)
-    assert(IndexBuilder.checkTurnInvariant(df, IndexBuilder.docsWithIds(df)) == 0)
+    assert(IndexBuilder.checkTurnInvariant(df, Fixtures.docsWithIds(df)) == 0)
 
     // oracle over the same assembled docs (null turns concatenate as the
     // engine concatenates them)

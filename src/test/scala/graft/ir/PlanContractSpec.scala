@@ -58,9 +58,9 @@ class PlanContractSpec extends SparkSpec {
   test("build plan: document text never crosses an exchange") {
     import org.apache.spark.sql.functions.col
     val turns = Fixtures.synthTurns(spark, 50)
-    val docMap = IndexBuilder.zipWithDenseId(
+    val docMap = IndexBuilder.zipWithDenseIdCounted(
       turns.select("conv_id").distinct(), Seq(col("conv_id")), "doc_id")
-      .select("doc_id", "conv_id")
+      .table.select("doc_id", "conv_id")
     val tf = IndexBuilder.tfStage(turns, docMap, 50L, Analyzer.Reference)
     tf.count()
     val plan = tf.queryExecution.executedPlan.toString

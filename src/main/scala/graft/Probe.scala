@@ -314,8 +314,13 @@ object Probe {
     s.searchBm25Wand(spark, "pais libre", 10).count()
     val modes = Seq[(String, String => DataFrame)]("exact" -> (s.search(spark, _, 10, Or, Bm25)),
       "wand" -> (s.searchBm25Wand(spark, _, 10)), "and" -> (s.search(spark, _, 10, And, Bm25)))
-    val percentiles = modes.map { case (mode, run) =>
-      val xs = (1 to 4).flatMap(_ => BotQueries.map(q => sec(run(q).count()))).sorted
+    // the classes interleave per query, in an order rotated each round, so
+    // no class is timed first (and slow) for its position alone
+    val timed = (0 until 4).flatMap(round => BotQueries.flatMap(q =>
+      modes.indices.map(i => modes((i + round) % modes.size))
+        .map { case (mode, run) => mode -> sec(run(q).count()) }))
+    val percentiles = modes.map { case (mode, _) =>
+      val xs = timed.collect { case (`mode`, t) => t }.sorted
       def pct(p: Double) = xs(math.min(xs.length - 1, (p * xs.length).toInt))
       f"$mode p50=${pct(0.5)}%.3f p95=${pct(0.95)}%.3f"
     }

@@ -84,7 +84,7 @@ object IndexStore {
     * release the staging cache `t` reads. Returns the rows written followed
     * by the values of `aggs`, all counted by an Observation on the write
     * itself: nothing is read back. */
-  private def save(t: Staged, path: String, partitionBy: Seq[String] = Nil,
+  private[graft] def save(t: Staged, path: String, partitionBy: Seq[String] = Nil,
       aggs: Seq[Column] = Nil): Row = {
     val obs = Observation()
     val w = t.table.observe(obs, count(lit(1)).as("rows"), aggs: _*).write.mode("overwrite")
@@ -131,8 +131,9 @@ object IndexStore {
    * `bN:commit` is, a tombstone once `tN:commit` is.
    *
    * Stage bodies may run concurrently (saveView): recording is serialised.
+   * A streaming flush runs as one Commit in its stage dir's own log.
    */
-  private final class Commit(dir: String, prefix: String = "", root: String) {
+  private[graft] final class Commit(dir: String, prefix: String = "", root: String) {
     @volatile private var done = readManifest(dir)
 
     /** The run's input signature, recorded before any other stage; a run
@@ -158,7 +159,7 @@ object IndexStore {
     }
 
     /** [[stage]] whose body returns its line's detail with the row count. */
-    private def record(name: String, table: String, since: Long = System.nanoTime())(
+    def record(name: String, table: String, since: Long = System.nanoTime())(
         body: => (Long, String)): StageRecord =
       done.getOrElse(prefix + name, {
         val (rows, detail) = body

@@ -75,20 +75,23 @@ private[graft] object StoreIO {
       .flatMap(_.split("\n", -1).dropRight(1)).filter(_.nonEmpty)
 
   /** Append one line to a small log file. Object stores have no appendable
-    * files, so this is read + rewrite-to-temp + delete + rename — fine for
-    * the manifest's single-writer, tens-of-lines scale. A crash before the
-    * delete leaves the log as it was; a crash between the delete and the
-    * rename leaves only the complete tmp copy, which [[readLog]] reads and
-    * the next append first renames into place, so no recorded line is
-    * lost. */
-  def appendLine(path: String, line: String): Unit = {
+    * files, so this is a [[rewriteLog]] — fine for the manifest's
+    * single-writer, tens-of-lines scale. */
+  def appendLine(path: String, line: String): Unit = rewriteLog(path)(_ :+ line)
+
+  /** Replace a log's lines with `edit` of them: read + rewrite-to-temp +
+    * delete + rename. A crash before the delete leaves the log as it was; a
+    * crash between the delete and the rename leaves only the complete tmp
+    * copy, which [[readLog]] reads and the next rewrite first renames into
+    * place, so no recorded line is lost. */
+  def rewriteLog(path: String)(edit: Seq[String] => Seq[String]): Unit = {
     val (f, p) = fs(path)
     val tmp = tmpOf(p)
     if (!f.exists(p) && f.exists(tmp))
       require(f.rename(tmp, p), s"StoreIO: rename $tmp -> $p failed")
-    val prev = readLog(path).map(_ + "\n").mkString
+    val lines = edit(readLog(path)).map(_ + "\n").mkString
     val out = f.create(tmp, true)
-    try out.write((prev + line + "\n").getBytes(StandardCharsets.UTF_8))
+    try out.write(lines.getBytes(StandardCharsets.UTF_8))
     finally out.close()
     if (f.exists(p)) f.delete(p, false)
     require(f.rename(tmp, p), s"StoreIO: rename $tmp -> $p failed")

@@ -1,20 +1,18 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentHashMap, Executors, Semaphore, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, GraftBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.ir._
 
-/** Accumulated turns of a not-yet-closed conversation (compat sessionizer —
-  * see [[StreamingIndexer.closedConversations]]). */
-final case class ConvBuffer(turns: Seq[Turn])
-
-/** Sessionizer output in the slim (coalesced) mode: either one arriving
-  * turn passed through verbatim (`closed = false`) or a conversation-closed
-  * marker (`closed = true`, turn fields blank). */
+/** Sessionizer output, and the row of every staged spill and remainder
+  * file: either one arriving turn passed through verbatim (`closed = false`)
+  * or a conversation-closed marker (`closed = true`, turn fields blank). */
 final case class StreamEvent(
     conv_id: String, turn_idx: Int, role: String, text: String,
     tool: String, ts: Timestamp, closed: Boolean)
@@ -24,82 +22,48 @@ final case class StreamEvent(
  *
  * The reference has no streaming path (its index is rebuilt on demand via
  * the `I_F` request, IRWorker.java:54-57); this is an engine extension
- * (SURVEY.md §2.8) built from the two batch primitives that already exist —
- * the append contract freezes a conversation once indexed, so the streaming
- * layer's job is exactly one thing: decide when a conversation is COMPLETE.
+ * (SURVEY.md §2.8) built from the batch append — the append contract
+ * freezes a conversation once indexed, so the streaming layer's job is
+ * exactly one thing: decide when a conversation is COMPLETE.
  *
- * Sessionization: a conversation is closed once no new turn arrives within
- * `gapMs` of its latest event time, tracked with a watermark + per-key
- * event-time timeout. Two modes:
+ * Sessionization ([[turnEvents]]): a conversation is closed once no new
+ * turn arrives within `gapMs` of its latest event time, tracked with a
+ * watermark + per-key event-time timeout. State is ONE long per open
+ * conversation (its latest event time), so state-store bytes are
+ * independent of conversation text (the r4 throughput floor was the state
+ * store serializing every open conversation's turn buffer each micro-batch).
  *
- *  - `coalesceTurns = 0` (compat): `closedConversations` buffers each open
- *    conversation's turns IN STATE and emits the full set at closure;
- *    every micro-batch with closures runs a staged append.
- *  - `coalesceTurns > 0` (the scale mode, VERDICT r4 #4): state carries
- *    ONLY the conversation's latest event time — turns pass through the
- *    sessionizer the trigger they arrive and spill to cheap per-epoch
- *    parquet under `dir/_stream_stage/`, alongside closure markers. State
- *    size is therefore independent of conversation text (the r4 throughput
- *    floor was the HDFS-backed state store serializing every open
- *    conversation's full turn buffer each micro-batch), and the expensive
- *    staged append runs once per backlog threshold, folding in exactly the
- *    closed conversations' turns.
+ * Each trigger spills its events — arriving turns and closure markers — as
+ * one epoch-keyed parquet file under `dir/_stream_stage/`. A flush folds the
+ * staged closed conversations into the index: inline in the trigger when
+ * `coalesceTurns <= 0`, asynchronously once `coalesceTurns` turns are
+ * staged otherwise, and on demand through [[flushStaged]].
  *
- * Crash safety is layered: the sink checkpoint replays an unacknowledged
- * micro-batch (spill files are epoch-keyed and any prior files of a
- * replayed epoch are removed first, so a replay that emits a different row
- * count cannot leave both versions on disk — ADVICE r4); the flush pins its
- * input file set in `_pending.tsv` before appending (a killed flush resumes
- * with the identical input, as the append manifest's begin-signature check
- * demands); the append manifest resumes a half-written batch; and the
- * conv-level anti-join makes re-delivered conversations no-ops. All stage
- * bookkeeping goes through the dir's Hadoop FileSystem (StoreIO), so the
- * streaming sink works on `hdfs://`/`s3a://` roots exactly like the index
- * tables (VERDICT r4 missing #1).
+ * A flush is one [[IndexStore.Commit]] run, `fN:`, in the stage dir's own
+ * log (`_stream_stage/_manifest.tsv`, kept out of the index manifest whose
+ * base-build lines become `build_metrics`). Its begin line pins the staged
+ * file set; `remainder` writes the still-open conversations' turns to
+ * `rem-N.parquet`, counting both sides on that write; `append` folds the
+ * closed ones with `appendOrCreate`, whose own stages resume in the index
+ * manifest; `consume` deletes the pinned files. The inputs stay until
+ * `consume`, so a crashed flush is finished by the next pass over the same
+ * pinned set, and the conv-level anti-join of the append makes a
+ * re-delivered conversation a no-op. The log keeps only the last flush's
+ * lines, and a stage dir of the earlier two-file format is refused. All
+ * stage bookkeeping goes through the dir's Hadoop FileSystem (StoreIO), so
+ * the sink works on `hdfs://`/`s3a://` roots exactly like the index tables.
  *
- * Scale posture: state is one (conv_id, last_ts) per OPEN conversation
- * (bounded by gap × arrival rate, independent of text and corpus size);
- * each flush tokenizes and shuffles only the closed backlog; the growing
- * index is never rewritten (corpus-stat-free block metadata, Schemas.Block).
- * Turns arriving after their conversation closed (> gap late) are dropped
- * by the watermark or the append anti-join — pick `gapMs` above the
- * maximum intra-conversation silence you need to honor.
+ * Scale posture: each flush tokenizes and shuffles only the staged backlog;
+ * the growing index is never rewritten (corpus-stat-free block metadata,
+ * Schemas.Block). Turns arriving after their conversation closed (> gap
+ * late) are dropped by the watermark or the append anti-join — pick `gapMs`
+ * above the maximum intra-conversation silence you need to honor.
  */
 object StreamingIndexer {
 
-  /** Emit the full turn set of each conversation once it has been idle for
-    * `gapMs` of event time (compat mode: buffers turns in state — use
-    * [[turnEvents]] + staging for throughput at scale). Requires `turns` to
-    * be a streaming Dataset. */
-  def closedConversations(turns: Dataset[Turn], gapMs: Long): Dataset[Turn] = {
-    import turns.sparkSession.implicits._
-    turns
-      .withWatermark("ts", s"$gapMs milliseconds")
-      .groupByKey(_.conv_id)
-      .flatMapGroupsWithState[ConvBuffer, Turn](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, in: Iterator[Turn], state: GroupState[ConvBuffer]) =>
-          if (state.hasTimedOut) {
-            val closed = state.get.turns
-            state.remove()
-            closed.iterator
-          } else {
-            val buf = state.getOption.map(_.turns).getOrElse(Seq.empty) ++ in
-            state.update(ConvBuffer(buf))
-            val lastTs = buf.iterator.map(_.ts.getTime).max
-            // timeout must sit above the current watermark; a conversation
-            // whose deadline already passed closes at the next trigger
-            state.setTimeoutTimestamp(
-              math.max(lastTs + gapMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
-  }
-
-  /** Slim sessionizer (VERDICT r4 #4): turns pass through the trigger they
-    * arrive; state per open conversation is ONE long (latest event time),
-    * so state-store checkpoint bytes are independent of conversation text;
-    * a `closed = true` marker is emitted once per conversation at timeout. */
+  /** Sessionizer: turns pass through the trigger they arrive; state per
+    * open conversation is ONE long (latest event time); a `closed = true`
+    * marker is emitted once per conversation at timeout. */
   def turnEvents(turns: Dataset[Turn], gapMs: Long): Dataset[StreamEvent] = {
     import turns.sparkSession.implicits._
     turns
@@ -118,6 +82,8 @@ object StreamingIndexer {
               state.getOption.getOrElse(Long.MinValue),
               buf.iterator.map(_.ts.getTime).max)
             state.update(lastTs)
+            // timeout must sit above the current watermark; a conversation
+            // whose deadline already passed closes at the next trigger
             state.setTimeoutTimestamp(
               math.max(lastTs + gapMs, state.getCurrentWatermarkMs() + 1))
             buf.iterator.map(t =>
@@ -128,368 +94,283 @@ object StreamingIndexer {
   }
 
   /** Start a streaming query that maintains the index at `dir`: sessionize,
-    * then append closed conversations — per trigger (`coalesceTurns = 0`)
-    * or amortized over a spilled backlog (`coalesceTurns > 0`, threshold in
-    * spilled turn rows; call [[flushStaged]] after stopping the query or at
-    * startup to fold in the remainder). */
+    * spill, and flush closed conversations — in every trigger that closes
+    * one (`coalesceTurns <= 0`) or asynchronously once `coalesceTurns`
+    * turns are staged (call [[flushStaged]] after stopping the query or at
+    * startup to fold in the rest). */
   def indexStream(
       turns: Dataset[Turn],
       dir: String,
       gapMs: Long,
       checkpoint: String,
       cfg: BuildConfig = BuildConfig(),
-      coalesceTurns: Long = 0L): StreamingQuery =
-    if (coalesceTurns <= 0L)
-      closedConversations(turns, gapMs)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: Dataset[Turn], _: Long) =>
-          if (!batch.isEmpty)
-            IndexStore.appendOrCreate(batch.sparkSession, batch.toDF(), dir, cfg)
+      coalesceTurns: Long = 0L): StreamingQuery = {
+    // a restart from the same checkpoint replays the last unacknowledged
+    // epoch, whose overwrite of its spill file would race a still-running
+    // async flush that pinned that file (ADVICE r5) — wait out any in-flight
+    // flush for this dir first, bounded: a hung flush fails loudly instead
+    // of stalling the restart invisibly (ADVICE r6)
+    val flush = permit(dir)
+    if (!flush.tryAcquire()) {
+      System.err.println(s"[graft-stream] indexStream($dir): waiting for an in-flight flush")
+      require(flush.tryAcquire(10, TimeUnit.MINUTES),
+        s"indexStream($dir): in-flight flush did not finish within 10 min " +
+          "— investigate the stuck flush before restarting the stream")
+    }
+    flush.release()
+    turnEvents(turns, gapMs)
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[StreamEvent], epoch: Long) =>
+        spill(batch, dir, epoch)
+        val (spark, staged) = (batch.sparkSession, backlog(dir))
+        // a flush runs only with a conversation to fold
+        if (staged.closures.get() == 0L || staged.turns.get() < coalesceTurns) ()
+        else if (coalesceTurns <= 0L) { flushStaged(spark, dir, cfg); () }
+        else if (flush.tryAcquire()) {
+          // ASYNC: the staged append is tens of seconds of index-build work;
+          // run inline it would block every trigger behind it. The flush's
+          // begin line pins its input set, and later epochs spill NEW files
+          // it never reads, so the spill path and one flush overlap safely.
+          // The gauges are consumed at flush START: events spilled while
+          // the flush runs count toward the NEXT threshold, and the pass puts
+          // back what stayed staged (the remainder), so a burst-then-trickle
+          // of closures keeps re-triggering flushes (ADVICE r5).
+          val (consumed, closed) = (staged.turns.getAndSet(0L), staged.closures.getAndSet(0L))
+          flushExec.submit(new Runnable {
+            override def run(): Unit = {
+              // this thread inherited the STREAMING QUERY's job group/tags;
+              // without clearing, q.stop() CANCELS the in-flight flush's
+              // Spark jobs mid-append
+              spark.sparkContext.clearJobGroup()
+              spark.sparkContext.clearJobTags()
+              try {
+                // epochs spilled between the getAndSet and the pass's file
+                // listing count twice (spill and remainder): that only fires
+                // an extra cheap flush; the gauge is an amortization knob
+                val pass = flushPass(spark, dir, cfg)
+                staged.turns.addAndGet(if (pass.consumedInput) pass.remainder else consumed)
+                if (!pass.consumedInput) staged.closures.addAndGet(closed)
+                ()
+              } catch {
+                case scala.util.control.NonFatal(e) =>
+                  // recoverable (the next pass finishes the pinned run) but
+                  // never silent; the staged events are still on disk, so
+                  // the gauges get back what this pass consumed
+                  staged.turns.addAndGet(consumed)
+                  staged.closures.addAndGet(closed)
+                  System.err.println(
+                    s"[graft-stream] async flush of $dir failed " +
+                      s"(the next flush resumes its pinned input): $e")
+              } finally flush.release()
+            }
+          })
           ()
         }
-        .start()
-    else {
-      // a restart from the same checkpoint replays the last unacknowledged
-      // epoch, whose mode-overwrite rewrite of turns-e$epoch.parquet would
-      // race a still-running async flush that pinned that file (ADVICE r5)
-      // — wait out any in-flight flush for this dir before the query starts.
-      // Logged once and bounded (ADVICE r6): a hung flush otherwise spun
-      // this silently forever; failing loudly beats an invisible stall.
-      if (!flushIdle(dir)) {
-        System.err.println(
-          s"[graft-stream] indexStream($dir): waiting for an in-flight flush")
-        val deadline = System.nanoTime() + 10L * 60 * 1000000000L
-        while (!flushIdle(dir)) {
-          require(System.nanoTime() < deadline,
-            s"indexStream($dir): in-flight flush did not finish within 10 min " +
-              "— investigate the stuck flush before restarting the stream")
-          Thread.sleep(20)
-        }
       }
-      flushBusy.remove(dir)
-      turnEvents(turns, gapMs)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: Dataset[StreamEvent], epoch: Long) =>
-          spillEpoch(batch, dir, epoch)
-          // ASYNC flush: the staged append is tens of seconds of index-build
-          // work — run inline it would block every trigger behind it (the
-          // stream's steady rate would collapse to the append rate). The
-          // pinned-input marker makes a flush's input set immutable the
-          // moment it starts (later epochs spill NEW files the flush never
-          // reads), so the spill path and one in-flight flush overlap
-          // safely; per-dir serialization below keeps flushes single-file.
-          // A crash mid-async-flush is the same crash the marker already
-          // handles — the next flush resumes the pinned set.
-          if (backlog(dir).get() >= coalesceTurns && flushIdle(dir)) {
-            // consume the gauge at flush START: turns spilled while the
-            // flush runs accumulate toward the NEXT threshold. The pass
-            // reports back what stayed staged — the rewritten remainder
-            // (still-open conversations' turns) goes BACK on the gauge, so
-            // a burst-then-trickle of closures keeps re-triggering flushes
-            // instead of leaving closed conversations staged indefinitely
-            // (ADVICE r5); a failed or no-op pass restores what it consumed.
-            val consumed = backlog(dir).getAndSet(0L)
-            val spark = batch.sparkSession
-            flushExec.submit(new Runnable {
-              override def run(): Unit = {
-                // this thread inherited the STREAMING QUERY's job group/tags
-                // (InheritableThreadLocal at pool-thread creation, and cached
-                // threads keep them) — without clearing, q.stop() CANCELS the
-                // in-flight flush's Spark jobs mid-append (observed: the
-                // probe's shutdown left a pinned marker + a cancelled append)
-                spark.sparkContext.clearJobGroup()
-                spark.sparkContext.clearJobTags()
-                // a failed flush is RECOVERABLE (the pinned marker resumes it)
-                // but never silent: the stage backlog otherwise grows unseen
-                // until the next flush retries
-                try {
-                  val pass = flushOnce(spark, dir, cfg)
-                  // epochs spilled between the getAndSet above and the pass's
-                  // file listing are counted twice (once by their spill, once
-                  // inside the remainder) — that only fires an extra cheap
-                  // no-op flush; the gauge is an amortization knob, not a
-                  // correctness device
-                  if (pass.consumedInput) backlog(dir).addAndGet(pass.remainder)
-                  else backlog(dir).addAndGet(consumed)
-                  ()
-                } catch {
-                  case scala.util.control.NonFatal(e) =>
-                    // restore the consumed count (ADVICE r5): the staged
-                    // turns are still on disk; a zeroed gauge would make the
-                    // retry wait for a full coalesceTurns of NEW arrivals
-                    backlog(dir).addAndGet(consumed)
-                    System.err.println(
-                      s"[graft-stream] async flush of $dir failed " +
-                        s"(pinned input resumes at next flush): $e")
-                }
-                finally { flushBusy.remove(dir); () }
-              }
-            })
-            ()
-          }
-        }
-        .start()
-    }
+      .start()
+  }
 
-  private val flushExec = java.util.concurrent.Executors.newCachedThreadPool(
+  private val flushExec = Executors.newCachedThreadPool(
     (r: Runnable) => {
       val t = new Thread(r, "graft-stream-flush"); t.setDaemon(true); t
     })
-  private val flushBusy =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def flushIdle(dir: String): Boolean = flushBusy.add(dir)
-  private val flushLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** One flush per index root at a time, in this JVM: the trigger tries to
+    * take the root's permit, the drain waits for it, and the flush thread
+    * releases it. Cross-process races are outside the store's single-writer
+    * contract, like the append manifest itself. */
+  private val permits = new ConcurrentHashMap[String, Semaphore]()
+  private def permit(dir: String): Semaphore =
+    permits.computeIfAbsent(dir, _ => new Semaphore(1))
+
+  /** Staged-event gauges per index root — the flush threshold. `turns`
+    * counts turns spilled since the last flush start PLUS the last flush's
+    * remainder (still-open conversations' turns are still staged input,
+    * ADVICE r5); `closures` counts closure markers spilled since the last
+    * flush start, so a threshold flush runs only with a conversation to
+    * fold. In-JVM only: after a restart both read 0 and the documented
+    * startup `flushStaged` drain folds any pre-crash backlog. */
+  private final case class Backlog(turns: AtomicLong, closures: AtomicLong)
+  private val backlogs = new ConcurrentHashMap[String, Backlog]()
+  private def backlog(dir: String): Backlog =
+    backlogs.computeIfAbsent(dir, _ => Backlog(new AtomicLong(), new AtomicLong()))
 
   // ------------------------------------------------------------- staging
 
   private def stageDir(dir: String): String = s"$dir/_stream_stage"
-  private def pendingMarker(dir: String): String = s"${stageDir(dir)}/_pending.tsv"
 
-  /** Spilled turn files: per-epoch arrivals plus flush-remainder rewrites. */
-  private val TurnName = """^(?:turns-e\d+|rem-[0-9a-f]+)\.parquet$""".r
-  private val ClosedName = """^closed-e(\d+)\.parquet$""".r
+  private val EventSchema = Encoders.product[StreamEvent].schema
+  private val Spill = """^events-e\d+\.parquet$""".r
+  private val Remainder = """^rem-\d+\.parquet$""".r
+  private val FlushBegin = """^f(\d+):begin$""".r
+  private val EarlierFormat =
+    """^(?:_pending\.tsv|(?:turns|closed)-e\d+\.parquet|rem-[0-9a-f]{12}\.parquet)$""".r
 
-  private def stagedNames(dir: String): Seq[String] =
-    StoreIO.listNames(stageDir(dir)).sorted
+  /** One trigger's spill: its events land in ONE epoch-keyed parquet file,
+    * whose write counts the events and the closure markers onto the backlog
+    * gauges. A replayed epoch overwrites the same name, so two versions of
+    * one epoch never coexist (ADVICE r4); a trigger with no events leaves
+    * no file. */
+  private[graft] def spill(batch: Dataset[StreamEvent], dir: String, epoch: Long): Unit = {
+    val path = s"${stageDir(dir)}/events-e$epoch.parquet"
+    val r = IndexStore.save(IndexBuilder.Staged(batch.toDF()), path,
+      aggs = Seq(count_if(col("closed")).as("closures")))
+    if (r.getLong(0) == 0L) StoreIO.delete(path)
+    val staged = backlog(dir)
+    staged.turns.addAndGet(r.getLong(0) - r.getLong(1))
+    staged.closures.addAndGet(r.getLong(1))
+    ()
+  }
 
-  /** Staged-turn gauge per index root — the flush threshold. Counts turns
-    * spilled since the last flush start PLUS the last flush's rewritten
-    * remainder (still-open conversations' turns are still staged input, so
-    * later closure-only triggers can re-fire a flush against them — ADVICE
-    * r5). In-JVM only: after a restart it reads 0 and the documented startup
-    * `flushStaged` drain folds any pre-crash backlog. */
-  private val backlogs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private def backlog(dir: String): java.util.concurrent.atomic.AtomicLong =
-    backlogs.computeIfAbsent(dir, _ => new java.util.concurrent.atomic.AtomicLong())
-
-  /** One trigger's spill: arriving turns and closure markers land as two
-    * epoch-keyed parquet files. Any prior file of the SAME epoch is removed
-    * first — a replayed epoch that produces a different row count would
-    * otherwise leave both names on disk and double its turns into one
-    * append (ADVICE r4). foreachBatch bodies are serialized per query, so
-    * the delete+write pair races nothing. */
-  private def spillEpoch(batch: Dataset[StreamEvent], dir: String, epoch: Long): Unit = {
-    val b = batch.persist()
-    try {
-      val stage = stageDir(dir)
-      // epoch-keyed names make replays overwrite-in-place (ADVICE r4): a
-      // replayed epoch rewrites the SAME file, so two versions of one epoch
-      // can never coexist. Counts ride in an Observation on the write itself
-      // (not a separate count job — per-trigger fixed cost is the streaming
-      // throughput floor, BENCH r5), feeding the in-JVM backlog gauge.
-      val obs = new org.apache.spark.sql.Observation(s"spill-e$epoch")
-      b.filter(!col("closed"))
-        .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$stage/turns-e$epoch.parquet")
-      val nTurns = obs.get("n").asInstanceOf[Long]
-      if (nTurns == 0L) StoreIO.delete(s"$stage/turns-e$epoch.parquet")
-      else { backlog(dir).addAndGet(nTurns); () }
-      val obsC = new org.apache.spark.sql.Observation(s"spill-closed-e$epoch")
-      b.filter(col("closed")).select("conv_id")
-        .observe(obsC, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$stage/closed-e$epoch.parquet")
-      if (obsC.get("n").asInstanceOf[Long] == 0L)
-        StoreIO.delete(s"$stage/closed-e$epoch.parquet")
-    } finally { b.unpersist(); () }
+  /** The next flush: the unfinished one (begun, not consumed) with its
+    * pinned file set, else a new one over every committed spill and
+    * remainder file — or None when no spill is staged, since a remainder
+    * alone holds only open conversations. Flushes run one at a time, so only
+    * the last begun one can be unfinished, and the log keeps only its
+    * lines. */
+  private def nextFlush(dir: String): Option[(Int, Seq[String])] = {
+    val stage = stageDir(dir)
+    val names = StoreIO.listNames(stage)
+    val old = names.filter(EarlierFormat.matches)
+    require(old.isEmpty, s"$stage holds files of the earlier two-file stage format " +
+      s"(${old.sorted.mkString(", ")}): drain it with the version that wrote them first")
+    val log = IndexStore.readManifest(stage)
+    val last = log.keys.collect { case FlushBegin(f) => f.toInt }.maxOption.getOrElse(0)
+    if (log.keys.exists(!_.startsWith(s"f$last:")))
+      StoreIO.rewriteLog(s"$stage/_manifest.tsv")(_.filter(_.startsWith(s"f$last:")))
+    log.get(s"f$last:begin").filterNot(_ => log.contains(s"f$last:consume"))
+      .map(b => last -> b.detail.split(" ").toSeq)
+      .orElse {
+        // _SUCCESS is parquet's commit marker: a spill a concurrent trigger
+        // is mid-writing (or a crash left behind) is not input yet
+        val input = names.filter(n =>
+          (Spill.matches(n) || Remainder.matches(n)) && StoreIO.exists(s"$stage/$n/_SUCCESS"))
+        if (input.exists(Spill.matches)) Some((last + 1) -> input.sorted) else None
+      }
   }
 
   /**
-   * Fold the staged backlog into the index with ONE append: staged turns
-   * semi-joined to the staged closure markers are appended; still-open
-   * conversations' turns are rewritten to a single remainder file for the
-   * next flush. Returns turns folded in.
-   *
-   * Crash consistency, in order: (1) the `_pending.tsv` marker pins the
-   * exact input file set before anything mutates, so a killed flush resumes
-   * with the identical input (the append begin-signature check demands
-   * exactly that); (2) the remainder is written to a temp dir and input
-   * files are deleted only after its parquet `_SUCCESS` commit (turn files
-   * before closed files, so a partially-deleted input set still resolves
-   * every surviving turn's closure state); (3) the staged union dedups on
-   * (conv_id, turn_idx), so any replay overlap collapses instead of
-   * doubling tf; (4) a flush killed after the append re-appends a fully
-   * known conv set — a no-op by the anti-join.
+   * Drain the staged backlog into the index: flush passes until one finds
+   * nothing to fold, so everything closed is in the index on return. A pass
+   * folds its pinned set; spills that landed after it was pinned (or after
+   * a crashed flush's pinned set) need the next pass. Still-open
+   * conversations' turns stay staged as the last pass's remainder. Returns
+   * the closed conversations' turns folded in.
    */
   def flushStaged(
       spark: SparkSession,
       dir: String,
-      cfg: BuildConfig = BuildConfig()): Long =
-    // one flush per index root at a time, in THIS JVM (a direct call — e.g.
-    // the shutdown drain — must not interleave with an in-flight async
-    // flush; cross-process races are outside the store's single-writer
-    // contract, like the append manifest itself). DRAIN semantics: one
-    // locked pass folds one pinned-or-current file set; spills that landed
-    // after that set was pinned (or a stale crash-recovery marker's
-    // leftovers) need further passes, so loop until a pass folds nothing
-    // AND no closed markers remain staged — the shutdown/startup caller's
-    // contract is "everything closed is in the index when I return".
-    flushLocks.computeIfAbsent(dir, _ => new Object).synchronized {
-      var total = 0L
-      // the drain consumes the whole gauge; the final pass's remainder
-      // (still-open conversations' turns) is what stays staged afterwards
-      backlog(dir).set(0L)
-      var lastRem = 0L
-      // every pass strictly consumes its input set (a resumed marker's
-      // files + marker, or the currently-staged files), so this terminates
-      // once the backlog present at each list time is folded; a still-live
-      // stream spilling concurrently just leaves its newest epoch for the
-      // next flush, exactly like the single-pass async path
-      var passes = 0
-      def pending = StoreIO.exists(pendingMarker(dir))
-      // only committed (_SUCCESS) files count: an uncommitted spill a crash
-      // left behind is not consumable by any pass and must not spin the loop
-      def closedStaged =
-        stagedNames(dir).exists(n => ClosedName.findFirstIn(n).isDefined &&
-          StoreIO.exists(s"${stageDir(dir)}/$n/_SUCCESS"))
-      while (passes == 0 || pending || closedStaged) {
-        val pass = flushStagedLocked(spark, dir, cfg)
+      cfg: BuildConfig = BuildConfig()): Long = {
+    val flush = permit(dir)
+    flush.acquire()
+    try {
+      // the drain consumes the whole backlog; the final pass's remainder is
+      // what stays staged afterwards
+      val staged = backlog(dir)
+      staged.turns.set(0L)
+      staged.closures.set(0L)
+      var (total, lastRem, passes) = (0L, 0L, 0)
+      var more = true
+      while (more) {
+        val pass = flushPass(spark, dir, cfg)
         total += pass.folded
         if (pass.consumedInput) lastRem = pass.remainder
         passes += 1
-        if (passes >= 64) {
+        more = pass.consumedInput
+        if (more && passes >= 64) {
           // defensive bound; unreachable post-stop. NEVER silent (ADVICE
-          // r5): returning here with closed markers still staged violates
-          // the drain contract, so say so where the operator will see it.
-          if (pending || closedStaged)
+          // r5): returning with closed markers still staged violates the
+          // drain contract, so say so where the operator will see it.
+          if (nextFlush(dir).nonEmpty)
             System.err.println(
               s"[graft-stream] flushStaged($dir) hit the $passes-pass bound " +
                 "with staged input remaining — a concurrent stream is " +
                 "outspilling the drain; closed conversations are NOT all " +
                 "indexed. Stop the query and call flushStaged again.")
-          backlog(dir).addAndGet(lastRem)
-          return total
+          more = false
         }
       }
-      backlog(dir).addAndGet(lastRem)
+      staged.turns.addAndGet(lastRem)
       total
-    }
+    } finally flush.release()
+  }
 
-  /** One locked pass's outcome: turns folded into the index, turns rewritten
-    * to the remainder file (still-open conversations — they stay staged),
-    * and whether the pass consumed an input set at all (a no-op pass — no
-    * closures staged, nothing pinned — leaves its caller's gauge snapshot
-    * valid). */
+  /** One flush pass's outcome: turns folded into the index, turns written
+    * to the remainder (still-open conversations — they stay staged), and
+    * whether the pass consumed an input set at all (a no-op pass leaves its
+    * caller's gauge snapshot valid). */
   private[streaming] final case class FlushPass(
       folded: Long, remainder: Long, consumedInput: Boolean)
 
-  /** Single locked pass (the async trigger path): folds ONE pinned-or-
-    * current file set and returns, preserving the coalescing economics —
-    * the drain loop above is the shutdown/startup contract. */
-  private def flushOnce(
-      spark: SparkSession, dir: String, cfg: BuildConfig): FlushPass =
-    flushLocks.computeIfAbsent(dir, _ => new Object).synchronized {
-      flushStagedLocked(spark, dir, cfg)
-    }
-
-  private def flushStagedLocked(
-      sparkIn: SparkSession,
-      dir: String,
-      cfg: BuildConfig): FlushPass = {
-    // the flush is index-BUILD work, but the caller's session is tuned for
-    // the STREAM (state-store-sized shuffle partitions — 16 — and AQE off
-    // for micro-batch fixed cost). Run the flush on a cloned session (same
-    // SparkContext, own SQLConf): build-sized partitions and AQE on (skew
-    // handling is load-bearing at build shuffles), without touching the
-    // live query's planning. Measured r6: the 16-partition flush halved
-    // build parallelism on 32 cores and the drain became the e2e floor.
-    val spark = {
-      val s = sparkIn.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", math.max(
+  /** One flush: the [[nextFlush]] as a Commit run of begin (the pinned
+    * set), remainder, append and consume. The caller holds the permit. */
+  private def flushPass(sparkIn: SparkSession, dir: String, cfg: BuildConfig): FlushPass =
+    nextFlush(dir).fold(FlushPass(0L, 0L, consumedInput = false)) { case (id, names) =>
+      // the flush is index-BUILD work, but the caller's session is tuned for
+      // the STREAM (state-store-sized shuffle partitions — 16 — and AQE off
+      // for micro-batch fixed cost). Run the flush on a cloned session (same
+      // SparkContext, own SQLConf): build-sized partitions and AQE on (skew
+      // handling is load-bearing at build shuffles), without touching the
+      // live query's planning. Measured r6: the 16-partition flush halved
+      // build parallelism on 32 cores and the drain became the e2e floor.
+      val spark = sparkIn.newSession()
+      spark.conf.set("spark.sql.shuffle.partitions", math.max(
         2 * sparkIn.sparkContext.defaultParallelism,
         sparkIn.sessionState.conf.numShufflePartitions).toString)
-      s.conf.set("spark.sql.adaptive.enabled", "true")
-      s
-    }
-    val tPass0 = System.nanoTime()
-    val stage = stageDir(dir)
-    val pinned: Option[Seq[String]] =
-      StoreIO.readString(pendingMarker(dir))
-        .map(_.split("\n", -1).toSeq.filter(_.nonEmpty))
-    val names = pinned.getOrElse {
-      stagedNames(dir).filter(n =>
-        (TurnName.findFirstIn(n).isDefined || ClosedName.findFirstIn(n).isDefined) &&
-          // exclude a spill file a concurrent trigger is mid-writing (the
-          // async flush lists while the stream runs): _SUCCESS is parquet's
-          // commit marker
-          StoreIO.exists(s"$stage/$n/_SUCCESS"))
-    }
-    // resume tolerates inputs the crashed flush already deleted
-    val live = names.filter(n => StoreIO.exists(s"$stage/$n"))
-    val turnFiles = live.filter(n => TurnName.findFirstIn(n).isDefined)
-    val closedFiles = live.filter(n => ClosedName.findFirstIn(n).isDefined)
-    if (closedFiles.isEmpty && pinned.isEmpty)
-      return FlushPass(0L, 0L, consumedInput = false)
-    if (pinned.isEmpty)
-      StoreIO.writeString(pendingMarker(dir), names.mkString("", "\n", "\n"))
-    // deterministic per-flush id from the PINNED set (stable across resume)
-    val flushId = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val h = md.digest(names.sorted.mkString("\n").getBytes("UTF-8"))
-      h.take(6).map(b => f"${b & 0xFF}%02x").mkString
-    }
-
-    def readAll(fs: Seq[String]): Option[DataFrame] =
-      fs.map(n => spark.read.parquet(s"$stage/$n")).reduceOption(_ unionByName _)
-    // PERSISTED: the (conv_id, turn_idx) dedup is a shuffle, and every
-    // downstream action (semi-join count, each of the append's build
-    // stages, the anti-join remainder) would re-run it against the staged
-    // parquet otherwise — measured as the dominant flush fixed cost
-    val turnsAll = readAll(turnFiles)
-      .map(_.dropDuplicates("conv_id", "turn_idx").persist())
-    val closedIds = readAll(closedFiles).map(_.distinct().persist())
-
-    try {
-    val folded: Long = (turnsAll, closedIds) match {
-      case (Some(t), Some(c)) =>
-        val toAppend = t.join(c, Seq("conv_id"), "left_semi")
-        val n = toAppend.count()
-        if (n > 0) IndexStore.appendOrCreate(spark, toAppend, dir, cfg)
-        n
-      case _ => 0L
-    }
-
-    // remainder (open conversations' turns) → temp dir; its _SUCCESS commit
-    // gates the input deletes, and a resume that finds it committed reuses
-    // it rather than recomputing from a partially-deleted input set
-    val tmpRem = s"$stage/_tmp-rem-$flushId"
-    val remCount: Long =
-      if (StoreIO.exists(s"$tmpRem/_SUCCESS"))
-        spark.read.parquet(tmpRem).count()
-      else (turnsAll, closedIds) match {
-        case (Some(t), Some(c)) =>
-          val rem = t.join(c, Seq("conv_id"), "left_anti")
-          val n = rem.count()
-          if (n > 0) rem.write.mode("overwrite").parquet(tmpRem)
-          n
-        case (Some(t), None) =>
-          val n = t.count()
-          if (n > 0) t.write.mode("overwrite").parquet(tmpRem)
-          n
-        case _ => 0L
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      val t0 = System.nanoTime()
+      val stage = stageDir(dir)
+      val rem = s"rem-$id.parquet"
+      val log = new IndexStore.Commit(stage, s"f$id:", stage)
+      log.begin(names.mkString(" "), names.size)
+      // the pinned set's turns, replay overlap collapsed, each tagged with
+      // whether its conversation closed. PERSISTED: the remainder write and
+      // every stage of the append read it, and the dedup is a shuffle. Read
+      // only by a stage that still has to run, since `consume` deletes the
+      // files.
+      var read = false
+      lazy val turns = {
+        read = true
+        // an empty spill is deleted after its write, so a flush that listed
+        // it in between pins a file that is gone
+        val live = names.map(n => s"$stage/$n").filter(StoreIO.exists)
+        val events =
+          if (live.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), EventSchema)
+          else spark.read.schema(EventSchema).parquet(live: _*)
+        events.filter(!col("closed")).dropDuplicates("conv_id", "turn_idx")
+          .join(events.filter(col("closed")).select(col("conv_id"), lit(true).as("folds"))
+            .distinct(), Seq("conv_id"), "left_outer")
+          .persist()
       }
-    turnFiles.foreach(n => StoreIO.delete(s"$stage/$n"))
-    closedFiles.foreach(n => StoreIO.delete(s"$stage/$n"))
-    if (remCount > 0) {
-      val dst = s"$stage/rem-$flushId.parquet"
-      StoreIO.delete(dst)
-      val (f, src) = StoreIO.fs(tmpRem)
-      require(f.rename(src, new org.apache.hadoop.fs.Path(dst)),
-        s"flushStaged: rename $tmpRem -> $dst failed")
-    } else StoreIO.delete(tmpRem)
-    StoreIO.delete(pendingMarker(dir))
-    System.err.println(f"[graft-stream] flush pass dir=$dir folded=$folded " +
-      f"rem=$remCount files=${live.length} sec=${(System.nanoTime() - tPass0) / 1e9}%.1f")
-    FlushPass(folded, remCount, consumedInput = true)
-    } finally {
-      turnsAll.foreach(_.unpersist())
-      closedIds.foreach(_.unpersist())
+      try {
+        // the counts of both sides ride the remainder's write and its line
+        val remRec = log.record("remainder", rem) {
+          val obs = Observation()
+          turns.observe(obs, count_if(col("folds").isNotNull).as("folded"),
+              count_if(col("folds").isNull).as("rem"))
+            .filter(col("folds").isNull).select(EventSchema.fieldNames.toSeq.map(col): _*)
+            .write.mode("overwrite").parquet(s"$stage/$rem")
+          val r = GraftBridge.observed(obs)
+          require(r.length == 2, s"the remainder write of $dir observed no counts")
+          if (r.getLong(1) == 0L) StoreIO.delete(s"$stage/$rem")
+          (r.getLong(1), s"folded=${r.getLong(0)}")
+        }
+        val folded = remRec.detail.stripPrefix("folded=").toLong
+        log.stage("append", s"closed conversations' turns into $dir") {
+          if (folded > 0L)
+            IndexStore.appendOrCreate(spark, turns.filter(col("folds").isNotNull)
+              .select("conv_id", "turn_idx", "role", "text", "tool", "ts"), dir, cfg)
+          folded
+        }
+        log.stage("consume", "pinned input deleted") {
+          names.foreach(n => StoreIO.delete(s"$stage/$n"))
+          names.size.toLong
+        }
+        System.err.println(f"[graft-stream] flush pass dir=$dir folded=$folded " +
+          f"rem=${remRec.rows} files=${names.length} sec=${(System.nanoTime() - t0) / 1e9}%.1f")
+        FlushPass(folded, remRec.rows, consumedInput = true)
+      } finally if (read) turns.unpersist()
     }
-  }
 }

@@ -6,6 +6,7 @@ import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Ex
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSpec
+import graft.streaming.{StreamEvent, StreamingIndexer}
 import org.apache.hadoop.fs.{FSDataOutputStream, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -54,11 +55,12 @@ object CrashFs {
 
 /**
  * Crash-resume matrix over every store mutation: for each of buildAndSave,
- * append, delete, compact and saveView, and for every manifest line k of
- * its uninterrupted run, crash the run at its k-th manifest write, re-run
- * the same call, and require the store to equal the uninterrupted run's:
- * every table as sorted rows (postings blocks with their encoded bytes,
- * doc_stats' norm to 1e-12) and the committed stage-name set.
+ * append, delete, compact, saveView and the streaming flush, and for every
+ * manifest line k of its uninterrupted run, crash the run at its k-th
+ * manifest write, re-run the same call, and require the store to equal the
+ * uninterrupted run's: every table as sorted rows (postings blocks with
+ * their encoded bytes, doc_stats' norm to 1e-12) and the committed
+ * stage-name sets.
  */
 class CommitCrashSpec extends SparkSpec {
 
@@ -83,10 +85,11 @@ class CommitCrashSpec extends SparkSpec {
     "crashfs:" + d
   }
 
-  /** A store root's committed stage names and tables. Tables are every
-    * parquet table under the root but build_metrics (it holds timings),
-    * keyed by relative path, each as sorted rows: binary fields
-    * hex-encoded, a `norm` field (doc_stats) set aside to compare to 1e-12. */
+  /** A store root's committed stage names (the flush log's prefixed with
+    * its dir) and tables. Tables are every parquet table under the root but
+    * build_metrics (it holds timings), keyed by relative path, each as
+    * sorted rows: binary fields hex-encoded, a `norm` field (doc_stats) set
+    * aside to compare to 1e-12. */
   private final case class Store(
       stages: Set[String],
       tables: Map[String, Seq[(String, Double)]],
@@ -115,8 +118,9 @@ class CommitCrashSpec extends SparkSpec {
         fields.mkString("|") -> (if (norm < 0) 0.0 else r.getDouble(norm))
       }.sortBy(_._1).toSeq
     }
-    Store(IndexStore.readManifest(dir).keySet, dfs.map { case (n, df) => n -> rows(df) },
-      dfs.map { case (n, df) => n -> df.schema })
+    val stages = IndexStore.readManifest(dir).keySet ++
+      IndexStore.readManifest(s"$dir/$Stage").keySet.map(s"$Stage/" + _)
+    Store(stages, dfs.map { case (n, df) => n -> rows(df) }, dfs.map { case (n, df) => n -> df.schema })
   }
 
   private def assertSameStore(dir: String, ref: Store, clue: String): Unit = {
@@ -132,30 +136,33 @@ class CommitCrashSpec extends SparkSpec {
   }
 
   /** Run `op` uninterrupted on a fresh root (a copy of `seed`), then once
-    * per manifest line k of that run: crash at line k, re-run, compare.
-    * The cases touch disjoint roots, so three run at once; two shuffle
-    * partitions keep multi-partition id assignment in play at half the
-    * default's per-job task count. */
-  private def matrix(name: String, seed: Option[String] = None)(op: String => Unit): Unit = {
+    * per line k of each of its manifests `logs` (dirs under the root, "" the
+    * root's own): crash at line k, re-run, compare. The cases touch disjoint
+    * roots, so three run at once; two shuffle partitions keep
+    * multi-partition id assignment in play at half the default's per-job
+    * task count. */
+  private def matrix(name: String, seed: Option[String] = None, logs: Seq[String] = Seq(""))(
+      op: String => Unit): Unit = {
     init
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "2")
     val pool = Executors.newFixedThreadPool(3)
+    def log(dir: String, l: String) = if (l.isEmpty) dir else s"$dir/$l"
     try {
       val refDir = fresh(seed)
-      CrashFs.arm(refDir, Int.MaxValue)
+      logs.foreach(l => CrashFs.arm(log(refDir, l), Int.MaxValue))
       op(refDir)
-      val lines = CrashFs.disarm(refDir)
-      assert(lines >= 1, s"$name wrote no manifest line")
+      val lines = logs.map(l => l -> CrashFs.disarm(log(refDir, l)))
+      assert(lines.forall(_._2 >= 1), s"$name wrote no line to one of its manifests: $lines")
       val ref = store(refDir)
-      val cases = (1 to lines).map { k =>
+      val cases = for ((l, n) <- lines; k <- 1 to n) yield {
         pool.submit(new Callable[Unit] {
           def call(): Unit = {
             val dir = fresh(seed)
-            CrashFs.arm(dir, k)
-            try intercept[IOException](op(dir)) finally CrashFs.disarm(dir)
+            CrashFs.arm(log(dir, l), k)
+            try intercept[IOException](op(dir)) finally CrashFs.disarm(log(dir, l))
             op(dir)
-            assertSameStore(dir, ref, s"$name crashed at manifest line $k of $lines")
+            assertSameStore(dir, ref, s"$name crashed at line $k of $n of manifest '$l'")
           }
         })
       }
@@ -185,6 +192,41 @@ class CommitCrashSpec extends SparkSpec {
     d
   }
 
+  private val Stage = "_stream_stage"
+
+  /** Spill `epoch` into `dir`'s stage: the turns `from until until` of each
+    * tp2 conversation in `turns`, and a closure marker for each of
+    * `closed`. */
+  private def spill(dir: String, epoch: Long, turns: Seq[(String, Int, Int)],
+      closed: Seq[String]): Unit = {
+    import spark.implicits._
+    val events = turns.flatMap { case (conv, from, until) =>
+      Fixtures.tp2.toMap.apply(conv).zipWithIndex.slice(from, until).map { case (t, i) =>
+        StreamEvent(conv, i, "user", t, null, new java.sql.Timestamp(i * 60000L), closed = false)
+      }
+    } ++ closed.map(StreamEvent(_, -1, null, null, null, new java.sql.Timestamp(0L), closed = true))
+    StreamingIndexer.spill(events.toDS(), dir, epoch)
+  }
+
+  /** Spills of two epochs: c0001 and c0002 close, c0003 stays open. */
+  private lazy val firstFlushSeed: String = {
+    init
+    val d = fresh()
+    spill(d, 0, Seq(("c0001", 0, 11), ("c0002", 0, 2), ("c0003", 0, 3)), Nil)
+    spill(d, 1, Seq(("c0002", 2, 4), ("c0003", 3, 5)), Seq("c0001", "c0002"))
+    d
+  }
+
+  /** The first seed flushed (base build, c0003 in the remainder), then two
+    * more epochs: c0003 closes, c0004 stays open. */
+  private lazy val secondFlushSeed: String = {
+    val d = fresh(Some(firstFlushSeed))
+    StreamingIndexer.flushStaged(spark, d, cfg)
+    spill(d, 2, Seq(("c0003", 5, 8), ("c0004", 0, 4)), Seq("c0003"))
+    spill(d, 3, Seq(("c0004", 4, 10)), Nil)
+    d
+  }
+
   test("buildAndSave resumes from a crash at every manifest line") {
     matrix("buildAndSave")(IndexStore.buildAndSave(spark, turns, _, cfg))
   }
@@ -205,6 +247,12 @@ class CommitCrashSpec extends SparkSpec {
   test("saveView resumes from a crash at every manifest line") {
     val view = IndexBuilder.build(spark, turns, cfg)
     matrix("saveView")(IndexStore.saveView(spark, view, _))
+  }
+
+  test("flushStaged resumes from a crash at every manifest line") {
+    for ((seed, what) <- Seq(firstFlushSeed -> "first flush", secondFlushSeed -> "second flush"))
+      matrix(s"flushStaged ($what)", Some(seed), logs = Seq("", Stage))(
+        StreamingIndexer.flushStaged(spark, _, cfg))
   }
 
   test("a crash inside the manifest rename loses no committed line") {

@@ -21,20 +21,21 @@ class StreamingSpec extends SparkSpec {
   private val T0 = 1577836800000L // 2020-01-01T00:00:00Z
   private def sec(s: Long): Long = T0 + s * 1000L
 
-  test("closedConversations emits a conversation's turns once, after the gap") {
+  test("turnEvents emits one closure marker per conversation, after the gap") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val src = MemoryStream[Turn]
-    val q = StreamingIndexer.closedConversations(src.toDS(), gapMs = 30000L)
-      .writeStream.format("memory").queryName("closed").outputMode("append")
+    val q = StreamingIndexer.turnEvents(src.toDS(), gapMs = 30000L)
+      .writeStream.format("memory").queryName("events").outputMode("append")
       .start()
+    def closures = spark.table("events").as[StreamEvent].collect().filter(_.closed)
     try {
       src.addData(
         turn("convA", 0, "alpha beta", sec(0)),
         turn("convA", 1, "gamma", sec(10)),
         turn("convB", 0, "delta", sec(5)))
       q.processAllAvailable()
-      assert(spark.table("closed").count() == 0, "closed before the gap elapsed")
+      assert(closures.isEmpty, "closed before the gap elapsed")
 
       // sentinel conversation far in the future pushes the watermark past
       // every open conversation's deadline; the sentinel itself stays open
@@ -43,21 +44,22 @@ class StreamingSpec extends SparkSpec {
       src.addData(turn("convZ", 1, "omega again", sec(501)))
       q.processAllAvailable()
 
-      val closed = spark.table("closed").as[Turn].collect()
-      assert(closed.map(_.conv_id).toSet == Set("convA", "convB"))
-      assert(closed.count(_.conv_id == "convA") == 2)
-      assert(closed.count(_.conv_id == "convB") == 1)
+      assert(closures.map(_.conv_id).toSet == Set("convA", "convB"))
+      assert(closures.count(_.conv_id == "convA") == 1)
+      assert(closures.count(_.conv_id == "convB") == 1)
       // exactly-once: nothing re-emits on further watermark advance
       src.addData(turn("convZ", 2, "omega more", sec(900)))
       q.processAllAvailable()
-      assert(spark.table("closed").count() == 3)
+      assert(closures.length == 2)
 
       // a straggler for the already-closed convA, with event time far below
       // the watermark, is dropped — the closed conversation never re-emits
       // or mutates (the documented > gap late-data contract)
       src.addData(turn("convA", 2, "late straggler", sec(20)))
       q.processAllAvailable()
-      assert(spark.table("closed").count() == 3, "late straggler leaked")
+      assert(closures.length == 2 &&
+        !spark.table("events").as[StreamEvent].collect().exists(_.text == "late straggler"),
+        "late straggler leaked")
     } finally q.stop()
   }
 
@@ -191,24 +193,24 @@ class StreamingSpec extends SparkSpec {
 
   test("flushStaged resumes a pinned (crashed) flush with its original input set") {
     import spark.implicits._
-    val dir = graft.SparkSpec.tmpDir("stream-pin")
-    val stage = s"$dir/_stream_stage"
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val dir = "crashfs:" + graft.SparkSpec.tmpDir("stream-pin")
     val cfg = BuildConfig(buckets = 2)
-    def writeTurns(name: String, ts: Seq[Turn]): Unit =
-      ts.toDF().write.mode("overwrite").parquet(s"$stage/$name")
-    // a crashed flush left epoch-0 staged AND pinned in _pending.tsv
-    writeTurns("turns-e0.parquet",
-      Seq(turn("cA", 0, "alpha beta", sec(0)), turn("cA", 1, "gamma", sec(5))))
-    Seq("cA").toDF("conv_id").write.mode("overwrite")
-      .parquet(s"$stage/closed-e0.parquet")
-    StoreIO.writeString(s"$stage/_pending.tsv",
-      "closed-e0.parquet\nturns-e0.parquet\n")
+    def spill(epoch: Long, turns: Seq[Turn], closed: String): Unit =
+      StreamingIndexer.spill((turns.map(t =>
+        StreamEvent(t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts, closed = false)) :+
+        StreamEvent(closed, -1, null, null, null, new Timestamp(0L), closed = true)).toDS(),
+        dir, epoch)
+    spill(0, Seq(turn("cA", 0, "alpha beta", sec(0)), turn("cA", 1, "gamma", sec(5))), "cA")
+    // the first flush pins epoch 0 and crashes inside its base build (the
+    // index manifest's 4th line)
+    CrashFs.arm(dir, 4)
+    try intercept[java.io.IOException](StreamingIndexer.flushStaged(spark, dir, cfg))
+    finally CrashFs.disarm(dir)
     // epoch 1 landed after the crash, before the resume — the resumed PASS
     // must not widen its pinned input set (the append begin-signature
     // contract); the public drain then folds epoch 1 as a SECOND append
-    writeTurns("turns-e1.parquet", Seq(turn("cB", 0, "delta", sec(60))))
-    Seq("cB").toDF("conv_id").write.mode("overwrite")
-      .parquet(s"$stage/closed-e1.parquet")
+    spill(1, Seq(turn("cB", 0, "delta", sec(60))), "cB")
 
     assert(StreamingIndexer.flushStaged(spark, dir, cfg) == 3L, "drain folds all")
     assert(IndexStore.load(spark, dir).meta.docs == 2)
@@ -218,5 +220,40 @@ class StreamingSpec extends SparkSpec {
     assert(StoreIO.listNames(s"$dir/batches").size == 1,
       "epoch 1 folded as its own append batch, not inside the pinned resume")
     assert(StreamingIndexer.flushStaged(spark, dir, cfg) == 0L)
+  }
+
+  test("a flush whose pinned spill is gone drains the rest; the log keeps the last flush") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    val dir = "crashfs:" + graft.SparkSpec.tmpDir("stream-gone")
+    val stage = s"$dir/_stream_stage"
+    val cfg = BuildConfig(buckets = 2)
+    def spill(epoch: Long, turns: Seq[Turn], closed: Seq[String]): Unit =
+      StreamingIndexer.spill((turns.map(t =>
+        StreamEvent(t.conv_id, t.turn_idx, t.role, t.text, t.tool, t.ts, closed = false)) ++
+        closed.map(StreamEvent(_, -1, null, null, null, new Timestamp(0L), closed = true))).toDS(),
+        dir, epoch)
+    spill(0, Seq(turn("cA", 0, "alpha beta", sec(0)), turn("cA", 1, "gamma", sec(5))), Seq("cA"))
+    spill(1, Seq(turn("cB", 0, "delta", sec(60))), Nil)
+    // the first flush pins both epochs and crashes at its remainder line;
+    // then epoch 1 is deleted, as a trigger deletes its spill when the
+    // write counted no event — after a flush may have listed it
+    CrashFs.arm(stage, 2)
+    try intercept[java.io.IOException](StreamingIndexer.flushStaged(spark, dir, cfg))
+    finally CrashFs.disarm(stage)
+    StoreIO.delete(s"$stage/events-e1.parquet")
+    assert(StreamingIndexer.flushStaged(spark, dir, cfg) == 2L)
+    spill(2, Seq(turn("cC", 0, "epsilon", sec(120))), Seq("cC"))
+    assert(StreamingIndexer.flushStaged(spark, dir, cfg) == 1L)
+    assert(IndexStore.load(spark, dir).meta.docs == 2)
+    assert(IndexStore.readManifest(stage).keySet ==
+      Set("begin", "remainder", "append", "consume").map("f2:" + _))
+  }
+
+  test("a stage dir in the earlier two-file format is refused, not skipped") {
+    val dir = graft.SparkSpec.tmpDir("stream-old")
+    StoreIO.writeString(s"$dir/_stream_stage/_pending.tsv", "turns-e0.parquet\n")
+    val e = intercept[IllegalArgumentException](StreamingIndexer.flushStaged(spark, dir))
+    assert(e.getMessage.contains("_pending.tsv"))
   }
 }

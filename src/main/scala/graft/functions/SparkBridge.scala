@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Catalyst-Expression bridge. Spark 4 moved these conversions
@@ -16,4 +17,12 @@ object GraftBridge {
     * (`get` returns them as an unordered map); waits for the observed
     * action like `get`. */
   def observed(o: Observation): Row = o.getRow
+
+  /** Each group's n smallest values of `c`, in ascending order: Catalyst's
+    * bounded top-n aggregate `collect_top_k` with `reverse = true`. A
+    * bounded priority queue per group and task, so partial aggregation
+    * ships at most n values per group. Spark 4.1 keeps it out of the
+    * function registry and its Column API. */
+  def collectTopK(c: Column, n: Int): Column =
+    column(new CollectTopK(expression(c), n, true, 0, 0).toAggregateExpression())
 }

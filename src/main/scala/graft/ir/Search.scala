@@ -1,6 +1,6 @@
 package graft.ir
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 sealed trait QueryMode
@@ -161,9 +161,10 @@ class Searcher(index: IndexView) extends Serializable {
    * query for them was the θ path's residual cost). Blocks are ranked by
    * the idf-free BM25 saturation bound (bm25_idf is a positive per-term
    * constant, so the per-term ranking is identical to the full block bound)
-   * with a deterministic (bound desc, first_doc_id asc) tie-break; missing
-   * terms are computed in ONE metadata-only job. Returned arrays are sorted
-   * by first_doc_id.
+   * with a deterministic (bound desc, first_doc_id asc) tie-break: the k
+   * smallest (−bound, first_doc_id, last_doc_id) per term by
+   * `collect_top_k`. Missing terms are computed in ONE metadata-only job.
+   * Returned arrays are sorted by first_doc_id.
    */
   private[graft] def topBlockIntervals(
       termIds: Seq[Long], k: Int): Map[Long, Array[(Long, Long)]] = {
@@ -175,18 +176,13 @@ class Searcher(index: IndexView) extends Serializable {
     if (missing.isEmpty) return cached.toMap
     val got: Map[Long, Array[(Long, Long)]] = index.postings.toDF()
       .filter(col("term_id").isin(missing: _*))
-      .withColumn("bound", bm25(col("max_tf"), col("min_dl")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("term_id")
-          .orderBy(col("bound").desc, col("first_doc_id").asc)))
-      .filter(col("rn") <= k)
-      .select("term_id", "first_doc_id", "last_doc_id")
+      .groupBy("term_id")
+      .agg(GraftBridge.collectTopK(struct(-bm25(col("max_tf"), col("min_dl")),
+        col("first_doc_id"), col("last_doc_id")), k))
       .collect()
-      .groupBy(_.getLong(0))
-      .map { case (tid, rs) =>
-        tid -> rs.map(r => (r.getLong(1), r.getLong(2))).sorted
-      }
+      .map(r => r.getLong(0) ->
+        r.getSeq[Row](1).map(b => (b.getLong(1), b.getLong(2))).toArray.sorted)
+      .toMap
     val fresh = missing.map(t => t -> got.getOrElse(t, Array.empty[(Long, Long)]))
     fresh.foreach { case (t, v) => index.thetaCachePutBounded((t, k), v) }
     cached.filter(_._2 != null).toMap ++ fresh
@@ -216,6 +212,13 @@ class Searcher(index: IndexView) extends Serializable {
     Some(index.postings.filter(
       col("term_id") === rare.termId ||
         (col("term_id").isin(others: _*) && overlapsAny(intervals))))
+  }
+
+  /** Refuses k < 0. k = 0 asks for no hits: every entry point then
+    * analyzes no query and returns its empty frame, with no Spark job. */
+  private def wantsHits(k: Int): Boolean = {
+    require(k >= 0, s"top-k needs k >= 0, got k = $k")
+    k > 0
   }
 
   /** Under cosine, ‖q‖ over the query weights w(t,q). */
@@ -302,16 +305,16 @@ class Searcher(index: IndexView) extends Serializable {
   }
 
   /** Each query's k best rows of a [[scorePlan]] result (no conv_ids) as
-    * (qidx, pos, h), h = (doc_id, score), pos 0..k−1 in (score desc,
-    * doc_id asc) order: a bounded heap per query (TopKAggregator). Partial
-    * aggregation keeps ≤ k rows per (query, task) before the qidx exchange,
-    * and nothing sorts a match list. */
-  private def heapTopK(scored: DataFrame, k: Int): DataFrame = {
-    val topk = udaf(new TopKAggregator(k), TopKAggregator.inputEncoder)
+    * (qidx, pos, doc_id, score), pos 0..k−1 in (score desc, doc_id asc)
+    * order: a bounded heap per query, `collect_top_k` of the k smallest
+    * (−score, doc_id). Partial aggregation keeps ≤ k rows per (query, task)
+    * before the qidx exchange, and nothing sorts a match list. */
+  private def heapTopK(scored: DataFrame, k: Int): DataFrame =
     scored.groupBy("qidx")
-      .agg(topk(col("doc_id"), lit(""), col("score")).as("hits"))
+      .agg(GraftBridge.collectTopK(
+        struct((-col("score")).as("neg"), col("doc_id")), k).as("hits"))
       .select(col("qidx"), posexplode(col("hits")).as(Seq("pos", "h")))
-  }
+      .select(col("qidx"), col("pos"), col("h.doc_id"), (-col("h.neg")).as("score"))
 
   def search(
       spark: SparkSession,
@@ -319,7 +322,7 @@ class Searcher(index: IndexView) extends Serializable {
       k: Int,
       mode: QueryMode = Or,
       scorer: Scorer = TfIdfCosine): DataFrame = {
-    val qts = queryTerms(spark, query)
+    val qts = if (wantsHits(k)) queryTerms(spark, query) else Nil
     val blocks = if (mode == And && qts.length > 1) andSurvivorBlocks(spark, qts) else None
     topK(spark, qts, k, mode, scorer, blocks)
   }
@@ -384,8 +387,8 @@ class Searcher(index: IndexView) extends Serializable {
     // one aggregation group — refuse loudly instead
     require(queries.map(_._1).distinct.length == queries.length,
       s"searchBatch: duplicate query_id in ${queries.map(_._1).mkString(",")}")
-    val live = scorable(
-      queries.map { case (qid, text) => qid -> queryTerms(spark, text) }, scorer)
+    val live = scorable(if (!wantsHits(k)) Nil
+      else queries.map { case (qid, text) => qid -> queryTerms(spark, text) }, scorer)
     if (live.isEmpty) return spark.emptyDataset[(String, Long, String, Double, Int)]
       .toDF("query_id", "doc_id", "conv_id", "score", "rank")
     // candidate (query, term) postings: the cutovers' measure of batch work
@@ -410,8 +413,8 @@ class Searcher(index: IndexView) extends Serializable {
     val winners = heapTopK(scored, k)
       .select(
         element_at(qidLit, col("qidx")).as("query_id"),
-        col("h.doc_id").as("doc_id"),
-        col("h.score").as("score"),
+        col("doc_id"),
+        col("score"),
         (col("pos") + 1).cast("int").as("rank"))
     // winners are ≤ k·|queries| rows — broadcast THEM into the stats probe,
     // so conv_id resolution never moves the stats table
@@ -507,7 +510,7 @@ class Searcher(index: IndexView) extends Serializable {
     val scored = scorePlan(spark, live, Or, Bm25, Some(candBlocks), convIds = false)
     val kth: Map[Int, Double] = heapTopK(scored, k)
       .filter(col("pos") === k - 1)
-      .select(col("qidx"), col("h.score"))
+      .select(col("qidx"), col("score"))
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
     // fewer than k docs carry t* → the candidate set may be < k docs → θ
@@ -549,7 +552,7 @@ class Searcher(index: IndexView) extends Serializable {
       query: String,
       k: Int,
       exactCutover: Long = WandExactCutover): DataFrame = {
-    val qts = queryTerms(spark, query)
+    val qts = if (wantsHits(k)) queryTerms(spark, query) else Nil
     val blocks =
       if (qts.isEmpty || qts.map(_.df).sum <= exactCutover) None
       else Some(wandPlan(spark, qts, k)._2)

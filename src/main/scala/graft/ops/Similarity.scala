@@ -67,7 +67,8 @@ object Similarity {
     dotUdf(a.cast("array<double>"), b.cast("array<double>"))
 
   /** Brute-force cosine top-k of a query vector. Output (vec_id, cosine),
-    * score desc, vec_id asc tie-break; excludes the query id itself. */
+    * score desc, vec_id asc tie-break; excludes the query id itself. The
+    * one exact rerank: both ANN indexes run it on the rows they probe. */
   def annBrute(embeddings: DataFrame, query: Array[Float], queryId: Long, k: Int): DataFrame = {
     val qNorm = math.sqrt(query.map(x => x.toDouble * x).sum)
     val qLit = typedLit(query.map(_.toDouble / qNorm).toSeq)
@@ -78,6 +79,16 @@ object Similarity {
       .limit(k)
       .select("vec_id", "cosine")
   }
+
+  /** The k best of two probes' (vec_id, cosine) hits, in annBrute's order. */
+  private def mergeHits(a: Array[Row], b: Array[Row], k: Int): Array[Row] =
+    (a ++ b).sortBy(r => (-r.getDouble(1), r.getLong(0))).take(k)
+
+  /** A probe-widening loop's final hits as a one-partition frame. */
+  private def hitsFrame(spark: SparkSession, hits: Array[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(hits.toSeq, 1), StructType(Seq(
+      StructField("vec_id", LongType, nullable = false),
+      StructField("cosine", DoubleType, nullable = false))))
 
   /** Deterministic random hyperplane component for (plane, dim). */
   private def plane(seed: Long, p: Int, d: Int): Double = {
@@ -159,19 +170,11 @@ object Similarity {
         excludeId: Long,
         k: Int,
         probeHamming: Int = 2): DataFrame = {
-      val spark = data.sparkSession
-      val qNorm = math.sqrt(query.map(x => x.toDouble * x).sum)
-      val qLit = typedLit(query.map(_.toDouble / qNorm).toSeq)
       val qSig = signature(query.toSeq, seed, planes)
 
-      def scan(probes: Option[Seq[Int]]): Array[Row] =
-        probes.fold(data)(p => data.filter(col("sig").isin(p: _*))) // pushed
-          .filter(col("vec_id") =!= excludeId)
-          .withColumn("cosine", dotCol(col("embedding"), qLit))
-          .orderBy(col("cosine").desc, col("vec_id").asc)
-          .limit(k)
-          .select("vec_id", "cosine")
-          .collect()
+      def scan(probes: Option[Seq[Int]]): Array[Row] = annBrute(
+        probes.fold(data)(p => data.filter(col("sig").isin(p: _*))), // pushed
+        query, excludeId, k).collect()
 
       def binom(n: Int, r: Int): Long =
         (1 to r).foldLeft(1L)((a, i) => a * (n - i + 1) / i) // exact, n ≤ 24
@@ -195,14 +198,10 @@ object Similarity {
           exact = true
         } else {
           probed += binom(planes, h)
-          hits = (hits ++ scan(Some(ring(qSig, h, planes))))
-            .sortBy(r => (-r.getDouble(1), r.getLong(0))).take(k)
+          hits = mergeHits(hits, scan(Some(ring(qSig, h, planes))), k)
         }
       }
-      val schema = StructType(Seq(
-        StructField("vec_id", LongType, nullable = false),
-        StructField("cosine", DoubleType, nullable = false)))
-      spark.createDataFrame(spark.sparkContext.parallelize(hits.toSeq, 1), schema)
+      hitsFrame(data.sparkSession, hits)
     }
 
     def unpin(): Unit = { data.unpersist(); () }
@@ -226,11 +225,10 @@ object Similarity {
     val w = planeMatrix(seed, p, dims)
     val sigUdf = udf((v: Seq[Float]) =>
       if (v.length == dims) signatureW(v, w) else signature(v, seed, p))
-    // below the cluster threshold, still widen a single-file scan BEFORE the
-    // signature projection so the per-row kernel parallelizes (Narrow —
-    // no-op on at-scale inputs; the clustered branch redistributes anyway)
-    val base = if (n >= ClusterRowThreshold) embeddings else Narrow.widen(embeddings)
-    val signed = base.withColumn("sig", sigUdf(col("embedding")))
+    // widen a single-file scan BEFORE the signature projection so the
+    // per-row kernel parallelizes at any size: the clustered branch's
+    // exchange comes after the UDF (Narrow is a no-op on a wide scan)
+    val signed = Narrow.widen(embeddings).withColumn("sig", sigUdf(col("embedding")))
     val df = (if (n >= ClusterRowThreshold)
       signed.repartition(col("sig")).sortWithinPartitions("sig")
     else signed)
@@ -389,31 +387,19 @@ object Similarity {
         excludeId: Long,
         k: Int,
         nprobe: Int = 2): DataFrame = {
-      val spark = data.sparkSession
-      val qNorm = math.sqrt(query.map(x => x.toDouble * x).sum)
-      val qLit = typedLit(query.map(_.toDouble / qNorm).toSeq)
       val order = nearestCells(query, centroids.length) // full preference order
 
-      def scan(cells: Seq[Int]): Array[Row] =
-        data.filter(col("cell").isin(cells: _*)) // pushed: batch/partition pruning
-          .filter(col("vec_id") =!= excludeId)
-          .withColumn("cosine", dotCol(col("embedding"), qLit))
-          .orderBy(col("cosine").desc, col("vec_id").asc)
-          .limit(k)
-          .select("vec_id", "cosine")
-          .collect()
+      def scan(cells: Seq[Int]): Array[Row] = annBrute(
+        data.filter(col("cell").isin(cells: _*)), // pushed: batch/partition pruning
+        query, excludeId, k).collect()
 
       var probe = math.max(1, nprobe)
       var hits = scan(order.take(probe))
       while (hits.length < k && probe < order.length) {
         probe += 1
-        hits = (hits ++ scan(Seq(order(probe - 1))))
-          .sortBy(r => (-r.getDouble(1), r.getLong(0))).take(k)
+        hits = mergeHits(hits, scan(Seq(order(probe - 1))), k)
       }
-      val schema = StructType(Seq(
-        StructField("vec_id", LongType, nullable = false),
-        StructField("cosine", DoubleType, nullable = false)))
-      spark.createDataFrame(spark.sparkContext.parallelize(hits.toSeq, 1), schema)
+      hitsFrame(data.sparkSession, hits)
     }
 
     def unpin(): Unit = { data.unpersist(); () }
@@ -546,11 +532,10 @@ object Similarity {
     // (cluster exchange skipped below ClusterRowThreshold — see there)
     val assignUdf = udf((v: Seq[Float]) => bestCell(v, finalCents)._1)
     // the assign kernel is n × √n-cells × dims flops — widen a single-file
-    // scan BEFORE the assign projection so it does not run on one core
-    // (measured 1.0 s serialized at sf0.1; Narrow is a no-op on at-scale
-    // inputs, and the clustered branch redistributes via its own exchange)
-    val aBase = if (n >= ClusterRowThreshold) embeddings else Narrow.widen(embeddings)
-    val assigned = aBase.withColumn("cell", assignUdf(col("embedding")))
+    // scan BEFORE the assign projection so it does not run on one core at
+    // any size (measured 1.0 s serialized at sf0.1; the clustered branch's
+    // exchange comes after the UDF; Narrow is a no-op on a wide scan)
+    val assigned = Narrow.widen(embeddings).withColumn("cell", assignUdf(col("embedding")))
     val df = (if (n >= ClusterRowThreshold)
       assigned.repartition(col("cell")).sortWithinPartitions("cell")
     else assigned)

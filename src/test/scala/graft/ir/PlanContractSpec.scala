@@ -1,9 +1,11 @@
 package graft.ir
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ScalaAggregator, TypedAggregateExpression}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -100,6 +102,15 @@ class PlanContractSpec extends SparkSpec {
     // conv_ids resolve by broadcasting the tiny winners side — the stats
     // table must not be exchanged for it
     assert(plan.contains("BroadcastHashJoin"), s"winners join not broadcast:\n$plan")
+    // the heap is Catalyst's collect_top_k, not a typed Aggregator
+    assert(plan.contains("collect_top_k"), s"batch heap is not collect_top_k:\n$plan")
+    val aggs = nodes(df.queryExecution.executedPlan)
+      .collect { case a: BaseAggregateExec => a.aggregateExpressions.map(_.aggregateFunction) }
+      .flatten
+    assert(aggs.exists(_.isInstanceOf[CollectTopK]), s"no CollectTopK node:\n$plan")
+    val typed = aggs.filter(f =>
+      f.isInstanceOf[ScalaAggregator[_, _, _]] || f.isInstanceOf[TypedAggregateExpression])
+    assert(typed.isEmpty, s"typed Aggregator left in the batch plan: $typed")
   }
 
   test("search plan: exactly one wide exchange (the per-doc score agg)") {

@@ -225,4 +225,29 @@ class RankIdentitySpec extends SparkSpec {
     assert(s.search(spark, "primera consulta", K).count() == 0) // OOV
     assert(s.searchBm25Wand(spark, "", K).count() == 0)
   }
+
+  test("k = 0 returns the empty frame from search, searchBatch and WAND; k < 0 is refused") {
+    val view = IndexBuilder.build(spark, Fixtures.tp2Turns(spark))
+    val s = new Searcher(view)
+    val q = Fixtures.referenceQueries.head
+    val batch = Seq("a" -> q, "b" -> "pais libre")
+    val empty = Seq(
+      s.search(spark, q, 0, Or, Bm25),
+      s.search(spark, q, 0, And, TfIdfCosine),
+      s.searchBatch(spark, batch, 0, Bm25),
+      s.searchBatch(spark, batch, 0, Bm25, exactCutover = 0L),
+      s.searchBm25Wand(spark, q, 0, exactCutover = 0L))
+    empty.foreach(df => assert(df.collect().isEmpty, df.schema.simpleString))
+    // same columns as a served answer
+    assert(empty(0).columns.toSeq == s.search(spark, q, K).columns.toSeq)
+    assert(empty(2).columns.toSeq == s.searchBatch(spark, batch, K).columns.toSeq)
+    val refused = Seq[() => Any](
+      () => s.search(spark, q, -1),
+      () => s.searchBatch(spark, batch, -1),
+      () => s.searchBm25Wand(spark, q, -1, exactCutover = 0L))
+    refused.foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("k = -1"), e.getMessage)
+    }
+  }
 }

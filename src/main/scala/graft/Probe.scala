@@ -9,6 +9,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftCoreBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession, SQLContext}
 import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
@@ -39,7 +40,8 @@ import graft.streaming.StreamingIndexer
  *                          sweep (cold, then warm)
  *   scale local|cluster    build throughput at N vs 4N cores: local[2] vs
  *                          local[8], or 2 vs 8 executor JVMs of 2 cores
- *   latency                serving percentiles, batch prune, 4 clients
+ *   latency                serving percentiles, driver time and compiles
+ *                          per query, batch prune, 4 clients
  *   append                 append vs rebuild, cosine and BM25-only
  *   stream                 streaming ingest turns/s
  *   ann                    LSH vs IVF build, query time and recall@10
@@ -305,8 +307,9 @@ object Probe {
   // ---------------------------------------------------------------- latency
 
   /** Bench's latency section alone: 13 bot queries × 4 rounds of OR-BM25,
-    * WAND and AND top-10, the 13-query batch with its prune A/B, and 4
-    * concurrent clients through one uncached QueryService. */
+    * WAND and AND top-10 (wall percentiles, the p50 of driver time = wall −
+    * Σjob, codegen compiles per query), the 13-query batch with its prune
+    * A/B, and 4 concurrent clients through one uncached QueryService. */
   def latency(spark: SparkSession, nConvs: Int): Unit = {
     val view = served(spark, IndexBuilder.build(spark, Synth.turns(spark, nConvs)))
     val s = new Searcher(view)
@@ -315,14 +318,22 @@ object Probe {
     val modes = Seq[(String, String => DataFrame)]("exact" -> (s.search(spark, _, 10, Or, Bm25)),
       "wand" -> (s.searchBm25Wand(spark, _, 10)), "and" -> (s.search(spark, _, 10, And, Bm25)))
     // the classes interleave per query, in an order rotated each round, so
-    // no class is timed first (and slow) for its position alone
+    // no class is timed first (and slow) for its position alone. Each run
+    // keeps its wall, its driver time (wall − Σjob) and its codegen compiles
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val timed = (0 until 4).flatMap(round => BotQueries.flatMap(q =>
       modes.indices.map(i => modes((i + round) % modes.size))
-        .map { case (mode, run) => mode -> sec(run(q).count()) }))
+        .map { case (mode, run) =>
+          val c0 = compiles
+          val (_, wall, js) = profile(spark)(run(q).count())
+          mode -> (wall, wall - total(js).ms / 1e3, compiles - c0)
+        }))
     val percentiles = modes.map { case (mode, _) =>
-      val xs = timed.collect { case (`mode`, t) => t }.sorted
-      def pct(p: Double) = xs(math.min(xs.length - 1, (p * xs.length).toInt))
-      f"$mode p50=${pct(0.5)}%.3f p95=${pct(0.95)}%.3f"
+      val runs = timed.collect { case (`mode`, r) => r }
+      def pct(xs: Seq[Double], p: Double) = xs.sorted.apply(math.min(xs.length - 1, (p * xs.length).toInt))
+      val walls = runs.map(_._1)
+      f"$mode p50=${pct(walls, 0.5)}%.3f p95=${pct(walls, 0.95)}%.3f " +
+        f"driver_p50=${pct(runs.map(_._2), 0.5)}%.3f compiles/q=${runs.map(_._3).sum.toDouble / runs.length}%.2f"
     }
     val bq = BotQueries.zipWithIndex.map { case (q, i) => (s"q$i", q) }
     def batch(cutover: Long, n: Int) =
@@ -339,8 +350,7 @@ object Probe {
       f"surv=$nSurv (${100.0 * nSurv / math.max(1, nAll)}%.1f%%) " +
       f"unpruned=$off%.3f s pruned=$on%.3f s")
     println(f"[latency] cpus=${spark.sparkContext.defaultParallelism} convs=$nConvs " +
-      s"parts=${spark.conf.get("spark.sql.shuffle.partitions")} " +
-      s"aqe=${spark.conf.get("spark.sql.adaptive.enabled")} ${percentiles.mkString(" | ")} | " +
+      s"parts=${spark.conf.get("spark.sql.shuffle.partitions")} ${percentiles.mkString(" | ")} | " +
       f"batch13 sec=$batchSec%.3f qps=${BotQueries.length / batchSec}%.1f")
 
     // the service holds no lock across Spark jobs, so concurrent clients

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Catalyst-Expression bridge. Spark 4 moved these conversions
@@ -25,4 +26,14 @@ object GraftBridge {
     * function registry and its Column API. */
   def collectTopK(c: Column, n: Int): Column =
     column(new CollectTopK(expression(c), n, true, 0, 0).toAggregateExpression())
+
+  /** A session that starts with `spark`'s conf, temporary views and
+    * functions and shares its SparkContext and cached data; conf set on it
+    * afterwards stays its own. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** A DataFrame over a logical plan, analyzed and run in `spark`. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

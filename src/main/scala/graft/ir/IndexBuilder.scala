@@ -50,9 +50,9 @@ final case class BuildConfig(
   * release a cache it is not sameResult with, so the actual cached plans
   * ride here for `unpin()` to free. Empty for store-loaded views.
   *
-  * `statsPartitions`: the doc_id hash-partition count `pin()` gave
-  * doc_stats; None on every other view (a build, a load, an append and a
-  * rebuild each make a new, unpinned view). */
+  * `serving`: the session `pin()` opened for the view's queries; None on
+  * every other view (a build, a load, an append and a rebuild each make a
+  * new, unpinned view). */
 final case class IndexView(
     termDict: Dataset[TermStat],
     postings: Dataset[Block],
@@ -61,7 +61,7 @@ final case class IndexView(
     meta: IndexMeta,
     cfg: BuildConfig,
     buildCaches: Seq[DataFrame] = Nil,
-    statsPartitions: Option[Int] = None) {
+    serving: Option[SparkSession] = None) {
 
   /** S12 analog (serving tier): the reference bulk-loads the whole index
     * into GPU memory once (GpuServerHandler.java:178-284); here the hot
@@ -69,21 +69,34 @@ final case class IndexView(
     * memory, spilling to disk), materialized lazily on first query. Parquet
     * stays the source of truth — pinning is a cache, not a copy.
     *
-    * The pinned layout is the serving layout:
+    * The pinned layout is the serving layout, with P = the calling
+    * session's shuffle partition count:
     *  - postings are term_id-range-clustered + sorted, so a query's
     *    `term_id IN` filter prunes cached batches via their min/max stats
     *    (an unclustered cache deserializes EVERY batch per query — measured
     *    p50 ~1 s vs ~0.3 s on the 400k-conv synth index);
-    *  - doc_stats is hash-partitioned + sorted on doc_id with the same
-    *    partition count the per-doc score aggregation produces, so the
-    *    scoring join needs no exchange and no sort on the stats side —
-    *    doc_stats never moves at query time, at any corpus size (under AQE
-    *    too: the first query plans the cache as a stage and sees its
-    *    layout once it has run). */
+    *  - doc_stats is hash-partitioned on doc_id into P partitions and
+    *    sorted, so the scoring join needs no exchange and no sort on the
+    *    stats side — doc_stats never moves at query time.
+    *
+    * Queries on the view are planned and run in its own serving session,
+    * a clone of the caller's: AQE off (serving plans are small and
+    * fixed-shape, and a stage per exchange is pure scheduling cost), P
+    * shuffle partitions (so the per-doc score aggregation lands on the
+    * stats layout whatever the caller's session does next), and no
+    * `In` → `InSet` rewrite (cached-batch pruning reads only `In`, and a
+    * batch's term list is far above Spark's threshold of 10). The
+    * caller's session is not changed. */
   def pin(level: StorageLevel = StorageLevel.MEMORY_AND_DISK): IndexView = {
+    import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.internal.SQLConf
     val spark = postings.sparkSession
     val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
+    val session = GraftBridge.cloneSession(spark)
+    session.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
+    session.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, parts.toString)
+    session.conf.set(SQLConf.OPTIMIZER_INSET_CONVERSION_THRESHOLD.key, Int.MaxValue.toString)
     copy(
       termDict = termDict.persist(level),
       postings = postings
@@ -95,7 +108,7 @@ final case class IndexView(
         .sortWithinPartitions("term_id", "first_doc_id").persist(level),
       docStats = docStats.repartition(parts, col("doc_id"))
         .sortWithinPartitions("doc_id").persist(level),
-      statsPartitions = Some(parts))
+      serving = Some(session))
   }
 
   def unpin(): IndexView = {
@@ -176,9 +189,8 @@ object IndexView {
     * far less), floored at 8 for parallelism, capped by the session's
     * configured shuffle.partitions (a real cluster configures that to its
     * core count). Serving entrypoints set `spark.sql.shuffle.partitions` to
-    * this BEFORE `pin()` so the cached postings layout, the per-doc score
-    * agg and the co-partitioned stats join all share one partitioning —
-    * preserving the no-exchange stats join the pin() contract promises. */
+    * this BEFORE `pin()`, which lays both pinned tables out in that many
+    * partitions and gives the view's serving session the same count. */
   def servingPartitions(meta: IndexMeta, spark: org.apache.spark.sql.SparkSession): Int = {
     val cap = math.max(1, spark.sessionState.conf.numShufflePartitions)
     math.min(cap, math.max(8, (meta.postings / 2000000L).toInt))

@@ -123,16 +123,19 @@ class QueryService(
     rows
   }
 
-  /** T3: page through results (page is 0-based). */
+  /** T3: page through results (page is 0-based, pageSize ≥ 1). */
   def searchPage(
       spark: SparkSession,
       query: String,
       page: Int,
       pageSize: Int = 10,
       mode: QueryMode = Or,
-      scorer: Scorer = Bm25): Array[Row] =
+      scorer: Scorer = Bm25): Array[Row] = {
+    require(page >= 0, s"searchPage needs page >= 0, got page = $page")
+    require(pageSize >= 1, s"searchPage needs pageSize >= 1, got pageSize = $pageSize")
     search(spark, query, (page + 1) * pageSize, mode, scorer)
       .drop(page * pageSize)
+  }
 
   private def metricsDf(spark: SparkSession, ms: Seq[Metric]): DataFrame = {
     import spark.implicits._

@@ -1,7 +1,15 @@
 package graft.ir
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.functions.{DecodeBlock, OverlapsAny, Slot}
 
 sealed trait QueryMode
 case object Or extends QueryMode  // disjunctive union-accumulate (reference serving path)
@@ -10,6 +18,24 @@ case object And extends QueryMode // conjunctive posting intersection
 sealed trait Scorer
 case object TfIdfCosine extends Scorer // reference parity (SURVEY.md §1.4)
 case object Bm25 extends Scorer        // north-rule production scorer
+
+/**
+ * Which blocks of the queries' terms a plan decodes. The kind shapes the
+ * plan; its data binds per query as slots.
+ *  - AllBlocks: every block;
+ *  - Overlapping: the blocks overlapping their term's intervals (AND's
+ *    rare-term skip, WAND θ's candidates);
+ *  - Reaching: the blocks whose BM25 bound idf25(t)·s(max_tf, min_dl)
+ *    reaches their term's need (WAND's survivors).
+ */
+private[ir] sealed trait Blocks extends Product { def slots: Map[String, Any] = Map.empty }
+private[ir] case object AllBlocks extends Blocks
+private[ir] final case class Overlapping(intervals: Map[Long, Array[Long]]) extends Blocks {
+  override def slots: Map[String, Any] = Map("intervals" -> intervals)
+}
+private[ir] final case class Reaching(idf: Map[Long, Double], need: Map[Long, Double]) extends Blocks {
+  override def slots: Map[String, Any] = Map("idf" -> idf, "need" -> need)
+}
 
 /**
  * Query-side engine: analyze → vocabulary lookup (OOV drop) → postings scan
@@ -25,6 +51,20 @@ case object Bm25 extends Scorer        // north-rule production scorer
  * without moving; the (query, doc) sum needs no second exchange. This is
  * the Spark-native reshape of the reference's client→broker→server→GPU hop
  * chain (SURVEY.md §3.1).
+ *
+ * Prepared plans: like the reference's server, which loads the index once
+ * and answers every query against that state (GpuServerHandler.java:
+ * 178-284), a Searcher builds and analyzes each plan once per query class
+ * — (request, mode, scorer, block filter) — with [[Slot]]s where a
+ * query's data goes, and a query only binds its own: the `term_id IN`
+ * literal list the cached postings scan prunes on, the term weights as
+ * one map literal expanded per posting (in place of a broadcast join of a
+ * weight table, which cost a job of its own), k, and the block filter's
+ * intervals or bounds. Every value a query binds is either the term list
+ * or a map or array literal, which generated code references instead of
+ * inlining, so a fresh term set compiles only its term filter. The plans
+ * run in the view's serving session ([[IndexView.pin]]); the `spark`
+ * arguments are kept for callers and not used.
  *
  * Scoring semantics:
  *  - tf-idf cosine: score(d,q) = Σ_t w(t,d)·w(t,q) / (‖q‖·‖d‖) with
@@ -45,6 +85,42 @@ class Searcher(index: IndexView) extends Serializable {
   private val b = cfg.b
   private val avgdl = if (index.meta.avgdl > 0) index.meta.avgdl else 1.0
 
+  /** Where every query on the view is planned and run: a pinned view's
+    * serving session, else the session its tables belong to. */
+  @transient private lazy val session: SparkSession =
+    index.serving.getOrElse(index.postings.sparkSession)
+  @transient private lazy val postings: DataFrame =
+    GraftBridge.ofRows(session, index.postings.queryExecution.analyzed)
+  @transient private lazy val docStats: DataFrame =
+    GraftBridge.ofRows(session, index.docStats.queryExecution.analyzed)
+
+  /** The analyzed plan of each query class, built on first use. */
+  @transient private lazy val plans = new ConcurrentHashMap[String, LogicalPlan]()
+
+  /** Query class `key`'s plan, built by `build` on its first query, with
+    * one query's data bound: `slots` by name, and `k` as every limit and
+    * `collect_top_k` size. Analysis of the bound plan revisits only the
+    * nodes that binding replaced. */
+  private def run(key: String, k: Int, slots: Map[String, Any])(build: => DataFrame): DataFrame = {
+    val plan = plans.computeIfAbsent(key, _ => build.queryExecution.analyzed)
+    GraftBridge.ofRows(session, Slot.bind(plan, slots).transformDown {
+      case GlobalLimit(_, c) => GlobalLimit(Literal(k), c)
+      case LocalLimit(_, c) => LocalLimit(Literal(k), c)
+    }.transformAllExpressions { case t: CollectTopK => t.copy(num = k) })
+  }
+
+  /** Slot types: per term_id, the (query, w, ‖q‖, |q|) of each query that
+    * has the term (see [[scorePlan]]); per-term doubles; per-term packed
+    * intervals; the batch's query ids by qidx. */
+  private val Weights = MapType(LongType, ArrayType(StructType(Seq(
+    StructField("qidx", IntegerType, nullable = false),
+    StructField("w", DoubleType, nullable = false),
+    StructField("qn", DoubleType, nullable = false),
+    StructField("nq", IntegerType, nullable = false))), containsNull = false))
+  private val PerTerm = MapType(LongType, DoubleType, valueContainsNull = false)
+  private val Intervals = MapType(LongType, ArrayType(LongType, containsNull = false))
+  private val QueryIds = MapType(IntegerType, StringType, valueContainsNull = false)
+
   /** The BM25 per-posting term w·(k1+1)·tf / (tf + k1·(1−b+b·dl/avgdl)) —
     * the one saturation expression every scorer, block bound and θ score
     * builds. `w` multiplies the numerator BEFORE the divide (None: the bare
@@ -55,47 +131,51 @@ class Searcher(index: IndexView) extends Serializable {
     w.fold(num)(_ * num) / (tf + lit(k1) * (lit(1 - b) + lit(b / avgdl) * dl))
   }
 
-  /** Joins the doc_stats columns `cols` onto `df` by doc_id. The merge hint
-    * keeps the pinned stats side (doc_id-partitioned and sorted like the
-    * decode's doc_id exchange) from moving: no exchange, no sort. It holds
-    * only while the session's shuffle partition count is the one
-    * [[IndexView.pin]] recorded; on any other layout the hint would shuffle
-    * both sides, so Spark chooses the join. `spread` = Some(n) first
-    * re-hashes `df` on doc_id into n partitions; the stats then join as a
-    * broadcast dimension (a shuffle join past IndexBuilder.BroadcastRowLimit
-    * docs), as the two sides no longer share a layout. */
-  private def withDocStats(spark: SparkSession, df: DataFrame, spread: Option[Int],
-      cols: String*): DataFrame = {
-    val stats = index.docStats.select("doc_id", cols: _*)
-    spread match {
-      case Some(n) =>
-        df.repartition(n, col("doc_id")).join(IndexBuilder.dim(stats, index.meta.docs), "doc_id")
-      case None =>
-        val pinned = index.statsPartitions.contains(spark.sessionState.conf.numShufflePartitions)
-        df.join(if (pinned) stats.hint("merge") else stats, "doc_id")
+  /** Joins the doc_stats columns `cols` onto `df` by doc_id. On a pinned
+    * view the merge hint keeps the stats side (doc_id-partitioned and
+    * sorted like the decode's doc_id exchange, in as many partitions as
+    * the serving session shuffles into) from moving: no exchange, no sort.
+    * On an unpinned view the hint would shuffle both sides, so Spark
+    * chooses the join. `spread` first re-hashes `df` on doc_id into
+    * [[wide]] partitions; the stats then join as a broadcast dimension (a
+    * shuffle join past IndexBuilder.BroadcastRowLimit docs), as the two
+    * sides no longer share a layout. */
+  private def withDocStats(df: DataFrame, spread: Boolean, cols: String*): DataFrame = {
+    val stats = docStats.select("doc_id", cols: _*)
+    if (spread) df.repartition(wide, col("doc_id")).join(IndexBuilder.dim(stats, index.meta.docs), "doc_id")
+    else df.join(if (index.serving.isDefined) stats.hint("merge") else stats, "doc_id")
+  }
+
+  /** A large batch's decode width: 2× the cores. */
+  private def wide: Int = 2 * session.sparkContext.defaultParallelism
+
+  /** An interval list that every block overlaps. */
+  private val Everywhere = Array(Long.MinValue, Long.MaxValue)
+
+  /** The BM25 bound of a block of term_id, bm25(max_tf, min_dl) with the
+    * term's idf25 from `idf`. */
+  private def blockBound(idf: Column): Column =
+    bm25(col("max_tf"), col("min_dl"), Some(element_at(idf, col("term_id"))))
+
+  /** The filter of [[Blocks]] `blocks` over the postings: `term_id IN`
+    * the bound term list, and the kind's block test. */
+  private def keep(blocks: Blocks): Column = {
+    val terms = Slot.in(col("term_id"), "terms", LongType)
+    blocks match {
+      case AllBlocks => terms
+      case _: Overlapping => terms && OverlapsAny.column(col("first_doc_id"), col("last_doc_id"),
+        element_at(Slot.column("intervals", Intervals), col("term_id")))
+      case _: Reaching => terms && blockBound(Slot.column("idf", PerTerm)) >=
+        element_at(Slot.column("need", PerTerm), col("term_id"))
     }
   }
 
-  /** Block filter: [first_doc_id, last_doc_id] overlaps one of `intervals`.
-    * The intervals are sorted and merged once on the driver, so the
-    * per-block test is a binary search for the last start ≤ last. */
-  private def overlapsAny(intervals: Array[(Long, Long)]): Column = {
-    val merged = intervals.sorted.foldLeft(List.empty[(Long, Long)]) {
-      case ((s, e) :: acc, (f, l)) if f <= e => (s, math.max(e, l)) :: acc
-      case (acc, iv) => iv :: acc
-    }.reverse.toArray
-    val starts = merged.map(_._1)
-    val ends = merged.map(_._2) // ascending too (disjoint, start-sorted)
-    val overlaps = udf((first: Long, last: Long) => {
-      var lo = 0
-      var hi = starts.length // lo → first interval with start > last
-      while (lo < hi) {
-        val m = (lo + hi) >>> 1
-        if (starts(m) <= last) lo = m + 1 else hi = m
-      }
-      lo > 0 && ends(lo - 1) >= first
-    })
-    overlaps(col("first_doc_id"), col("last_doc_id"))
+  /** The blocks of `termIds` that `blocks` keeps, as a table (the probes
+    * and specs count them). */
+  private def blockTable(termIds: Seq[Long], blocks: Blocks): Dataset[Block] = {
+    import session.implicits._
+    run(s"blocks/${blocks.productPrefix}", 0, blocks.slots + ("terms" -> termIds))(
+      postings.filter(keep(blocks))).as[Block]
   }
 
   /** Query term weights after analysis + OOV drop. */
@@ -117,9 +197,12 @@ class Searcher(index: IndexView) extends Serializable {
     // (Model/Query.java:33-41).
     val rows: Seq[TermStat] = index.termLookup match {
       case Some(dict) => freq.keys.iterator.flatMap(dict.get).toSeq
-      case None => index.termDict
-        .filter(col("term").isin(freq.keys.toSeq: _*))
-        .collect().toSeq
+      case None =>
+        import session.implicits._
+        run("dict", 0, Map("terms" -> freq.keys.toSeq))(
+          GraftBridge.ofRows(session, index.termDict.queryExecution.analyzed)
+            .filter(Slot.in(col("term"), "terms", StringType)))
+          .as[TermStat].collect().toSeq
     }
     if (rows.isEmpty) return Seq.empty
     val maxQtf = freq.values.max.toDouble
@@ -174,11 +257,11 @@ class Searcher(index: IndexView) extends Serializable {
     val cached = termIds.distinct.map(t => t -> index.thetaIntervalCache.get((t, k)))
     val missing = cached.collect { case (t, null) => t }
     if (missing.isEmpty) return cached.toMap
-    val got: Map[Long, Array[(Long, Long)]] = index.postings.toDF()
-      .filter(col("term_id").isin(missing: _*))
-      .groupBy("term_id")
-      .agg(GraftBridge.collectTopK(struct(-bm25(col("max_tf"), col("min_dl")),
-        col("first_doc_id"), col("last_doc_id")), k))
+    val got: Map[Long, Array[(Long, Long)]] = run("intervals", k, Map("terms" -> missing))(
+      postings.filter(keep(AllBlocks))
+        .groupBy("term_id")
+        .agg(GraftBridge.collectTopK(struct(-bm25(col("max_tf"), col("min_dl")),
+          col("first_doc_id"), col("last_doc_id")), 1)))
       .collect()
       .map(r => r.getLong(0) ->
         r.getSeq[Row](1).map(b => (b.getLong(1), b.getLong(2))).toArray.sorted)
@@ -199,20 +282,21 @@ class Searcher(index: IndexView) extends Serializable {
    * stopword-grade term AND a rare term now decodes O(df_rare/BlockSize)
    * hot blocks instead of the hot term's entire posting list.
    */
-  private[graft] def andSurvivorBlocks(
-      spark: SparkSession, qts: Seq[QueryTerm]): Option[Dataset[Block]] = {
+  private def andSkip(qts: Seq[QueryTerm]): Option[Blocks] = {
     val rare = qts.minBy(q => (q.df, q.termId))
     if (rare.df / Codec.BlockSize + 1 > AndSkipMaxBlocks) return None
-    val intervals = index.postings
-      .filter(col("term_id") === rare.termId)
-      .select("first_doc_id", "last_doc_id")
+    val intervals = run("rare", 0, Map("terms" -> Seq(rare.termId)))(
+      postings.filter(keep(AllBlocks)).select("first_doc_id", "last_doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     if (intervals.isEmpty) return None // dict/postings drift: fall back
-    val others = qts.map(_.termId).filter(_ != rare.termId)
-    Some(index.postings.filter(
-      col("term_id") === rare.termId ||
-        (col("term_id").isin(others: _*) && overlapsAny(intervals))))
+    val packed = OverlapsAny.pack(intervals.toSeq)
+    Some(Overlapping(qts.map(t =>
+      t.termId -> (if (t.termId == rare.termId) Everywhere else packed)).toMap))
   }
+
+  private[graft] def andSurvivorBlocks(
+      spark: SparkSession, qts: Seq[QueryTerm]): Option[Dataset[Block]] =
+    andSkip(qts).map(blockTable(qts.map(_.termId), _))
 
   /** Refuses k < 0. k = 0 asks for no hits: every entry point then
     * analyzes no query and returns its empty frame, with no Spark job. */
@@ -237,37 +321,27 @@ class Searcher(index: IndexView) extends Serializable {
 
   /**
    * The one scoring plan: (qidx, doc_id, score) for every doc that scores
-   * > 0 for query `live(qidx)`, decoded from `blocks` (default: every block
-   * of the queries' terms), with conv_id after doc_id if `convIds`. The
-   * doc_stats columns join each decoded posting before the sum, so every
-   * scorer is one per-posting contribution over a broadcast
-   * (qidx, term_id, w) table:
+   * > 0 for query qidx, decoded from the queries' term blocks that
+   * `blocks` keeps, with conv_id after doc_id if `convIds`. The doc_stats
+   * columns join each decoded posting before the sum, so every scorer is
+   * one per-posting contribution over the (qidx, w, qn, nq) rows that the
+   * `weights` slot maps its term to (one row per query that has the term):
    *  - cosine: w(t,q)·idf(t)·tf / (max_tf·‖q‖·‖d‖), 0 on a zero divisor;
    *  - BM25: the fixed-point qfix(bm25(tf, doc_len, qtf·idf25)).
    * AND keeps a (query, doc) group only when all |q| terms matched. The
    * sum groups by (qidx, doc_id): on the pinned layout the stats join's
-   * doc_id exchange already clusters it. `spread` = Some(n) re-hashes the
-   * decoded postings on doc_id into n partitions instead, which clusters
-   * the sum just as well (see [[BatchRespreadCutover]]). With `convIds`
+   * doc_id exchange already clusters it. `spread` re-hashes the decoded
+   * postings on doc_id into [[wide]] partitions instead, which clusters the
+   * sum just as well (see [[BatchRespreadCutover]]). With `convIds`
    * conv_id rides the stats join and the sum as a key, which suits one
    * query; a batch's fan-out sums each doc once per query, and a string key
    * there cost ~50% more task CPU than resolving the winners afterwards.
    */
-  private def scorePlan(spark: SparkSession, live: Seq[(String, Seq[QueryTerm])],
-      mode: QueryMode, scorer: Scorer, blocks: Option[Dataset[Block]],
-      convIds: Boolean, spread: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    // w(t,q) is carried on QueryTerm, never recovered as qwIdf/idf: a term in
-    // EVERY doc has idf = 0, and 0/0 = NaN would poison ‖q‖; it contributes
-    // w = 0, as in the reference (ir_manager.py:69-96).
-    val weights = broadcast(live.zipWithIndex.flatMap { case ((_, ts), qi) =>
-      ts.map(t => (qi, t.termId, if (scorer == Bm25) t.qb else t.qwIdf, qNorm(ts), ts.length))
-    }.toDF("qidx", "term_id", "w", "qn", "nq"))
-    val termIds = live.flatMap(_._2.map(_.termId)).distinct
+  private def scorePlan(mode: QueryMode, scorer: Scorer, blocks: Blocks,
+      convIds: Boolean, spread: Boolean): DataFrame = {
     // the native DecodeBlock generator keeps postings in Tungsten rows, with
     // no per-query round trip through Block objects
-    val decoded = graft.functions.DecodeBlock.postings(
-      blocks.getOrElse(index.postings.filter(col("term_id").isin(termIds: _*))).toDF())
+    val decoded = DecodeBlock.postings(postings.filter(keep(blocks)))
     val (stats, contrib) = scorer match {
       case TfIdfCosine => (Seq("max_tf", "norm"),
         when(col("max_tf") === 0 || col("norm") === 0.0, 0.0).otherwise(
@@ -275,8 +349,8 @@ class Searcher(index: IndexView) extends Serializable {
       case Bm25 => (Seq("doc_len"), qfix(bm25(col("tf"), col("doc_len"), Some(col("w")))))
     }
     val keys = Seq("qidx", "doc_id") ++ (if (convIds) Seq("conv_id") else Nil)
-    val grouped = withDocStats(spark, decoded, spread, keys.drop(2) ++ stats: _*)
-      .join(weights, "term_id")
+    val grouped = withDocStats(decoded, spread, keys.drop(2) ++ stats: _*)
+      .select(col("*"), inline(element_at(Slot.column("weights", Weights), col("term_id"))))
       .withColumn("c", contrib)
     val summed = mode match {
       case Or => grouped.groupBy(keys.map(col): _*).agg(sum(col("c")).as("s"))
@@ -290,31 +364,43 @@ class Searcher(index: IndexView) extends Serializable {
       .filter(col("score") > 0.0)
   }
 
+  /** The slots of a [[scorePlan]] over `live` with `blocks`: the term list,
+    * the weights and the block filter's data. w(t,q) is carried on
+    * QueryTerm, never recovered as qwIdf/idf: a term in EVERY doc has
+    * idf = 0, and 0/0 = NaN would poison ‖q‖; it contributes w = 0, as in
+    * the reference (ir_manager.py:69-96). */
+  private def scoring(live: Seq[(String, Seq[QueryTerm])], scorer: Scorer,
+      blocks: Blocks): Map[String, Any] = {
+    val weights = live.zipWithIndex.flatMap { case ((_, ts), qi) =>
+      ts.map(t => t.termId -> Row(qi, if (scorer == Bm25) t.qb else t.qwIdf, qNorm(ts), ts.length))
+    }.groupMap(_._1)(_._2)
+    blocks.slots ++ Map("terms" -> weights.keys.toSeq.sorted, "weights" -> weights)
+  }
+
   /** One query's top k through [[scorePlan]]: TakeOrderedAndProject (a
     * per-partition heap, then a merge), ties broken by doc_id (T1: the
     * reference's tie order is HashMap-unstable, SURVEY.md §7.4 risk 3). */
-  private def topK(spark: SparkSession, qts: Seq[QueryTerm], k: Int,
-      mode: QueryMode, scorer: Scorer, blocks: Option[Dataset[Block]]): DataFrame = {
-    import spark.implicits._
+  private def topK(qts: Seq[QueryTerm], k: Int, mode: QueryMode, scorer: Scorer,
+      blocks: Blocks): DataFrame = {
+    import session.implicits._
     val live = scorable(Seq("" -> qts), scorer)
-    if (live.isEmpty) return spark.emptyDataset[Hit].toDF()
-    scorePlan(spark, live, mode, scorer, blocks, convIds = true)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-      .select("doc_id", "conv_id", "score")
+    if (live.isEmpty) return session.emptyDataset[Hit].toDF()
+    run(s"single/$mode/$scorer/${blocks.productPrefix}", k, scoring(live, scorer, blocks))(
+      scorePlan(mode, scorer, blocks, convIds = true, spread = false)
+        .orderBy(col("score").desc, col("doc_id").asc)
+        .limit(1) // k binds per query
+        .select("doc_id", "conv_id", "score"))
   }
 
   /** Each query's k best rows of a [[scorePlan]] result (no conv_ids) as
-    * (qidx, pos, doc_id, score), pos 0..k−1 in (score desc, doc_id asc)
-    * order: a bounded heap per query, `collect_top_k` of the k smallest
-    * (−score, doc_id). Partial aggregation keeps ≤ k rows per (query, task)
-    * before the qidx exchange, and nothing sorts a match list. */
-  private def heapTopK(scored: DataFrame, k: Int): DataFrame =
-    scored.groupBy("qidx")
-      .agg(GraftBridge.collectTopK(
-        struct((-col("score")).as("neg"), col("doc_id")), k).as("hits"))
-      .select(col("qidx"), posexplode(col("hits")).as(Seq("pos", "h")))
-      .select(col("qidx"), col("pos"), col("h.doc_id"), (-col("h.neg")).as("score"))
+    * (qidx, hits), hits = the k smallest (−score, doc_id) in ascending
+    * order, i.e. (score desc, doc_id asc): a bounded heap per query,
+    * `collect_top_k`, whose size k binds per query. Partial aggregation
+    * keeps ≤ k rows per (query, task) before the qidx exchange, and nothing
+    * sorts a match list. */
+  private def heapTopK(scored: DataFrame): DataFrame =
+    scored.groupBy("qidx").agg(GraftBridge.collectTopK(
+      struct((-col("score")).as("neg"), col("doc_id")), 1).as("hits"))
 
   def search(
       spark: SparkSession,
@@ -323,8 +409,8 @@ class Searcher(index: IndexView) extends Serializable {
       mode: QueryMode = Or,
       scorer: Scorer = TfIdfCosine): DataFrame = {
     val qts = if (wantsHits(k)) queryTerms(spark, query) else Nil
-    val blocks = if (mode == And && qts.length > 1) andSurvivorBlocks(spark, qts) else None
-    topK(spark, qts, k, mode, scorer, blocks)
+    val blocks = if (mode == And && qts.length > 1) andSkip(qts) else None
+    topK(qts, k, mode, scorer, blocks.getOrElse(AllBlocks))
   }
 
   /** Below this many total candidate postings the WAND θ phase costs more
@@ -382,45 +468,47 @@ class Searcher(index: IndexView) extends Serializable {
       k: Int,
       scorer: Scorer = Bm25,
       exactCutover: Long = -1L): DataFrame = {
-    import spark.implicits._
+    import session.implicits._
     // duplicate ids would silently merge two queries' contributions into
     // one aggregation group — refuse loudly instead
     require(queries.map(_._1).distinct.length == queries.length,
       s"searchBatch: duplicate query_id in ${queries.map(_._1).mkString(",")}")
     val live = scorable(if (!wantsHits(k)) Nil
       else queries.map { case (qid, text) => qid -> queryTerms(spark, text) }, scorer)
-    if (live.isEmpty) return spark.emptyDataset[(String, Long, String, Double, Int)]
+    if (live.isEmpty) return session.emptyDataset[(String, Long, String, Double, Int)]
       .toDF("query_id", "doc_id", "conv_id", "score", "rank")
     // candidate (query, term) postings: the cutovers' measure of batch work
     val fanout = live.flatMap(_._2).map(_.df).sum
     // BM25 batches above the cutover get per-query block-max pruning on the
     // SHARED decode
     val cutover = if (exactCutover >= 0L) exactCutover else BatchExactCutover
-    val blocks =
-      if (scorer == Bm25 && fanout > cutover) survivorBlocks(spark, live, k) else None
+    val blocks = (if (scorer == Bm25 && fanout > cutover) prune(live, k) else None)
+      .getOrElse(AllBlocks)
     // the serving layout deliberately keeps FEW partitions (single-query
     // fixed cost ~ tasks/stage), but a LARGE batch's fan-out work is
     // throughput-bound: spread it over the full parallelism
-    val wide = 2 * spark.sparkContext.defaultParallelism
-    val spread = Some(wide).filter(_ =>
-      fanout >= BatchRespreadCutover && wide > spark.sessionState.conf.numShufflePartitions)
+    val spread = fanout >= BatchRespreadCutover &&
+      wide > session.sessionState.conf.numShufflePartitions
     // queries ride through the big aggregation as a dense INT index, not
     // the caller's string id: the (query, doc) hash-agg touches millions of
     // rows, and narrow numeric keys measurably beat string keys there; the
     // string id is restored on the k·|queries| result rows at the end
-    val qidLit = typedLit(live.map(_._1).zipWithIndex.map(_.swap).toMap)
-    val scored = scorePlan(spark, live, Or, scorer, blocks, convIds = false, spread = spread)
-    val winners = heapTopK(scored, k)
-      .select(
-        element_at(qidLit, col("qidx")).as("query_id"),
-        col("doc_id"),
-        col("score"),
-        (col("pos") + 1).cast("int").as("rank"))
-    // winners are ≤ k·|queries| rows — broadcast THEM into the stats probe,
-    // so conv_id resolution never moves the stats table
-    broadcast(winners)
-      .join(index.docStats.select("doc_id", "conv_id"), "doc_id")
-      .select("query_id", "doc_id", "conv_id", "score", "rank")
+    val qids = live.map(_._1).zipWithIndex.map(_.swap).toMap
+    run(s"batch/$scorer/${blocks.productPrefix}/$spread", k,
+        scoring(live, scorer, blocks) + ("qids" -> qids)) {
+      val winners = heapTopK(scorePlan(Or, scorer, blocks, convIds = false, spread))
+        .select(col("qidx"), posexplode(col("hits")).as(Seq("pos", "h")))
+        .select(
+          element_at(Slot.column("qids", QueryIds), col("qidx")).as("query_id"),
+          col("h.doc_id").as("doc_id"),
+          (-col("h.neg")).as("score"),
+          (col("pos") + 1).cast("int").as("rank"))
+      // winners are ≤ k·|queries| rows — broadcast THEM into the stats
+      // probe, so conv_id resolution never moves the stats table
+      broadcast(winners)
+        .join(docStats.select("doc_id", "conv_id"), "doc_id")
+        .select("query_id", "doc_id", "conv_id", "score", "rank")
+    }
   }
 
   /**
@@ -457,15 +545,9 @@ class Searcher(index: IndexView) extends Serializable {
    * None = nothing prunable (every θ is 0) — caller decodes the full
    * term set.
    */
-  private[graft] def survivorBlocks(
-      spark: SparkSession,
-      live: Seq[(String, Seq[QueryTerm])],
-      k: Int): Option[Dataset[Block]] = {
+  private def prune(live: Seq[(String, Seq[QueryTerm])], k: Int): Option[Blocks] = {
     val allTerms: Map[Long, QueryTerm] = live.flatMap(_._2).map(t => t.termId -> t).toMap
-    val termIds = live.flatMap(_._2.map(_.termId)).distinct
-    val idfLit = typedLit(allTerms.map { case (tid, t) => tid -> t.bm25Idf })
-    val blockBound =
-      bm25(col("max_tf"), col("min_dl"), Some(element_at(idfLit, col("term_id"))))
+    val idf = allTerms.map { case (tid, t) => tid -> t.bm25Idf }
 
     // per-term global max BM25 doc weight: ZERO jobs from the view's
     // driver-resident term-level block bounds (sound: s is increasing in tf,
@@ -480,11 +562,11 @@ class Searcher(index: IndexView) extends Serializable {
             t.bm25Idf * sat(mt.toDouble, md.toDouble)
           }
         }
-      case None => index.postings
-        .filter(col("term_id").isin(termIds: _*))
-        .withColumn("bound", blockBound)
-        .groupBy("term_id").agg(max("bound").as("m"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      case None =>
+        run("gmax", 0, Map("terms" -> allTerms.keys.toSeq, "idf" -> idf))(
+          postings.filter(keep(AllBlocks))
+            .groupBy("term_id").agg(max(blockBound(Slot.column("idf", PerTerm))).as("m")))
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     }
     case class QInfo(qid: String, ts: Seq[QueryTerm], tStar: QueryTerm, sumGmax: Double)
     val infos = live.map { case (qid, ts) =>
@@ -498,20 +580,20 @@ class Searcher(index: IndexView) extends Serializable {
     // intervals per t* term, served from the view's (term, k) interval
     // cache — zero jobs once the terms are warm (VERDICT r5 #4); (2) the
     // scoring plan over every query term's blocks overlapping the merged
-    // intervals, and its heap top-k's k-th value per query. Any doc inside
+    // intervals, and the last of its heap's k values per query (fewer than
+    // k values: no k-th score, θ = 0). Any doc inside
     // the intervals has ALL its postings in overlapping blocks, so its
     // score is complete; docs straddling the edges score partially, which
     // only LOWERS θ.
-    val intervals = topBlockIntervals(infos.map(_.tStar.termId), k).values.flatten.toArray
+    val intervals = topBlockIntervals(infos.map(_.tStar.termId), k).values.flatten.toSeq
     if (intervals.isEmpty) return None
-    val candBlocks = index.postings
-      .filter(col("term_id").isin(termIds: _*))
-      .filter(overlapsAny(intervals))
-    val scored = scorePlan(spark, live, Or, Bm25, Some(candBlocks), convIds = false)
-    val kth: Map[Int, Double] = heapTopK(scored, k)
-      .filter(col("pos") === k - 1)
-      .select(col("qidx"), col("score"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val packed = OverlapsAny.pack(intervals)
+    val candidates = Overlapping(allTerms.map { case (tid, _) => tid -> packed })
+    val kth: Map[Int, Double] = run("theta", k, scoring(live, Bm25, candidates))(
+      heapTopK(scorePlan(Or, Bm25, candidates, convIds = false, spread = false))
+        .select(col("qidx"), size(col("hits")),
+          (-element_at(col("hits"), -1).getField("neg")).as("score")))
+      .collect().collect { case r if r.getInt(1) == k => r.getInt(0) -> r.getDouble(2) }.toMap
 
     // fewer than k docs carry t* → the candidate set may be < k docs → θ
     // would not be a sound k-th-total lower bound → θ = 0 for that query
@@ -532,11 +614,14 @@ class Searcher(index: IndexView) extends Serializable {
         }
       }.min
     }.toMap
-    val needLit = typedLit(need)
-    Some(index.postings
-      .filter(col("term_id").isin(termIds: _*))
-      .filter(blockBound >= element_at(needLit, col("term_id"))))
+    Some(Reaching(idf, need))
   }
+
+  private[graft] def survivorBlocks(
+      spark: SparkSession,
+      live: Seq[(String, Seq[QueryTerm])],
+      k: Int): Option[Dataset[Block]] =
+    prune(live, k).map(blockTable(live.flatMap(_._2.map(_.termId)).distinct, _))
 
   /**
    * Block-max pruned BM25 top-k (the north rule's WAND path): the scoring
@@ -555,18 +640,18 @@ class Searcher(index: IndexView) extends Serializable {
     val qts = if (wantsHits(k)) queryTerms(spark, query) else Nil
     val blocks =
       if (qts.isEmpty || qts.map(_.df).sum <= exactCutover) None
-      else Some(wandPlan(spark, qts, k)._2)
-    topK(spark, qts, k, Or, Bm25, blocks)
+      else prune(Seq("" -> qts), k)
+    topK(qts, k, Or, Bm25, blocks.getOrElse(AllBlocks))
   }
 
   /** The WAND pruning decision for an analyzed term set: (candidate block
     * set, surviving block set) — [[survivorBlocks]] on a batch of one, all
-    * candidates surviving when nothing prunes. Shared by [[searchBm25Wand]]
-    * and Bench's wand_prune section, so what the probe counts IS what
-    * serving decodes. */
+    * candidates surviving when nothing prunes. Its pruning is the one
+    * [[searchBm25Wand]] runs, so what Bench's wand_prune section counts IS
+    * what serving decodes. */
   private[graft] def wandPlan(
       spark: SparkSession, qts: Seq[QueryTerm], k: Int): (Dataset[Block], Dataset[Block]) = {
-    val candidates = index.postings.filter(col("term_id").isin(qts.map(_.termId): _*))
+    val candidates = blockTable(qts.map(_.termId), AllBlocks)
     (candidates, survivorBlocks(spark, Seq("" -> qts), k).getOrElse(candidates))
   }
 }

@@ -1,16 +1,17 @@
 package graft.ir
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ScalaAggregator, TypedAggregateExpression}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 
-import graft.SparkSpec
+import graft.{Probe, SparkSpec}
 
 /**
  * Serving-plan contract: the physical plan properties the 100 TB posture
@@ -208,5 +209,85 @@ class PlanContractSpec extends SparkSpec {
       assertStatsStay(executed(s.searchBatch(spark, Seq("a" -> "pais", "b" -> "libre"), 10)),
         "first batch")
     } finally { fresh.unpin(); () }
+  }
+
+  // ------------------------------------------------------ prepared plans
+
+  /** The view's terms, most frequent first. */
+  private lazy val vocab =
+    view.termDict.collect().sortBy(t => (-t.df, t.term)).map(_.term).toIndexedSeq
+
+  /** A query of the vocabulary terms at `idx` (mod the vocabulary). */
+  private def terms(idx: Int*): String = idx.map(i => vocab(i % vocab.length)).mkString(" ")
+
+  /** The Spark jobs `body` runs and the codegen compiles it causes. */
+  private def cost(body: => Any): (Int, Long) = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val jobs = Probe.profile(spark)(body)._3.size
+    (jobs, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+  }
+
+  /** The single-query classes on searcher `s`. */
+  private def singles(s: Searcher): Seq[(String, String => DataFrame)] = Seq(
+    "or-bm25" -> (s.search(spark, _, 10, Or, Bm25)),
+    "or-cosine" -> (s.search(spark, _, 10, Or, TfIdfCosine)),
+    "wand-bm25" -> (s.searchBm25Wand(spark, _, 10)),
+    "and-bm25" -> (s.search(spark, _, 10, And, Bm25)))
+
+  test("prepared plans: a warm single OR, cosine or WAND query runs 1 job, AND 2") {
+    val s = new Searcher(view)
+    for ((name, run) <- singles(s)) {
+      run(terms(0, 3)).collect() // the class's plan is built here
+      val (jobs, _) = cost(run(terms(1, 4, 6)).collect())
+      assert(jobs == (if (name == "and-bm25") 2 else 1), s"$name ran $jobs jobs")
+    }
+  }
+
+  test("prepared plans: no broadcast of a local table, no adaptive plan from an AQE caller") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val s = new Searcher(view)
+    val batch = (0 until 4).map(i => s"q$i" -> terms(i, i + 5))
+    val plans = singles(s).map { case (name, run) => name -> executed(run(terms(2, 5))) } :+
+      ("batch" -> executed(s.searchBatch(spark, batch, 10)))
+    for ((name, plan) <- plans) {
+      assert(!nodes(plan).exists(_.isInstanceOf[AdaptiveSparkPlanExec]), s"$name is adaptive:\n$plan")
+      val localBroadcast = nodes(plan).collect { case b: BroadcastExchangeExec => b.child }
+        .exists(_.isInstanceOf[LocalTableScanExec])
+      assert(!localBroadcast, s"$name broadcasts a local table:\n$plan")
+    }
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true", "pin() changed the caller's conf")
+  }
+
+  test("prepared plans: the postings scan pushes IN, not INSET, for a 32-query batch and 12 terms") {
+    val s = new Searcher(view)
+    val batch = (0 until 32).map(i => s"q$i" -> terms(i, i + 5, i + 11))
+    val twelve = terms(0 until 12: _*)
+    assert(s.queryTerms(spark, twelve).length == 12)
+    for ((name, df) <- Seq("batch32" -> s.searchBatch(spark, batch, 10),
+        "12 terms" -> s.search(spark, twelve, 10, Or, Bm25))) {
+      val plan = executed(df).toString.split("InMemoryRelation")(0)
+      val scanLine = plan.linesIterator
+        .find(l => l.contains("InMemoryTableScan") && l.contains("doc_ids"))
+        .getOrElse(fail(s"$name: no postings scan line:\n$plan"))
+      assert(scanLine.contains("term_id") && scanLine.contains(" IN ") && !scanLine.contains("INSET"),
+        s"$name: term_id IN not pushed to the cached scan:\n$scanLine")
+    }
+  }
+
+  test("prepared plans: a fresh term set compiles only its term filter; new weights or k nothing") {
+    val s = new Searcher(view)
+    (0 until 3).foreach(i => s.search(spark, terms(i, i + 7), 10, Or, Bm25).collect())
+    // the term filter's codegen stage, compiled once for the driver and once
+    // for the tasks (Spark keys its code cache on the class loader too), and
+    // the cached scan's batch-statistics predicate over the same literals
+    val (_, fresh) = cost(s.search(spark, terms(2, 9, 13), 10, Or, Bm25).collect())
+    assert(fresh <= 3, s"a fresh term set compiled $fresh times")
+    // the same terms with new weights (a repeated term) and a new k: the
+    // weights map and k are data, so nothing compiles
+    val (_, rebound) = cost(s.search(spark, terms(2, 9, 13, 13), 7, Or, Bm25).collect())
+    assert(rebound == 0, s"new weights and k compiled $rebound times")
+    val (_, cosine) = cost(s.search(spark, terms(2, 2, 9, 13), 10, Or, TfIdfCosine).collect())
+    val (_, again) = cost(s.search(spark, terms(2, 9, 13), 12, Or, TfIdfCosine).collect())
+    assert(again == 0, s"cosine with new weights and k compiled $again times (first: $cosine)")
   }
 }

@@ -125,6 +125,16 @@ class ServiceSpec extends SparkSpec {
     assert(pages == all.take(pages.length))
   }
 
+  test("T3: searchPage refuses page < 0 and pageSize < 1, naming the argument") {
+    val svc = new QueryService(view)
+    for ((page, size, arg) <- Seq((-1, 10, "page"), (-2, 10, "page"), (0, 0, "pageSize"),
+        (1, -3, "pageSize"))) {
+      val e = intercept[IllegalArgumentException](svc.searchPage(spark, "pais libre", page, size))
+      assert(e.getMessage.contains(s"$arg >= ") && e.getMessage.contains(s"$arg = "), e.getMessage)
+    }
+    assert(svc.searchPage(spark, "pais libre", 0, 1).length == 1)
+  }
+
   test("S12: pin caches query-side tables without changing results") {
     val dir = graft.SparkSpec.tmpDir("svc-pin")
     IndexStore.buildAndSave(spark, Fixtures.synthTurns(spark, 80), dir)

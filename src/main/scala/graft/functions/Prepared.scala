@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, In, LeafExpression, Literal, Predicate, TernaryExpression, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, In, LeafExpression, Literal, Predicate, TernaryExpression, Unevaluable}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.DataType
 
@@ -29,17 +29,36 @@ object Slot {
   def in(c: Column, name: String, elem: DataType): Column =
     GraftBridge.column(In(GraftBridge.expression(c), Seq(Slot(name, elem))))
 
-  /** `plan` with every slot replaced by its value in `values`, as a
-    * literal of the slot's type: a literal list for a slot under an `In`,
-    * one literal otherwise. Maps, arrays and structs are referenced from
-    * generated code rather than written into it, so a query that binds new
-    * values of those types compiles nothing new. */
-  def bind(plan: LogicalPlan, values: Map[String, Any]): LogicalPlan =
-    plan.transformAllExpressions {
-      case In(v, Seq(Slot(n, t))) =>
-        In(v, values(n).asInstanceOf[Iterable[Any]].iterator.map(Literal.create(_, t)).toSeq)
-      case Slot(n, t) => Literal.create(values(n), t)
+  /** `plan`'s own nodes — those above its [[Table]]s — bound for one
+    * query: every slot replaced by its value in `values`, as a literal of
+    * the slot's type (a literal list for a slot under an `In`, one literal
+    * otherwise), then `node` applied to each. The tables are unwrapped and
+    * their plans left as they are: a limit or any other node in the
+    * history a table was built from is never a query's to change, and the
+    * cached data that plan stands for still matches it. Maps, arrays and
+    * structs are referenced from generated code rather than written into
+    * it, so a query that binds new values of those types compiles nothing
+    * new. */
+  def bind(plan: LogicalPlan, values: Map[String, Any])(node: LogicalPlan => LogicalPlan): LogicalPlan =
+    plan match {
+      case Table(t) => t
+      case p => node(p.mapChildren(bind(_, values)(node)).transformExpressions {
+        case In(v, Seq(Slot(n, t))) =>
+          In(v, values(n).asInstanceOf[Iterable[Any]].iterator.map(Literal.create(_, t)).toSeq)
+        case Slot(n, t) => Literal.create(values(n), t)
+      })
     }
+}
+
+/**
+ * The edge of a prepared plan: a table the plan reads, as its own plan.
+ * [[Slot.bind]] binds only the nodes above the tables and unwraps them;
+ * a plan is bound before it is optimized or run, so no other rule sees
+ * this node.
+ */
+case class Table(child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override protected def withNewChildInternal(c: LogicalPlan): Table = copy(c)
 }
 
 /**

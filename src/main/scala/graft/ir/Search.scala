@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Log
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.{DecodeBlock, OverlapsAny, Slot}
+import graft.functions.{DecodeBlock, OverlapsAny, Slot, Table}
 
 sealed trait QueryMode
 case object Or extends QueryMode  // disjunctive union-accumulate (reference serving path)
@@ -89,24 +89,28 @@ class Searcher(index: IndexView) extends Serializable {
     * serving session, else the session its tables belong to. */
   @transient private lazy val session: SparkSession =
     index.serving.getOrElse(index.postings.sparkSession)
-  @transient private lazy val postings: DataFrame =
-    GraftBridge.ofRows(session, index.postings.queryExecution.analyzed)
-  @transient private lazy val docStats: DataFrame =
-    GraftBridge.ofRows(session, index.docStats.queryExecution.analyzed)
+  @transient private lazy val postings: DataFrame = table(index.postings)
+  @transient private lazy val docStats: DataFrame = table(index.docStats)
+
+  /** One of the view's tables as a prepared plan reads it: a [[Table]]. */
+  private def table(ds: Dataset[_]): DataFrame =
+    GraftBridge.ofRows(session, Table(ds.queryExecution.analyzed))
 
   /** The analyzed plan of each query class, built on first use. */
   @transient private lazy val plans = new ConcurrentHashMap[String, LogicalPlan]()
 
   /** Query class `key`'s plan, built by `build` on its first query, with
-    * one query's data bound: `slots` by name, and `k` as every limit and
+    * one query's data bound into the Searcher's own nodes, those above the
+    * view's tables: `slots` by name, and `k` as every limit and
     * `collect_top_k` size. Analysis of the bound plan revisits only the
     * nodes that binding replaced. */
   private def run(key: String, k: Int, slots: Map[String, Any])(build: => DataFrame): DataFrame = {
     val plan = plans.computeIfAbsent(key, _ => build.queryExecution.analyzed)
-    GraftBridge.ofRows(session, Slot.bind(plan, slots).transformDown {
+    GraftBridge.ofRows(session, Slot.bind(plan, slots) {
       case GlobalLimit(_, c) => GlobalLimit(Literal(k), c)
       case LocalLimit(_, c) => LocalLimit(Literal(k), c)
-    }.transformAllExpressions { case t: CollectTopK => t.copy(num = k) })
+      case p => p.transformExpressions { case t: CollectTopK => t.copy(num = k) }
+    })
   }
 
   /** Slot types: per term_id, the (query, w, ‖q‖, |q|) of each query that
@@ -200,8 +204,7 @@ class Searcher(index: IndexView) extends Serializable {
       case None =>
         import session.implicits._
         run("dict", 0, Map("terms" -> freq.keys.toSeq))(
-          GraftBridge.ofRows(session, index.termDict.queryExecution.analyzed)
-            .filter(Slot.in(col("term"), "terms", StringType)))
+          table(index.termDict).filter(Slot.in(col("term"), "terms", StringType)))
           .as[TermStat].collect().toSeq
     }
     if (rows.isEmpty) return Seq.empty

@@ -4,6 +4,9 @@ import java.sql.Timestamp
 import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.IntegerLiteral
+import org.apache.spark.sql.catalyst.plans.logical.GlobalLimit
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 import graft.SparkSpec
 
@@ -16,7 +19,8 @@ import graft.SparkSpec
  * in every document (df = N, idf = 0) and a query of more than 16 distinct
  * terms. Each result equals the oracle and, bit for bit, the same request
  * served first on a fresh Searcher; 4 threads rebinding at once each get
- * their own rows.
+ * their own rows. Binding reaches only the Searcher's own nodes: a view
+ * built from a limited input serves like one built from the same rows.
  */
 class PreparedPlanSpec extends SparkSpec {
 
@@ -27,9 +31,10 @@ class PreparedPlanSpec extends SparkSpec {
     * document, so that word's df is N. */
   private lazy val corpus =
     Fixtures.synthCorpus(spark, 200).map { case (c, t) => c -> s"$t ubicuo" }
+  private lazy val turns =
+    corpus.map { case (c, t) => Turn(c, 0, "user", t, null, new Timestamp(0L)) }
   private lazy val view = {
     import spark.implicits._
-    val turns = corpus.map { case (c, t) => Turn(c, 0, "user", t, null, new Timestamp(0L)) }
     IndexBuilder.build(spark, turns.toDF(), cfg).pin()
   }
   private lazy val oracle = Oracle.index(corpus, cfg)
@@ -141,5 +146,32 @@ class PreparedPlanSpec extends SparkSpec {
         assert(got == Seq.fill(3)(want(t)).flatten, s"thread $t got another query's rows")
       }
     } finally pool.shutdown()
+  }
+
+  test("a view built from a limited input serves like one built from the same rows") {
+    import spark.implicits._
+    val n = 120
+    val limited = IndexBuilder.build(spark, turns.toDF().limit(n), cfg).pin()
+    val same = IndexBuilder.build(spark, turns.take(n).toDF(), cfg).pin()
+    // above the driver-dict guard the vocabulary lookup is a plan of its own
+    def dictScan(v: IndexView) = v.copy(meta = v.meta.copy(terms = IndexView.DriverDictLimit + 1))
+    try {
+      val (s, want, sd, wantD) = (new Searcher(limited), new Searcher(same),
+        new Searcher(dictScan(limited)), new Searcher(dictScan(same)))
+      for (r <- requests.take(30)) {
+        assert(serve(s, r) == serve(want, r), s"$r: limited-input view")
+        assert(serve(sd, r) == serve(wantD, r), s"$r: limited-input view, dictionary scan")
+      }
+      val q = s.search(spark, requests.collectFirst { case Single(q, _, _) if q.nonEmpty => q }.get,
+        K, Or, Bm25)
+      assert(q.collect().nonEmpty)
+      assert(q.queryExecution.analyzed.exists {
+        case GlobalLimit(IntegerLiteral(`n`), _) => true
+        case _ => false
+      }, "the input's own limit is gone from the bound plan")
+      val scans = q.queryExecution.executedPlan.collect { case t: InMemoryTableScanExec => t }
+      assert(scans.exists(_.relation.output.exists(_.name == "doc_ids")), "postings not read from the cache")
+      assert(scans.exists(_.relation.output.exists(_.name == "doc_len")), "doc_stats not read from the cache")
+    } finally { limited.unpin(); same.unpin() }
   }
 }

@@ -307,33 +307,37 @@ object Probe {
   // ---------------------------------------------------------------- latency
 
   /** Bench's latency section alone: 13 bot queries × 4 rounds of OR-BM25,
-    * WAND and AND top-10 (wall percentiles, the p50 of driver time = wall −
-    * Σjob, codegen compiles per query), the 13-query batch with its prune
-    * A/B, and 4 concurrent clients through one uncached QueryService. */
+    * WAND, WAND with pruning forced (wand0) and AND top-10 (wall
+    * percentiles, the p50 of driver time = wall − Σjob, codegen compiles and
+    * Spark jobs per query), the 13-query batch with its prune A/B, and 4
+    * concurrent clients through one uncached QueryService. */
   def latency(spark: SparkSession, nConvs: Int): Unit = {
     val view = served(spark, IndexBuilder.build(spark, Synth.turns(spark, nConvs)))
     val s = new Searcher(view)
     def sec(body: => Any): Double = time(body)._2
     s.searchBm25Wand(spark, "pais libre", 10).count()
     val modes = Seq[(String, String => DataFrame)]("exact" -> (s.search(spark, _, 10, Or, Bm25)),
-      "wand" -> (s.searchBm25Wand(spark, _, 10)), "and" -> (s.search(spark, _, 10, And, Bm25)))
+      "wand" -> (s.searchBm25Wand(spark, _, 10)), "and" -> (s.search(spark, _, 10, And, Bm25)),
+      "wand0" -> (s.searchBm25Wand(spark, _, 10, exactCutover = 0L)))
     // the classes interleave per query, in an order rotated each round, so
     // no class is timed first (and slow) for its position alone. Each run
-    // keeps its wall, its driver time (wall − Σjob) and its codegen compiles
+    // keeps its wall, its driver time (wall − Σjob), its codegen compiles
+    // and its job count
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val timed = (0 until 4).flatMap(round => BotQueries.flatMap(q =>
       modes.indices.map(i => modes((i + round) % modes.size))
         .map { case (mode, run) =>
           val c0 = compiles
           val (_, wall, js) = profile(spark)(run(q).count())
-          mode -> (wall, wall - total(js).ms / 1e3, compiles - c0)
+          mode -> (wall, wall - total(js).ms / 1e3, compiles - c0, js.length)
         }))
     val percentiles = modes.map { case (mode, _) =>
       val runs = timed.collect { case (`mode`, r) => r }
       def pct(xs: Seq[Double], p: Double) = xs.sorted.apply(math.min(xs.length - 1, (p * xs.length).toInt))
       val walls = runs.map(_._1)
       f"$mode p50=${pct(walls, 0.5)}%.3f p95=${pct(walls, 0.95)}%.3f " +
-        f"driver_p50=${pct(runs.map(_._2), 0.5)}%.3f compiles/q=${runs.map(_._3).sum.toDouble / runs.length}%.2f"
+        f"driver_p50=${pct(runs.map(_._2), 0.5)}%.3f compiles/q=${runs.map(_._3).sum.toDouble / runs.length}%.2f " +
+        f"jobs/q=${runs.map(_._4).sum.toDouble / runs.length}%.2f"
     }
     val bq = BotQueries.zipWithIndex.map { case (q, i) => (s"q$i", q) }
     def batch(cutover: Long, n: Int) =

@@ -150,13 +150,6 @@ class QueryService(
   def queryMetrics(spark: SparkSession): DataFrame =
     metricsDf(spark, metricsLock.synchronized(metrics.toSeq))
 
-  /** S13 durable sink: append the metrics gathered since the last flush to
-    * the `query_metrics` table at `path` — rows survive JVM exit and
-    * accumulate across restarts, like the reference's queries.csv
-    * (Controller/StatsHandler.java:61-99). Flushed rows are dropped from
-    * the in-memory buffer (it would otherwise grow for the life of the
-    * server); `queryMetrics` shows the unflushed tail. Returns rows
-    * flushed. */
   /** Serializes flushMetrics against itself (ADVICE r4: two concurrent
     * flushes would double-write the overlapping snapshot prefix, and the
     * second remove(0, n) would drop never-flushed rows appended after its
@@ -164,6 +157,13 @@ class QueryService(
     * flush's parquet write. */
   private val flushLock = new Object
 
+  /** S13 durable sink: append the metrics gathered since the last flush to
+    * the `query_metrics` table at `path` — rows survive JVM exit and
+    * accumulate across restarts, like the reference's queries.csv
+    * (Controller/StatsHandler.java:61-99). Flushed rows are dropped from
+    * the in-memory buffer (it would otherwise grow for the life of the
+    * server); `queryMetrics` shows the unflushed tail. Returns rows
+    * flushed. */
   def flushMetrics(spark: SparkSession, path: String): Long = flushLock.synchronized {
     // snapshot under the lock, write OUTSIDE it, then drop exactly the
     // flushed prefix — a failed write loses nothing, and rows logged by

@@ -135,6 +135,12 @@ class Searcher(index: IndexView) extends Serializable {
     w.fold(num)(_ * num) / (tf + lit(k1) * (lit(1 - b) + lit(b / avgdl) * dl))
   }
 
+  /** [[bm25]]'s driver twin, in the Column's operation order (w = 1: the
+    * bare saturation), so a bound computed here ties and compares `==` with
+    * the plans' bit for bit. */
+  private def bm25(tf: Int, dl: Long, w: Double): Double =
+    w * (tf * (k1 + 1)) / (tf + k1 * ((1 - b) + (b / avgdl) * dl))
+
   /** Joins the doc_stats columns `cols` onto `df` by doc_id. On a pinned
     * view the merge hint keeps the stats side (doc_id-partitioned and
     * sorted like the decode's doc_id exchange, in as many partitions as
@@ -241,58 +247,58 @@ class Searcher(index: IndexView) extends Serializable {
 
   /**
    * The k most promising blocks' (first_doc_id, last_doc_id) intervals per
-   * term — the WAND θ phase's "where do the big scores live" metadata
-   * lookup, served from the view's driver-resident cache (VERDICT r5 #4:
-   * these are index-immutable between appends, so paying a Spark job per
-   * query for them was the θ path's residual cost). Blocks are ranked by
+   * term — the WAND θ phase's "where do the big scores live" lookup, read
+   * from the view's block directory with no Spark job. Blocks are ranked by
    * the idf-free BM25 saturation bound (bm25_idf is a positive per-term
    * constant, so the per-term ranking is identical to the full block bound)
-   * with a deterministic (bound desc, first_doc_id asc) tie-break: the k
-   * smallest (−bound, first_doc_id, last_doc_id) per term by
-   * `collect_top_k`. Missing terms are computed in ONE metadata-only job.
-   * Returned arrays are sorted by first_doc_id.
+   * with a deterministic (bound desc, first_doc_id asc) tie-break: a stable
+   * sort of the term's blocks, which the directory keeps in first_doc_id
+   * order. Above the directory's guard, the k smallest (−bound,
+   * first_doc_id, last_doc_id) per term by `collect_top_k`, in ONE
+   * metadata-only job. Returned arrays are sorted by first_doc_id.
    */
   private[graft] def topBlockIntervals(
       termIds: Seq[Long], k: Int): Map[Long, Array[(Long, Long)]] = {
-    // ONE read per term, and the result is built from what was read plus
-    // what was computed — never re-read after the puts: a put at the
-    // cache's cap (or a concurrent caller's) clears the whole cache
-    val cached = termIds.distinct.map(t => t -> index.thetaIntervalCache.get((t, k)))
-    val missing = cached.collect { case (t, null) => t }
-    if (missing.isEmpty) return cached.toMap
-    val got: Map[Long, Array[(Long, Long)]] = run("intervals", k, Map("terms" -> missing))(
-      postings.filter(keep(AllBlocks))
-        .groupBy("term_id")
-        .agg(GraftBridge.collectTopK(struct(-bm25(col("max_tf"), col("min_dl")),
-          col("first_doc_id"), col("last_doc_id")), 1)))
-      .collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Row](1).map(b => (b.getLong(1), b.getLong(2))).toArray.sorted)
-      .toMap
-    val fresh = missing.map(t => t -> got.getOrElse(t, Array.empty[(Long, Long)]))
-    fresh.foreach { case (t, v) => index.thetaCachePutBounded((t, k), v) }
-    cached.filter(_._2 != null).toMap ++ fresh
+    val got: Map[Long, Seq[(Long, Long)]] = index.wandTermBounds match {
+      case Some(dir) => termIds.map(t => t -> dir.blocks(t)
+        .sortBy(i => -bm25(dir.maxTf(i), dir.minDl(i), 1.0))(Ordering.Double.TotalOrdering)
+        .take(k).map(i => (dir.first(i), dir.last(i)))).toMap
+      case None => run("intervals", k, Map("terms" -> termIds.distinct))(
+        postings.filter(keep(AllBlocks)).groupBy("term_id")
+          .agg(GraftBridge.collectTopK(struct(-bm25(col("max_tf"), col("min_dl")),
+            col("first_doc_id"), col("last_doc_id")), 1)))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Row](1).map(b => (b.getLong(1), b.getLong(2)))).toMap
+    }
+    termIds.map(t => t -> got.getOrElse(t, Nil).toArray.sorted).toMap
+  }
+
+  /** The docId intervals of term `t`'s blocks: the view's block directory,
+    * else a metadata-only job. */
+  private[graft] def blockIntervals(t: Long): Seq[(Long, Long)] = index.wandTermBounds match {
+    case Some(dir) => dir.blocks(t).map(i => (dir.first(i), dir.last(i)))
+    case None => run("rare", 0, Map("terms" -> Seq(t)))(
+      postings.filter(keep(AllBlocks)).select("first_doc_id", "last_doc_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
   }
 
   /**
    * J4 block-skip for AND queries — the Spark form of the reference's √df
-   * skip-pointer leapfrog (modulos/Postings.py:376-411): collect the rarest
+   * skip-pointer leapfrog (modulos/Postings.py:376-411): read the rarest
    * term's block ranges (disjoint, docId-ascending: salt ranges are ordered
-   * and append batches start past the old max), then decode other terms'
-   * blocks only where [first_doc_id, last_doc_id] overlaps one of them. Any
-   * doc in a skipped block is absent from the rare term's postings, so it
-   * can never reach match-count == |q| — pruning is lossless. A
-   * stopword-grade term AND a rare term now decodes O(df_rare/BlockSize)
-   * hot blocks instead of the hot term's entire posting list.
+   * and append batches start past the old max) from the view's block
+   * directory, then decode other terms' blocks only where [first_doc_id,
+   * last_doc_id] overlaps one of them. Any doc in a skipped block is absent
+   * from the rare term's postings, so it can never reach match-count == |q|
+   * — pruning is lossless. A stopword-grade term AND a rare term now decodes
+   * O(df_rare/BlockSize) hot blocks instead of the hot term's entire posting
+   * list.
    */
   private def andSkip(qts: Seq[QueryTerm]): Option[Blocks] = {
     val rare = qts.minBy(q => (q.df, q.termId))
     if (rare.df / Codec.BlockSize + 1 > AndSkipMaxBlocks) return None
-    val intervals = run("rare", 0, Map("terms" -> Seq(rare.termId)))(
-      postings.filter(keep(AllBlocks)).select("first_doc_id", "last_doc_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val intervals = blockIntervals(rare.termId)
     if (intervals.isEmpty) return None // dict/postings drift: fall back
-    val packed = OverlapsAny.pack(intervals.toSeq)
+    val packed = OverlapsAny.pack(intervals)
     Some(Overlapping(qts.map(t =>
       t.termId -> (if (t.termId == rare.termId) Everywhere else packed)).toMap))
   }
@@ -514,6 +520,20 @@ class Searcher(index: IndexView) extends Serializable {
     }
   }
 
+  /** Each term's global max BM25 doc weight (gmax): the max over its blocks
+    * of the block bound idf25·s(max_tf, min_dl), for the terms of `idf`
+    * that have blocks. From the view's block directory with no Spark job,
+    * else a metadata-only aggregation. */
+  private[graft] def termGmax(idf: Map[Long, Double]): Map[Long, Double] =
+    index.wandTermBounds match {
+      case Some(dir) => idf.flatMap { case (t, w) => dir.blocks(t)
+        .map(i => bm25(dir.maxTf(i), dir.minDl(i), w)).reduceOption[Double](math.max).map(t -> _) }
+      case None => run("gmax", 0, Map("terms" -> idf.keys.toSeq, "idf" -> idf))(
+        postings.filter(keep(AllBlocks))
+          .groupBy("term_id").agg(max(blockBound(Slot.column("idf", PerTerm))).as("m")))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    }
+
   /**
    * Block-max pruning for N queries sharing one decode (Ding & Suel,
    * SIGIR 2011) — the one pruning plan: batch serving runs it on the batch,
@@ -523,10 +543,10 @@ class Searcher(index: IndexView) extends Serializable {
    *     living in t*_q's top-k blocks, t*_q being q's term with the highest
    *     qtf·gmax (ties → larger term_id). A t*-only θ can never clear the
    *     other terms' global-max slack in the prune condition, so multi-term
-   *     queries pruned 0% with it. Computed in at most two tiny jobs
-   *     detailed at the implementation below; a −1e-9 margin absorbs the
-   *     fixed-point accumulation grid's ≤1e-15 quantization, so θ stays a
-   *     sound lower bound on q's k-th best total.
+   *     queries pruned 0% with it. Computed in one tiny job (two above
+   *     the block directory's guard) detailed at the implementation below;
+   *     a −1e-9 margin absorbs the fixed-point accumulation grid's ≤1e-15
+   *     quantization, so θ stays a sound lower bound on q's k-th best total.
    *  2. A block b of term t survives iff SOME query wants it:
    *     ∃ q∋t: qtf·bound_t(b) + Σ_{t'≠t} qtf·gmax(t') ≥ θ_q
    *     ⇔ bound_t(b) ≥ min_{q∋t} (θ_q − sumGmax_q + qtf·gmax_t)/qtf —
@@ -552,25 +572,7 @@ class Searcher(index: IndexView) extends Serializable {
     val allTerms: Map[Long, QueryTerm] = live.flatMap(_._2).map(t => t.termId -> t).toMap
     val idf = allTerms.map { case (tid, t) => tid -> t.bm25Idf }
 
-    // per-term global max BM25 doc weight: ZERO jobs from the view's
-    // driver-resident term-level block bounds (sound: s is increasing in tf,
-    // decreasing in dl, so pairing the term-wide max_tf with the term-wide
-    // min_dl only raises the bound); a metadata agg above the dict guard
-    val gmax: Map[Long, Double] = index.wandTermBounds match {
-      case Some(tb) =>
-        def sat(tf: Double, dl: Double): Double = // bm25's driver twin
-          (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
-        allTerms.map { case (tid, t) =>
-          tid -> tb.get(tid).fold(0.0) { case (mt, md) =>
-            t.bm25Idf * sat(mt.toDouble, md.toDouble)
-          }
-        }
-      case None =>
-        run("gmax", 0, Map("terms" -> allTerms.keys.toSeq, "idf" -> idf))(
-          postings.filter(keep(AllBlocks))
-            .groupBy("term_id").agg(max(blockBound(Slot.column("idf", PerTerm))).as("m")))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    }
+    val gmax = termGmax(idf)
     case class QInfo(qid: String, ts: Seq[QueryTerm], tStar: QueryTerm, sumGmax: Double)
     val infos = live.map { case (qid, ts) =>
       QInfo(qid, ts,
@@ -579,15 +581,14 @@ class Searcher(index: IndexView) extends Serializable {
     }
 
     // θ_q = k-th largest EXACT FULL q-score among the docs in the t* terms'
-    // top-k blocks. At most two tiny jobs: (1) metadata-only top-k block
-    // intervals per t* term, served from the view's (term, k) interval
-    // cache — zero jobs once the terms are warm (VERDICT r5 #4); (2) the
-    // scoring plan over every query term's blocks overlapping the merged
-    // intervals, and the last of its heap's k values per query (fewer than
-    // k values: no k-th score, θ = 0). Any doc inside
-    // the intervals has ALL its postings in overlapping blocks, so its
-    // score is complete; docs straddling the edges score partially, which
-    // only LOWERS θ.
+    // top-k blocks. One tiny job, two above the directory's guard: (1) the
+    // top-k block intervals per t* term, read from the view's block
+    // directory (a metadata-only job above the guard); (2) the scoring plan
+    // over every query term's blocks overlapping the merged intervals, and
+    // the last of its heap's k values per query (fewer than k values: no
+    // k-th score, θ = 0). Any doc inside the intervals has ALL its postings
+    // in overlapping blocks, so its score is complete; docs straddling the
+    // edges score partially, which only LOWERS θ.
     val intervals = topBlockIntervals(infos.map(_.tStar.termId), k).values.flatten.toSeq
     if (intervals.isEmpty) return None
     val packed = OverlapsAny.pack(intervals)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions.{col, lit, row_number}
 
 import graft.SparkSpec
 
-/** WAND θ's block ranking (`Searcher.topBlockIntervals`, a bounded
-  * `collect_top_k` per term) against a `row_number` window over the same
+/** WAND θ's block ranking (`Searcher.topBlockIntervals`, read from the
+  * view's block directory) against a `row_number` window over the same
   * block bound: per term, the k blocks of largest idf-free BM25 bound, ties
   * broken by first_doc_id, as (first_doc_id, last_doc_id) sorted by start. */
 class BlockIntervalSpec extends SparkSpec {
@@ -43,14 +43,13 @@ class BlockIntervalSpec extends SparkSpec {
         .collect()
         .groupBy(_.getLong(0))
         .map { case (t, rs) => t -> rs.map(r => (r.getLong(1), r.getLong(2))).sorted }
-      view.thetaIntervalCache.clear() // cold: every term computed in the one job
       val got = s.topBlockIntervals(termIds, k)
       assert(got.keySet == termIds.toSet, s"k=$k: terms")
       for (t <- termIds) {
         assert(got(t).toSeq == want.getOrElse(t, Array.empty[(Long, Long)]).toSeq,
           s"k=$k term $t: intervals")
       }
-      // warm: the cached answer is the same
+      // repeat: the same answer
       val warm = s.topBlockIntervals(termIds, k)
       assert(termIds.forall(t => warm(t).toSeq == got(t).toSeq), s"k=$k: warm cache")
     }

@@ -153,8 +153,10 @@ class PreparedPlanSpec extends SparkSpec {
     val n = 120
     val limited = IndexBuilder.build(spark, turns.toDF().limit(n), cfg).pin()
     val same = IndexBuilder.build(spark, turns.take(n).toDF(), cfg).pin()
-    // above the driver-dict guard the vocabulary lookup is a plan of its own
-    def dictScan(v: IndexView) = v.copy(meta = v.meta.copy(terms = IndexView.DriverDictLimit + 1))
+    // above the driver-dict guard the vocabulary lookup is a plan of its
+    // own, and so are the block directory's answers
+    def dictScan(v: IndexView) = v.copy(meta = v.meta.copy(
+      terms = IndexView.DriverDictLimit + 1, blocks = IndexView.DriverDictLimit + 1))
     try {
       val (s, want, sd, wantD) = (new Searcher(limited), new Searcher(same),
         new Searcher(dictScan(limited)), new Searcher(dictScan(same)))

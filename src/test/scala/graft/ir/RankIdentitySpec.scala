@@ -193,27 +193,35 @@ class RankIdentitySpec extends SparkSpec {
 
   test("above the driver-dict guard, lookup/WAND fall back with identical results") {
     val view = IndexBuilder.build(spark, Fixtures.tp2Turns(spark))
-    // forcing meta.terms over the limit disables termLookup + wandTermBounds
-    val big = view.copy(meta = view.meta.copy(terms = IndexView.DriverDictLimit + 1))
+    // meta.terms over the limit disables termLookup, meta.blocks the block
+    // directory (wandTermBounds); the second view keeps its term lookup
+    val over = IndexView.DriverDictLimit + 1
+    val big = view.copy(meta = view.meta.copy(terms = over, blocks = over))
+    val manyBlocks = view.copy(meta = view.meta.copy(blocks = over))
     assert(big.termLookup.isEmpty && big.wandTermBounds.isEmpty)
+    assert(manyBlocks.termLookup.isDefined && manyBlocks.wandTermBounds.isEmpty)
     assert(view.termLookup.isDefined && view.wandTermBounds.isDefined)
     val a = new Searcher(view)
-    val b = new Searcher(big)
-    Fixtures.referenceQueries.distinct.foreach { q =>
-      assertIdentical(hits(b.search(spark, q, K, Or, Bm25)),
-        hits(a.search(spark, q, K, Or, Bm25)), s"fallback OR '$q'")
-      assertIdentical(hits(b.searchBm25Wand(spark, q, K, exactCutover = 0L)),
-        hits(a.searchBm25Wand(spark, q, K, exactCutover = 0L)), s"fallback WAND '$q'")
-    }
-    // the batch prune takes the same fallback: forced pruning on the big
-    // view still serves every query exactly as single-query search
     val qs = Fixtures.referenceQueries.distinct.zipWithIndex.map { case (q, i) => s"q$i" -> q }
-    val batch = b.searchBatch(spark, qs, K, Bm25, 0L).collect()
-      .groupBy(_.getString(0))
-    qs.foreach { case (qid, q) =>
-      val rows = batch.getOrElse(qid, Array.empty).sortBy(_.getInt(4))
-        .map(r => (r.getLong(1), r.getDouble(3))).toSeq
-      assertIdentical(rows, hits(a.search(spark, q, K, Or, Bm25)), s"fallback batch '$q'")
+    for ((name, forced) <- Seq("terms+blocks" -> big, "blocks" -> manyBlocks)) {
+      val b = new Searcher(forced)
+      qs.foreach { case (_, q) =>
+        assertIdentical(hits(b.search(spark, q, K, Or, Bm25)),
+          hits(a.search(spark, q, K, Or, Bm25)), s"$name: fallback OR '$q'")
+        assertIdentical(hits(b.search(spark, q, K, And, Bm25)),
+          hits(a.search(spark, q, K, And, Bm25)), s"$name: fallback AND '$q'")
+        assertIdentical(hits(b.searchBm25Wand(spark, q, K, exactCutover = 0L)),
+          hits(a.searchBm25Wand(spark, q, K, exactCutover = 0L)), s"$name: fallback WAND '$q'")
+      }
+      // the batch prune takes the same fallback: forced pruning on the
+      // forced view still serves every query exactly as single-query search
+      val batch = b.searchBatch(spark, qs, K, Bm25, 0L).collect()
+        .groupBy(_.getString(0))
+      qs.foreach { case (qid, q) =>
+        val rows = batch.getOrElse(qid, Array.empty).sortBy(_.getInt(4))
+          .map(r => (r.getLong(1), r.getDouble(3))).toSeq
+        assertIdentical(rows, hits(a.search(spark, q, K, Or, Bm25)), s"$name: fallback batch '$q'")
+      }
     }
   }
 

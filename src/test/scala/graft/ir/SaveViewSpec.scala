@@ -80,19 +80,23 @@ class SaveViewSpec extends SparkSpec {
     all.unpersist(); ()
   }
 
-  test("wandPlan's θ block intervals come from the per-view cache on repeat") {
+  test("wandPlan's θ block intervals run no job, on the first call or on repeat") {
     val view = IndexBuilder.build(spark, Synth.skewedTurns(spark, 2000), BuildConfig())
     val s = new Searcher(view)
     val q = "pais cultura produccion"
-    assert(view.thetaIntervalCache.isEmpty)
-    val r1 = s.searchBm25Wand(spark, q, 5, exactCutover = 0L).collect().toSeq
-    assert(!view.thetaIntervalCache.isEmpty, "first WAND query populates the cache")
-    val sizeAfterFirst = view.thetaIntervalCache.size()
-    val r2 = s.searchBm25Wand(spark, q, 5, exactCutover = 0L).collect().toSeq
-    assert(r1 == r2, "cached intervals give identical results")
-    assert(view.thetaIntervalCache.size() == sizeAfterFirst,
-      "repeat query adds no cache entries")
-    // cached pruning stays exact
+    // the driver lookups are built before any query is counted, as a
+    // serving set-up builds them
+    assert(view.termLookup.isDefined && view.wandTermBounds.isDefined)
+    def wand() = graft.Probe.profile(spark)(
+      s.searchBm25Wand(spark, q, 5, exactCutover = 0L).collect().toSeq)
+    val (r1, _, first) = wand()
+    val (r2, _, repeat) = wand()
+    assert(r1 == r2, "repeat query gives identical results")
+    assert(first.size == repeat.size, s"first call ran ${first.size} jobs, its repeat ${repeat.size}")
+    val tStars = s.queryTerms(spark, q).map(_.termId)
+    val (_, _, intervalJobs) = graft.Probe.profile(spark)(s.topBlockIntervals(tStars, 5))
+    assert(intervalJobs.isEmpty, s"θ's block intervals ran ${intervalJobs.size} jobs")
+    // pruning stays exact
     val exact = s.search(spark, q, 5, Or, Bm25).collect().toSeq
     assert(r2.map(r => (r.getLong(0), math.floor(r.getDouble(2) * 1e9 + 0.5))) ==
       exact.map(r => (r.getLong(0), math.floor(r.getDouble(2) * 1e9 + 0.5))))
@@ -107,20 +111,5 @@ class SaveViewSpec extends SparkSpec {
       .filter(col("term_id").isin(live.flatMap(_._2.map(_.termId)).distinct: _*))
     val batchSurv = s.survivorBlocks(spark, live, 5)
     assert(batchSurv.exists(_.count() < batchCand.count()), "batch prune pruned no block")
-  }
-
-  test("topBlockIntervals never returns null when its puts cross the cache cap") {
-    val view = IndexBuilder.build(spark, Synth.skewedTurns(spark, 500), BuildConfig())
-    val s = new Searcher(view)
-    val Seq(t1, t2) = view.termDict.collect().map(_.term_id).sorted.take(2).toSeq
-    // cap − 1 entries: the first fresh put reaches the cap, the second
-    // clears the cache — the first term's entry must not be read back
-    val none = Array.empty[(Long, Long)]
-    (1 until IndexView.ThetaCacheMaxEntries).foreach(i =>
-      view.thetaIntervalCache.put((-i.toLong, 5), none))
-    val got = s.topBlockIntervals(Seq(t1, t2), 5)
-    assert(got.keySet == Set(t1, t2))
-    assert(got.values.forall(_ != null), s"null intervals: $got")
-    assert(got.values.forall(_.nonEmpty))
   }
 }

@@ -165,7 +165,7 @@ object BlockDirectory {
 object IndexView {
   /** Above this many dictionary entries the driver-side term lookup is
     * skipped (≈100 B/entry → ~400 MB at the limit), and above this many
-    * blocks the block directory (32 B/block → ~128 MB); the query side then
+    * blocks the block directory (28 B/block → ~112 MB); the query side then
     * uses pushed-filter scans and metadata plans instead. */
   val DriverDictLimit: Long = 4000000L
 

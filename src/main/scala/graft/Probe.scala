@@ -322,22 +322,24 @@ object Probe {
     // the classes interleave per query, in an order rotated each round, so
     // no class is timed first (and slow) for its position alone. Each run
     // keeps its wall, its driver time (wall − Σjob), its codegen compiles
-    // and its job count
+    // and the jobs it ran, whose stages and tasks show the serving layout
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val timed = (0 until 4).flatMap(round => BotQueries.flatMap(q =>
       modes.indices.map(i => modes((i + round) % modes.size))
         .map { case (mode, run) =>
           val c0 = compiles
           val (_, wall, js) = profile(spark)(run(q).count())
-          mode -> (wall, wall - total(js).ms / 1e3, compiles - c0, js.length)
+          mode -> (wall, wall - total(js).ms / 1e3, compiles - c0, js.length, total(js))
         }))
     val percentiles = modes.map { case (mode, _) =>
       val runs = timed.collect { case (`mode`, r) => r }
       def pct(xs: Seq[Double], p: Double) = xs.sorted.apply(math.min(xs.length - 1, (p * xs.length).toInt))
+      def perQuery(x: Seq[Double]) = x.sum / runs.length
       val walls = runs.map(_._1)
       f"$mode p50=${pct(walls, 0.5)}%.3f p95=${pct(walls, 0.95)}%.3f " +
-        f"driver_p50=${pct(runs.map(_._2), 0.5)}%.3f compiles/q=${runs.map(_._3).sum.toDouble / runs.length}%.2f " +
-        f"jobs/q=${runs.map(_._4).sum.toDouble / runs.length}%.2f"
+        f"driver_p50=${pct(runs.map(_._2), 0.5)}%.3f compiles/q=${perQuery(runs.map(_._3.toDouble))}%.2f " +
+        f"jobs/q=${perQuery(runs.map(_._4.toDouble))}%.2f stages/q=${perQuery(runs.map(_._5.stages.toDouble))}%.2f " +
+        f"tasks/q=${perQuery(runs.map(_._5.tasks.toDouble))}%.2f"
     }
     val bq = BotQueries.zipWithIndex.map { case (q, i) => (s"q$i", q) }
     def batch(cutover: Long, n: Int) =

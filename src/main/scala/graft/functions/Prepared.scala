@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, In, LeafExpression, Literal, Predicate, TernaryExpression, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, In, LeafExpression, Literal, Or, Predicate, TernaryExpression, Unevaluable}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -44,10 +44,26 @@ object Slot {
       case Table(t) => t
       case p => node(p.mapChildren(bind(_, values)(node)).transformExpressions {
         case In(v, Seq(Slot(n, t))) =>
-          In(v, values(n).asInstanceOf[Iterable[Any]].iterator.map(Literal.create(_, t)).toSeq)
+          anyIn(v, values(n).asInstanceOf[Iterable[Any]].iterator.map(Literal.create(_, t)).toSeq)
         case Slot(n, t) => Literal.create(values(n), t)
       })
     }
+
+  /** The most values one bound `In` holds. A cached relation's scan turns
+    * an `In` into a chain of one `Or` per value for its batch statistics,
+    * and a chain ~1,500 deep overflows the stack when the task is
+    * serialized. */
+  private val InChunk = 512
+
+  /** `v IN lits`: one `In` up to [[InChunk]] values, else a balanced `Or`
+    * of `In`s of at most that many, which the cached scan still prunes on
+    * and whose depth grows with the log of the list. */
+  private def anyIn(v: Expression, lits: Seq[Expression]): Expression = {
+    def balanced(ins: Seq[Expression]): Expression =
+      if (ins.length == 1) ins.head
+      else ins.splitAt(ins.length / 2) match { case (l, r) => Or(balanced(l), balanced(r)) }
+    if (lits.length <= InChunk) In(v, lits) else balanced(lits.grouped(InChunk).map(In(v, _)).toSeq)
+  }
 }
 
 /**

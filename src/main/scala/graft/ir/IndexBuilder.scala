@@ -79,6 +79,13 @@ final case class IndexView(
     *    sorted, so the scoring join needs no exchange and no sort on the
     *    stats side — doc_stats never moves at query time.
     *
+    * At P = 1, what [[IndexView.servingPartitions]] gives an index under
+    * ~4M postings, both tables sit in one partition, and a single query
+    * runs as one job of one stage and one task with no exchange: the
+    * decode, the stats merge-join, the (query, doc) sum and the top-k all
+    * run in the scan's task. Rows are the same bit for bit as at any other
+    * P (RankIdentitySpec).
+    *
     * Queries on the view are planned and run in its own serving session,
     * a clone of the caller's: AQE off (serving plans are small and
     * fixed-shape, and a stage per exchange is pure scheduling cost), P
@@ -174,14 +181,25 @@ object IndexView {
     * (2× cores, fine for the one-off build) schedules 3 stages × that many
     * tasks for every sub-second query. Size serving partitions so a FULL
     * postings sweep still only sees ~2M postings/task (pruned probes see
-    * far less), floored at 8 for parallelism, capped by the session's
-    * configured shuffle.partitions (a real cluster configures that to its
-    * core count). Serving entrypoints set `spark.sql.shuffle.partitions` to
-    * this BEFORE `pin()`, which lays both pinned tables out in that many
-    * partitions and gives the view's serving session the same count. */
+    * far less), at least 1, capped by the session's configured
+    * shuffle.partitions (a real cluster configures that to its core count).
+    * Serving entrypoints set `spark.sql.shuffle.partitions` to this BEFORE
+    * `pin()`, which lays both pinned tables out in that many partitions and
+    * gives the view's serving session the same count.
+    *
+    * There is no floor above 1: an index under ~4M postings pins into ONE
+    * partition, and a single query on it runs in one task with no exchange
+    * (the decode, the stats merge-join, the (query, doc) sum and the top-k
+    * all in the scan's task), as the reference answers a query in one pass
+    * over its resident index (GPU_server/gpu_cuda.cu:42-84). The old floor
+    * of 8 made the serve workload's 159k-posting index pay 2 stages × 8
+    * tasks and a doc_id shuffle per query; at 2,000 convs OR-BM25 p50 went
+    * 170 → 117 ms, and at 20,000 convs 188 → 132 ms, in a same-JVM A/B
+    * (BENCH/BASELINE.md "One-partition serving layout"). A batch keeps its
+    * width through [[Searcher.searchBatch]]'s respread. */
   def servingPartitions(meta: IndexMeta, spark: org.apache.spark.sql.SparkSession): Int = {
     val cap = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    math.min(cap, math.max(8, (meta.postings / 2000000L).toInt))
+    math.min(cap, math.max(1, (meta.postings / 2000000L).toInt))
   }
 }
 

@@ -46,11 +46,15 @@ private[ir] final case class Reaching(idf: Map[Long, Double], need: Map[Long, Do
  * (block-skipped), WAND (block-max pruned) and batch. A single query is a
  * batch of one; the callers differ in the top-k step (ordered for one
  * query, a heap per query for a batch, whose winners then look up their
- * conv_ids) and a large batch's respread. The decoded postings take the
- * plan's one exchange, on doc_id; the pinned doc_stats merge-joins them
- * without moving; the (query, doc) sum needs no second exchange. This is
- * the Spark-native reshape of the reference's client→broker→server→GPU hop
- * chain (SURVEY.md §3.1).
+ * conv_ids) and a large batch's respread. On a view pinned into one
+ * partition (an index under ~4M postings, [[IndexView.servingPartitions]])
+ * a single query has no exchange at all: the decode, the stats merge-join,
+ * the (query, doc) sum and the top-k run in the scan's one task, as the
+ * reference scores a query in one pass over its resident index. On more
+ * partitions the decoded postings take the plan's one exchange, on doc_id;
+ * the pinned doc_stats merge-joins them without moving; the (query, doc)
+ * sum needs no second exchange. This is the Spark-native reshape of the
+ * reference's client→broker→server→GPU hop chain (SURVEY.md §3.1).
  *
  * Prepared plans: like the reference's server, which loads the index once
  * and answers every query against that state (GpuServerHandler.java:
@@ -145,8 +149,10 @@ class Searcher(index: IndexView) extends Serializable {
     * view the merge hint keeps the stats side (doc_id-partitioned and
     * sorted like the decode's doc_id exchange, in as many partitions as
     * the serving session shuffles into) from moving: no exchange, no sort.
-    * On an unpinned view the hint would shuffle both sides, so Spark
-    * chooses the join. `spread` first re-hashes `df` on doc_id into
+    * Pinned into one partition, both sides are already that one partition,
+    * so the decode needs no exchange either: only a sort by doc_id in the
+    * scan's task. On an unpinned view the hint would shuffle both sides, so
+    * Spark chooses the join. `spread` first re-hashes `df` on doc_id into
     * [[wide]] partitions; the stats then join as a broadcast dimension (a
     * shuffle join past IndexBuilder.BroadcastRowLimit docs), as the two
     * sides no longer share a layout. */
@@ -339,9 +345,10 @@ class Searcher(index: IndexView) extends Serializable {
    *  - BM25: the fixed-point qfix(bm25(tf, doc_len, qtf·idf25)).
    * AND keeps a (query, doc) group only when all |q| terms matched. The
    * sum groups by (qidx, doc_id): on the pinned layout the stats join's
-   * doc_id exchange already clusters it. `spread` re-hashes the decoded
-   * postings on doc_id into [[wide]] partitions instead, which clusters the
-   * sum just as well (see [[BatchRespreadCutover]]). With `convIds`
+   * doc_id exchange, or the one partition, already clusters it. `spread`
+   * re-hashes the decoded postings on doc_id into [[wide]] partitions
+   * instead, which clusters the sum just as well (see
+   * [[BatchRespreadCutover]]). With `convIds`
    * conv_id rides the stats join and the sum as a key, which suits one
    * query; a batch's fan-out sums each doc once per query, and a string key
    * there cost ~50% more task CPU than resolving the winners afterwards.
@@ -450,12 +457,14 @@ class Searcher(index: IndexView) extends Serializable {
     * path skips the full-parallelism respread (VERDICT r4 #5): the exchange
     * bought the 13-query 3.9× win at 400k convs on 32 cores (5.9M fan-out
     * rows were serializing into the serving cache's ~15 partitions) but
-    * costs more than it saves on a small batch. ≈2M rows ≈ the work of one
-    * serving-sized partition (IndexView.servingPartitions), i.e. respread
-    * once the batch carries more than a couple of tasks' worth of scoring.
-    * It runs only where it widens: 2× the cores above the serving
-    * partition count. */
-  val BatchRespreadCutover: Long = 1L << 21
+    * costs more than it saves on a small batch. It runs only where it
+    * widens: 2× the cores above the serving partition count, which on a
+    * one-partition pin is every core. Measured there (same-JVM A/B, local[4],
+    * Zipf batches; BENCH/BASELINE.md "One-partition serving layout"), the
+    * respread lost below ~250k rows (at 95k, 113k and 250k it was faster in
+    * 4, 2 and 5 of 20 pairs) and won from ~300k (293k: 13/20; 498k: 17/20;
+    * 919k: 19/20; 2.9M: 20/20), so it starts at 2^18 ≈ 262k. */
+  val BatchRespreadCutover: Long = 1L << 18
 
   /**
    * Batch serving: score MANY queries in ONE Spark job — the offline
@@ -493,9 +502,9 @@ class Searcher(index: IndexView) extends Serializable {
     val cutover = if (exactCutover >= 0L) exactCutover else BatchExactCutover
     val blocks = (if (scorer == Bm25 && fanout > cutover) prune(live, k) else None)
       .getOrElse(AllBlocks)
-    // the serving layout deliberately keeps FEW partitions (single-query
-    // fixed cost ~ tasks/stage), but a LARGE batch's fan-out work is
-    // throughput-bound: spread it over the full parallelism
+    // the serving layout deliberately keeps FEW partitions, one under ~4M
+    // postings (single-query fixed cost ~ tasks/stage), but a LARGE batch's
+    // fan-out work is throughput-bound: spread it over the full parallelism
     val spread = fanout >= BatchRespreadCutover &&
       wide > session.sessionState.conf.numShufflePartitions
     // queries ride through the big aggregation as a dense INT index, not

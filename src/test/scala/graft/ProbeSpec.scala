@@ -84,8 +84,8 @@ class ProbeSpec extends SparkSpec {
 
   test("latency prints percentiles, the batch prune diagnostics and the client speedup") {
     val out = printed(Probe.latency(_, 60))
-    Seq("[latency] batch-diag sum_df=", "exact p50=", "wand p50=", "and p50=", "batch13 sec=",
-      "[latency] concurrency clients=4").foreach(s => assert(out.contains(s), s))
+    Seq("[latency] batch-diag sum_df=", "exact p50=", "wand p50=", "and p50=", "stages/q=", "tasks/q=",
+      "batch13 sec=", "[latency] concurrency clients=4").foreach(s => assert(out.contains(s), s))
   }
 
   test("append prints append vs rebuild in both maintenance modes") {

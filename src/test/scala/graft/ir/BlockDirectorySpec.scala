@@ -20,13 +20,11 @@ class BlockDirectorySpec extends SparkSpec {
       val (d, p) = (new Searcher(view), new Searcher(plans))
       val dict = view.termDict.collect()
       val idf = dict.map(t => t.term_id -> t.bm25_idf).toMap
+      // all ~2,000 terms in one `term_id IN` list (TermListSpec)
       val termIds = dict.map(_.term_id).toSeq.sorted
-      // the plans take 100 terms at a time: on a pinned view, a `term_id IN`
-      // list of all ~2,000 terms overflows the stack while it is planned
-      val chunks = termIds.grouped(100).toSeq
 
       val gmax = d.termGmax(idf)
-      val want = chunks.map(ts => p.termGmax(idf.view.filterKeys(ts.toSet).toMap)).reduce(_ ++ _)
+      val want = p.termGmax(idf)
       assert(gmax.keySet == termIds.toSet && want.keySet == gmax.keySet, "gmax terms")
       termIds.foreach(t => assert(gmax(t) == want(t), s"term $t: gmax ${gmax(t)}, plan ${want(t)}"))
       // the check discriminates: pairing each term's largest max_tf with its
@@ -49,7 +47,7 @@ class BlockDirectorySpec extends SparkSpec {
       }
       for (k <- Seq(1, 3, 10)) {
         val got = d.topBlockIntervals(termIds, k)
-        val plan = chunks.map(p.topBlockIntervals(_, k)).reduce(_ ++ _)
+        val plan = p.topBlockIntervals(termIds, k)
         termIds.foreach(t => assert(got(t).toSeq == plan(t).toSeq, s"k=$k term $t: θ intervals"))
       }
     } finally { view.unpin(); () }

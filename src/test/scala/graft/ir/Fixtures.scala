@@ -55,6 +55,16 @@ object Fixtures {
     }.toDF()
   }
 
+  /** `view` pinned into `parts` partitions: `pin()` lays the tables out in
+    * its session's shuffle partition count, which is `parts` for the call
+    * and restored after. */
+  def pinAt(view: IndexView, parts: Int): IndexView = {
+    val conf = view.postings.sparkSession.conf
+    val prev = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try view.pin() finally conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** Deterministic synthetic transcript table (FIXTURES.md §4) — delegates
     * to the main-source generator so Bench uses the identical corpus. */
   def synthTurns(spark: SparkSession, nConvs: Int, seed: Long = 42L): DataFrame =

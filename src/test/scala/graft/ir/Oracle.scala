@@ -35,7 +35,7 @@ object Oracle {
 
     /** postings exactly as the engine should decode them:
       * term → docId-ascending (docId, tf). */
-    def postings: Map[String, Vector[(Long, Int)]] =
+    lazy val postings: Map[String, Vector[(Long, Int)]] =
       df.keys.map { t =>
         t -> tfs.zipWithIndex.collect {
           case (m, d) if m.contains(t) => (d.toLong, m(t))

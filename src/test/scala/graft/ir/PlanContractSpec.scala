@@ -199,6 +199,32 @@ class PlanContractSpec extends SparkSpec {
     assertStatsStay(plan, "batch")
   }
 
+  test("servingPartitions: one partition per ~2M postings, at least 1, at most the shuffle partitions") {
+    val meta = IndexMeta(docs = 1L, terms = 1L, total_tokens = 1L, avgdl = 1.0, postings = 0L, blocks = 1L)
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "6")
+    def parts(postings: Long) = IndexView.servingPartitions(meta.copy(postings = postings), s)
+    assert(Seq(0L, 1L, 1999999L).map(parts) == Seq(1, 1, 1))
+    assert((1 to 8).map(k => parts(k * 2000000L)) == Seq(1, 2, 3, 4, 5, 6, 6, 6))
+  }
+
+  test("one-partition pin: a warm single query of every class runs 1 job, 1 stage, 1 task, no exchange") {
+    val one = Fixtures.pinAt(IndexBuilder.build(spark, Fixtures.synthTurns(spark, 150)), 1)
+    try {
+      assert(one.postings.rdd.getNumPartitions == 1 && one.docStats.rdd.getNumPartitions == 1)
+      for ((name, run) <- singles(new Searcher(one))) {
+        run(terms(0, 3)).collect() // the class's plan is built here
+        val df = run(terms(1, 4, 6))
+        val (_, _, js) = Probe.profile(spark)(df.collect())
+        val t = Probe.total(js)
+        assert((js.length, t.stages, t.tasks) == (1, 1L, 1L), s"$name: $js")
+        val plan = df.queryExecution.executedPlan
+        assert(shuffles(plan).isEmpty, s"$name exchanges:\n$plan")
+        assertStatsStay(plan, name)
+      }
+    } finally { one.unpin(); () }
+  }
+
   test("stats join under AQE: doc_stats stays put from a fresh pin's first query") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     // a fresh view, queried at once: no count() or earlier query fills its caches

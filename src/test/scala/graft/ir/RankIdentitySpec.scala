@@ -108,12 +108,12 @@ class RankIdentitySpec extends SparkSpec {
   }
 
   test("a batch above BatchRespreadCutover respreads its decode and equals the small batch") {
-    val view = IndexBuilder.build(spark, Fixtures.synthTurns(spark, 150))
+    // the respread only runs where it widens, 2× the cores above the
+    // serving partitions: here a one-partition pin, the serving layout of
+    // an index under ~4M postings
+    val view = Fixtures.pinAt(IndexBuilder.build(spark, Fixtures.synthTurns(spark, 150)), 1)
     val s = new Searcher(view)
-    // the respread only runs where it widens: 2× the cores above the
-    // shuffle partitions
-    assert(2 * spark.sparkContext.defaultParallelism >
-      spark.sessionState.conf.numShufflePartitions)
+    assert(2 * spark.sparkContext.defaultParallelism > view.postings.rdd.getNumPartitions)
     val texts = Seq("pais libre", "pais pais tecnologia", "estado libre tecnologia")
     val fanout = texts.map(t => s.queryTerms(spark, t).map(_.df).sum).sum
     val reps = (s.BatchRespreadCutover / fanout + 1).toInt
@@ -139,6 +139,32 @@ class RankIdentitySpec extends SparkSpec {
         }
       }
     }
+  }
+
+  test("a view pinned at 1 partition serves every class and a batch bit for bit as at 4") {
+    val built = IndexBuilder.build(spark, Fixtures.synthTurns(spark, 200), BuildConfig(saltRange = 64))
+    val views = Seq(1, 4).map(Fixtures.pinAt(built, _))
+    try {
+      assert(views.map(_.postings.rdd.getNumPartitions) == Seq(1, 4))
+      // every row as strings, doubles by their bits
+      def bits(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().toSeq.map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d).toString
+        case v => String.valueOf(v)
+      }.mkString(","))
+      val qs = Fixtures.referenceQueries.distinct.zipWithIndex.map { case (q, i) => s"q$i" -> q }
+      val Seq(one, four) = views.map { v =>
+        val s = new Searcher(v)
+        qs.flatMap { case (_, q) => Seq(
+          bits(s.search(spark, q, K, Or, Bm25)), bits(s.search(spark, q, K, Or, TfIdfCosine)),
+          bits(s.search(spark, q, K, And, Bm25)), bits(s.search(spark, q, K, And, TfIdfCosine)),
+          bits(s.searchBm25Wand(spark, q, K)), bits(s.searchBm25Wand(spark, q, K, exactCutover = 0L)))
+        } ++ Seq[(Scorer, Long)]((Bm25, -1L), (Bm25, 0L), (TfIdfCosine, -1L)).map { case (scorer, cut) =>
+          bits(s.searchBatch(spark, qs, K, scorer, cut).orderBy("query_id", "rank"))
+        }
+      }
+      assert(one.exists(_.nonEmpty))
+      one.zip(four).zipWithIndex.foreach { case ((a, b), i) => assert(a == b, s"request $i") }
+    } finally { views.foreach(_.unpin()) }
   }
 
   test("query term with df == N (idf = 0) contributes zero, never NaN") {
